@@ -46,7 +46,7 @@ def main() -> None:
         ]
     )
     enrich = PipEnricher(
-        edges, {"_in_road": list(ROAD_TYPES), "_in_building": ["pand"]}
+        None, {"_in_road": list(ROAD_TYPES), "_in_building": ["pand"]}
     )
     def label_plan(src):
         labelled = pipe.run_fused(enrich(RasterEnricher(raster_df(spark))(src)))

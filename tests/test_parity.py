@@ -19,16 +19,16 @@ def test_oracle_parity(spark, sf_dir, name):
 
 
 def test_pip_enricher_strategies_agree(spark, sf_dir):
-    """pandas / expr / join strategies must produce identical flags
-    (the join path was previously unexercised; expr is capped to small
-    layers, so compare on the roads subset which is 3 polygons)."""
+    """PipEnricher's map-only Arrow kernel must give the same flags as
+    the Catalyst edge join (pip_flag) on the fixture, for a road flag
+    and a building flag computed in one pass."""
     from pyspark.sql import functions as F
 
+    from urban_pointcloud_processing_spark.functions.pip import pip_flag
     from urban_pointcloud_processing_spark.operators.fusers import PipEnricher
     from urban_pointcloud_processing_spark.sources.layers import (
         ROAD_TYPES,
         polygon_edges_df,
-        polygon_layer,
     )
     from urban_pointcloud_processing_spark.sources.pages import (
         pages_from_orders,
@@ -38,18 +38,15 @@ def test_pip_enricher_strategies_agree(spark, sf_dir):
         2000
     ).localCheckpoint(eager=True)
     edges = polygon_edges_df(spark)
-    flag_types = {"_in_road": list(ROAD_TYPES)}
-    road_polys = [p for p in polygon_layer() if p["layer"] == "roads"]
-
-    def flags(strategy, **kw):
-        out = PipEnricher(edges, flag_types, strategy=strategy, **kw)(pages)
-        return {
-            r["page_id"]: r["_in_road"]
-            for r in out.select("page_id", "_in_road").collect()
+    flag_types = {"_in_road": list(ROAD_TYPES), "_in_building": ["pand"]}
+    enriched = PipEnricher(None, flag_types)(pages)
+    for flag, types in flag_types.items():
+        kernel = {
+            r["page_id"]: r[flag]
+            for r in enriched.select("page_id", flag).collect()
         }
-
-    pandas_f = flags("pandas", polys=road_polys)
-    expr_f = flags("expr", polys=road_polys)
-    join_f = flags("join")
-    assert pandas_f == expr_f == join_f
-    assert any(pandas_f.values()) and not all(pandas_f.values())
+        joined = pip_flag(pages, edges.filter(F.col("bgt_type").isin(*types)), flag)
+        assert kernel == {
+            r["page_id"]: r[flag] for r in joined.select("page_id", flag).collect()
+        }, flag
+        assert any(kernel.values()) and not all(kernel.values()), flag

@@ -26,42 +26,17 @@ def test_rotation_orders_never_certified_first_and_aligns():
     names = list(qs)
     assert names == list(oracles)
     cert = Q._certified_rounds()
-    latest = Q._latest_artifact_round()
 
     def rank(n):
-        c = cert.get(n, -1)
-        if c < 0 and latest < Q._DEFER_UNTIL_ROUND.get(n, -1):
-            return 10**6          # deferred newcomer sorts last
-        return c
+        return cert.get(n, -1)
 
     ranks = [rank(n) for n in names]
     # non-decreasing certification round along the emission order
     assert ranks == sorted(ranks)
-    # the acceptance artifact leads while it lacks a driver row
-    if cert.get("pipeline_full", -1) == -1:
-        assert names[0] == "pipeline_full"
-
-
-def test_deferred_newcomers_sort_last_until_their_round_lands(tmp_path):
-    """A query in _DEFER_UNTIL_ROUND must not evict stale queries from
-    the 50-slot driver window of the round it was added in: it sorts
-    LAST until a CORRECTNESS artifact of its round exists, then
-    expires into the normal never-certified-first order."""
-    assert "url_domains" in Q._DEFER_UNTIL_ROUND  # round-5 newcomer
-    art = {"old_q": {"rows_match": True, "schema_match": True,
-                     "hash_match": True, "err": None}}
-    (tmp_path / "CORRECTNESS_r04.json").write_text(json.dumps(art))
-    d = {"old_q": 1, "url_domains": 2, "never_cert": 3}
-
-    names = list(Q._rotated(d, root=str(tmp_path)))
-    # never_cert (not deferred) first, certified next, deferred last
-    assert names == ["never_cert", "old_q", "url_domains"]
-
-    # the round-5 artifact lands → the deferral expires on its own
-    (tmp_path / "CORRECTNESS_r05.json").write_text(json.dumps(art))
-    names = list(Q._rotated(d, root=str(tmp_path)))
-    assert names[-1] != "url_domains"
-    assert set(names[:2]) == {"url_domains", "never_cert"}
+    # ties keep registration order
+    registered = {n: i for i, n in enumerate(Q.QUERIES)}
+    keys = [(rank(n), registered[n]) for n in names]
+    assert keys == sorted(keys)
 
 
 def test_certified_rounds_ignores_failed_and_partial_rows(tmp_path):

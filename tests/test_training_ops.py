@@ -263,3 +263,27 @@ def test_span_dedup_df_cap_parity_and_effect(spark):
         "df_cap=2 should drop some hot grams on the fixture "
         f"(uncapped={uncapped}, capped={capped})"
     )
+
+
+def test_java_tokens_matches_spark_trim_and_split(spark):
+    """_java_tokens (the Python-side tokenizer of the shingle kernels)
+    must split exactly like F.split(F.trim(text), r"\\s+"): Spark's trim
+    strips only spaces, so leading/trailing tabs and newlines leave an
+    empty first/last token."""
+    from urban_pointcloud_processing_spark.operators.dedup import _java_tokens
+
+    texts = [
+        "one two three four\n", "\tlead tab one two", "  spaced  out  ",
+        " \ttab after space", "trail tab\t", "\n", "\t \n", " ", "",
+        "a\r\nb", "x\x0by\x0cz", None,
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, text string")
+    got = {
+        r["i"]: r["toks"]
+        for r in df.select(
+            "i", F.split(F.trim("text"), r"\s+").alias("toks")
+        ).collect()
+    }
+    for i, t in enumerate(texts):
+        assert _java_tokens(t) == got[i], repr(t)

@@ -311,16 +311,6 @@ def shingles_from_tokens_expr(toks: Column, n: int = 3) -> Column:
     )
 
 
-def shingles_expr(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles straight from a TEXT column.
-    Convenience form for ad-hoc use on SHORT documents — it inlines
-    the tokenizer into the gram lambda, which re-tokenizes per gram
-    element (quadratic in document length). Pipelines must bind the
-    token array first and use ``shingles_from_tokens_expr`` (see
-    ``operators.dedup.shingle_table``)."""
-    return shingles_from_tokens_expr(tokens_expr(col), n)
-
-
 def shingles_from_tokens_sql(tok_col: str, n: int = 3) -> str:
     """Shingle list from an ALREADY-MATERIALIZED token-list column
     (DuckDB lambdas may reference outer columns but not subqueries, so

@@ -7,8 +7,6 @@ size, then a size filter (:92-97), then a seed-fraction region fill
 component (SURVEY.md §7.3 item 2 — reference ids are octree-order-
 dependent, so tests compare partitions, not raw ids).
 
-Two implementations:
-
 - ``grid_components``: iterative min-label propagation + pointer
   jumping over the cell adjacency graph, pure DataFrame ops, with
   localCheckpoint every round (the north-rule "iterative connected-
@@ -16,11 +14,9 @@ Two implementations:
   frontiers"). Converges in O(log d) rounds; works across tile
   boundaries — the 10^12-row scale path.
 
-- ``grid_components_per_tile``: applyInPandas per tilecode — exact
-  reference semantics (reference CC is strictly per-tile;
-  pipeline.py:186-194 processes one tile at a time). Grid cells per
-  50 m tile are bounded ((50/g)^2 ≤ 1M at g=0.05), so the grouped-map
-  is memory-safe regardless of total data size.
+- ``grid_components_two_level``: the same output from one per-block
+  applyInPandas union-find plus a driver-side merge of the border
+  cells' roots — no iteration.
 
 Both snap points to cells with floor(x/g) and use 8-neighborhood
 adjacency in 2-D (the z-collapsed analog of the reference's
@@ -116,53 +112,6 @@ def grid_components(
     cells.unpersist()
     edges.unpersist()
     return out.drop("_cell", "_cx", "_cy")
-
-
-def grid_components_per_tile(
-    points: DataFrame,
-    grid_size: float,
-    point_id: str = "page_id",
-    tile_col: str = "tilecode",
-    out_col: str = "component",
-) -> DataFrame:
-    """Per-tile CC via grouped-map union-find (reference per-tile
-    semantics). Output schema = input + component (min cell key)."""
-    pts = _with_cells(points, grid_size).drop("_cell")
-    out_schema = points.schema.add(out_col, "long")
-
-    def cc(pdf: pd.DataFrame) -> pd.DataFrame:
-        cells = pdf[["_cx", "_cy"]].drop_duplicates()
-        keys = (cells["_cx"].to_numpy() * PAIR + cells["_cy"].to_numpy())
-        parent = {int(k): int(k) for k in keys}
-
-        def find(a: int) -> int:
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
-        occupied = set(parent)
-        for k in list(parent):
-            cx, cy = k // PAIR, k % PAIR
-            for dx in (-1, 0, 1):
-                for dy in (-1, 0, 1):
-                    nb = (cx + dx) * PAIR + (cy + dy)
-                    if nb in occupied:
-                        ra, rb = find(k), find(nb)
-                        if ra != rb:
-                            if ra < rb:
-                                parent[rb] = ra
-                            else:
-                                parent[ra] = rb
-        comp = {k: find(k) for k in parent}
-        out = pdf.drop(columns=["_cx", "_cy"]).copy()
-        out[out_col] = [
-            comp[int(cx) * PAIR + int(cy)]
-            for cx, cy in zip(pdf["_cx"], pdf["_cy"])
-        ]
-        return out
-
-    return pts.groupBy(tile_col).applyInPandas(cc, schema=out_schema)
 
 
 def grid_components_two_level(

@@ -105,22 +105,17 @@ FROM documents GROUP BY text
 # Shingle table — shared by Jaccard + MinHash
 # ----------------------------------------------------------------------
 
-_JAVA_TRIM = "".join(chr(i) for i in range(0x21))
-
-
 def _java_tokens(s: str | None) -> list[str] | None:
     """Python mirror of ``tokens_expr`` = F.split(F.trim(text), r"\\s+"):
-    Java trim strips chars ≤ U+0020 from both ends; Java regex \\s is
-    the ASCII class [ \\t\\n\\x0B\\f\\r] (NOT Python's unicode \\s); an
-    empty trimmed string splits to the single empty token."""
+    Spark's trim strips only spaces (U+0020) from both ends, so a
+    leading tab or a trailing newline survives it and splits to an
+    empty first or last token; Java regex \\s is the ASCII class
+    [ \\t\\n\\x0B\\f\\r] (NOT Python's unicode \\s)."""
     if s is None:
         return None
-    t = s.strip(_JAVA_TRIM)
-    if not t:
-        return [""]
     import re
 
-    return re.split(r"[ \t\n\x0b\f\r]+", t)
+    return re.split(r"[ \t\n\x0b\f\r]+", s.strip(" "))
 
 
 def shingle_sids_udf(n: int = 3):

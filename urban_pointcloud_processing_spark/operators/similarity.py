@@ -36,17 +36,9 @@ HP_MOD = 1009
 HP_SHIFT = HP_MOD // 2
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def dot_udf():
-    """Arrow pandas UDF computing the SAME left-to-right fold as
-    ``dot_expr`` / the oracle's list_reduce: a sequential loop over the
+    """Arrow pandas UDF computing the SAME left-to-right fold as the
+    oracle's list_reduce (``dot_sql``): a sequential loop over the
     dimension index with each step vectorized across the batch — the
     accumulation order per row is identical, so results stay
     bit-identical while running ~50x faster than the interpreted
@@ -74,10 +66,6 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(dot_expr(a, a))
-
-
 def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
@@ -101,7 +89,7 @@ def _cosine(pref_a: str, pref_b: str) -> Column:
 def _seq_dot_matrix(Q, V):
     """(nq, nv) dot-product matrix accumulated in DIMENSION ORDER —
     per-pair float accumulation identical to the oracle's
-    list_reduce fold (and to dot_expr)."""
+    list_reduce fold (and to dot_udf)."""
     import numpy as np
 
     acc = np.zeros((Q.shape[0], V.shape[0]), dtype=np.float64)
@@ -783,44 +771,12 @@ SELECT query_id, vec_id, cosine, rank FROM (
 # Hyperplane LSH — the ANN scale path
 # ----------------------------------------------------------------------
 
-def _hp_weight_spark(b: int, i: Column) -> Column:
-    # i is the 0-based element index; weights use (i+1) so the SQL side
-    # (1-based list index) computes the identical value. All-long math:
-    # HP_A ~ 1e9 would overflow int32 under ANSI mode.
-    a = F.lit(HP_A[b]).cast("long")
-    c = F.lit(HP_B[b]).cast("long")
-    return ((a * (i.cast("long") + F.lit(1).cast("long")) + c) % F.lit(HP_MOD).cast("long")
-            - F.lit(HP_SHIFT).cast("long")).cast("double")
-
-
-def hp_signature_expr(emb: Column) -> Column:
-    """16-bit hyperplane sign signature as a long."""
-    def _proj_term(b: int):
-        def term(x: Column, i: Column) -> Column:
-            return x.cast("double") * _hp_weight_spark(b, i)
-
-        return term
-
-    sig = F.lit(0).cast("long")
-    for b in range(HP_BITS):
-        proj = F.aggregate(
-            F.zip_with(
-                emb,
-                F.sequence(F.lit(0), F.size(emb) - F.lit(1)),
-                _proj_term(b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(proj > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return sig
-
-
 def hp_signature_udf():
-    """Vectorized twin of ``hp_signature_expr``: per bit, the projection
-    folds over the dimension index sequentially (each step vectorized
-    across the Arrow batch) with the SAME integer weights — signatures
-    are bit-identical to the Column/SQL versions."""
+    """16-bit hyperplane sign signature as a long. Per bit, the
+    projection folds over the dimension index sequentially (each step
+    vectorized across the Arrow batch) with integer weights
+    ((HP_A*(i+1) + HP_B) mod HP_MOD − HP_SHIFT, i 0-based) — signatures
+    are bit-identical to the oracle SQL."""
     import numpy as np
     from pyspark.sql.types import LongType
 

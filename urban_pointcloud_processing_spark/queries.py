@@ -351,9 +351,9 @@ def _pipeline_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = polygon_edges_df(spark)
     pages = RasterEnricher(R.raster_df(spark))(pages_from_orders(spark, sf_dir))
-    # one candidate pass computes both PIP flags (roads + buildings)
+    # one Arrow pass computes both PIP flags (roads + buildings)
     pages = PipEnricher(
-        edges,
+        None,
         {"_in_road": list(ROAD_TYPES), "_in_building": ["pand"]},
     )(pages)
     pipe = Pipeline(
@@ -5620,62 +5620,10 @@ def q_pipeline_full_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # show them fully green (never-certified first), so each round the
 # 50-slot window automatically covers the queries whose official
 # record is most stale — over two consecutive rounds every query gets
-# a fresh driver row.  Ties (same last-green round) break by the
-# hand-priority list below (the acceptance artifact pipeline_full and
-# the other round-3 judge-verified-but-never-driver-certified queries
-# lead), then registration order.  Deterministic within a round: the
-# artifacts are committed files.
+# a fresh driver row.  Ties (same last-green round) keep registration
+# order.  Deterministic within a round: the artifacts are committed
+# files.
 # ----------------------------------------------------------------------
-
-_PRIORITY_R04 = [
-    "pipeline_full",
-    "pipeline_full_hist",
-    "car_fuser",
-    "car_fuser_mbr",
-    "cluster_alpha_shape",
-    "cluster_stats",
-    "cluster_morphology",
-    "cluster_mbr",
-    "cluster_dim_fuser",
-    "gap_fill",
-    "gap_fill_linear",
-    "gap_fill_cubic",
-    "smoothen_edges",
-    "pole_fuser",
-    "region_growing",
-    "layer_grower",
-    "street_furniture_fuser",
-    "cable_candidates",
-    "cable_line_fit",
-    "tram_classify",
-    "cable_fuser_labels",
-    "geocode_wgs84",
-    "h3_cells",
-    "raster_build",
-    "pole_candidates",
-    "pca_linearity",
-    "tumbling_window",
-    "stencil_lag_lead",
-    "media_features",
-]
-
-
-def _artifact_paths(root: str | None = None) -> list[tuple[int, str]]:
-    """(round, path) for every committed CORRECTNESS_r*.json — the ONE
-    place artifact naming/location is known (certification ordering
-    and deferral expiry must never disagree on discovery)."""
-    import glob
-    import os
-    import re
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = []
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if m:
-            out.append((int(m.group(1)), path))
-    return out
 
 
 def _certified_rounds(root: str | None = None) -> dict[str, int]:
@@ -5683,10 +5631,19 @@ def _certified_rounds(root: str | None = None) -> dict[str, int]:
     records it fully green (rows+schema match, no error, and hash
     match when a value-hash was taken). ``root`` overrides the repo
     root (tests)."""
+    import glob
     import json
+    import os
+    import re
 
+    if root is None:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out: dict[str, int] = {}
-    for rnd, path in _artifact_paths(root):
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
         try:
             with open(path) as fh:
                 data = json.load(fh)
@@ -5707,49 +5664,11 @@ def _certified_rounds(root: str | None = None) -> dict[str, int]:
     return out
 
 
-# Queries added AFTER round 5's 50-slot driver window was already
-# exactly full (13 never-certified + 37 stale-r03 — VERDICT r04 item
-# 2: adding more would evict stale queries from certification). They
-# sort LAST until any CORRECTNESS_r<round>.json with round ≥ the
-# mapped value is committed, then expire into the normal
-# never-certified-first ordering — self-maintaining, no manual edit
-# next round (tested in tests/test_registry_rotation.py).
-_DEFER_UNTIL_ROUND = {
-    "url_domains": 5,
-    "sliding_window": 5,
-    "bloom_decontaminate": 5,
-    "cms_heavy_hitters": 5,
-    "domain_pagerank": 5,
-    "funnel_steps": 5,
-}
-
-
-def _latest_artifact_round(root: str | None = None) -> int:
-    """Highest round number among committed CORRECTNESS_r*.json files
-    (-1 if none)."""
-    return max((rnd for rnd, _ in _artifact_paths(root)), default=-1)
-
-
 def _rotated(d: dict, root: str | None = None) -> dict:
     cert = _certified_rounds(root)
-    latest = _latest_artifact_round(root)
-    prio = {n: i for i, n in enumerate(_PRIORITY_R04)}
-
-    def _cert_key(n: str) -> int:
-        c = cert.get(n, -1)
-        if c < 0 and latest < _DEFER_UNTIL_ROUND.get(n, -1):
-            return 10**6                  # deferred newcomer: sort last
-        return c
-
-    names = sorted(
-        d,
-        key=lambda n, _idx={n: i for i, n in enumerate(d)}: (
-            _cert_key(n),                 # stalest official record first
-            prio.get(n, len(prio)),       # hand priority within a tie
-            _idx[n],                      # then registration order
-        ),
-    )
-    return {n: d[n] for n in names}
+    # stalest official record first; the sort is stable, so ties keep
+    # registration order
+    return {n: d[n] for n in sorted(d, key=lambda n: cert.get(n, -1))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

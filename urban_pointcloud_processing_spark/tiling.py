@@ -34,15 +34,6 @@ def tilecode(x: Column, y: Column, tile_size: float = TILE_SIZE) -> Column:
     return F.concat_ws("_", tile_x(x, tile_size), tile_y(y, tile_size))
 
 
-def tile_bbox(code: Column, tile_size: float = TILE_SIZE) -> list[Column]:
-    """Inverse: tilecode → (x_min, y_max, x_max, y_min), reference
-    las_utils.py:24-42 convention ((x_min, y_max) top-left first)."""
-    tx = F.split(code, "_").getItem(0).cast("long")
-    ty = F.split(code, "_").getItem(1).cast("long")
-    ts = F.lit(tile_size)
-    return [tx * ts, (ty + 1) * ts, (tx + 1) * ts, ty * ts]
-
-
 def cell_x(x: Column, res: float) -> Column:
     return F.floor(x / F.lit(res))
 

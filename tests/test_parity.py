@@ -19,9 +19,10 @@ def test_oracle_parity(spark, sf_dir, name):
 
 
 def test_pip_enricher_strategies_agree(spark, sf_dir):
-    """PipEnricher's map-only Arrow kernel must give the same flags as
-    the Catalyst edge join (pip_flag) on the fixture, for a road flag
-    and a building flag computed in one pass."""
+    """PipEnricher's cell-index kernel (broadcast cell join plus exact
+    edge-cell refine) must give the same flags as the Catalyst edge
+    join (pip_flag) on the fixture, for a road flag and a building flag
+    computed in one pass."""
     from pyspark.sql import functions as F
 
     from urban_pointcloud_processing_spark.functions.pip import pip_flag

@@ -8,9 +8,14 @@ fix binds the token array in its own projection; these tests pin the
 optimized plans so the quadratic pattern cannot be reintroduced: the
 tokenizer split must appear a small constant number of times (once
 per plan branch), never once per F.get reference.
+
+The flagship gate keeps the Python boundary out of the label_histogram
+plan, so it cannot come back unnoticed.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -56,3 +61,39 @@ def test_repetition_query_tokenizes_once(spark):
     # n_grams/ndist/dup_frac all reference the one bound token column;
     # token_count_expr contributes the only other split reference
     assert n <= 2, f"repetition plan evaluates split() {n}×, want ≤2"
+
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas")
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _shuffles(plan: str) -> int:
+    return len(re.findall(r"(?<!Broadcast)Exchange ", plan))
+
+
+def test_flagship_stays_in_the_jvm(spark):
+    """The label_histogram flagship crosses no Python boundary, and its
+    PIP flags add no shuffle: exactly one more broadcast hash join."""
+    from urban_pointcloud_processing_spark.operators.fusers import (
+        PipEnricher,
+        RasterEnricher,
+    )
+    from urban_pointcloud_processing_spark.queries import QUERIES
+    from urban_pointcloud_processing_spark.sources.layers import ROAD_TYPES
+    from urban_pointcloud_processing_spark.sources.pages import pages_from_orders
+    from urban_pointcloud_processing_spark.sources.raster import raster_df
+
+    plan = _physical(QUERIES["label_histogram"](spark, SF))
+    for node in _PYTHON_NODES:
+        assert node not in plan, plan
+
+    enriched = RasterEnricher(raster_df(spark))(pages_from_orders(spark, SF))
+    flagged = PipEnricher(
+        None, {"_in_road": list(ROAD_TYPES), "_in_building": ["pand"]}
+    )(enriched)
+    before, after = _physical(enriched), _physical(flagged)
+    assert _shuffles(after) == _shuffles(before), after
+    assert after.count("BroadcastHashJoin") == before.count("BroadcastHashJoin") + 1

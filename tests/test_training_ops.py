@@ -287,3 +287,35 @@ def test_java_tokens_matches_spark_trim_and_split(spark):
     }
     for i, t in enumerate(texts):
         assert _java_tokens(t) == got[i], repr(t)
+
+
+def test_tokens_split_alike_in_spark_and_duckdb(spark):
+    """tokens_expr (Java regex) and tokens_sql (DuckDB's RE2) split on
+    the same whitespace class: RE2's \\s leaves out U+000B (vertical
+    tab), which Java's \\s includes."""
+    import duckdb
+    import pyarrow as pa
+
+    from urban_pointcloud_processing_spark.functions.text import (
+        token_count_expr,
+        token_count_sql,
+        tokens_expr,
+        tokens_sql,
+    )
+
+    texts = ["a\x0bb", "x \x0b y", "\x0blead", "trail\x0b", "a\tb\nc\x0cd\re",
+             " two  words ", "\x0b", "", None]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, text string")
+    got = [
+        tuple(r) for r in df.select(
+            "i", tokens_expr(F.col("text")), token_count_expr(F.col("text"))
+        ).orderBy("i").collect()
+    ]
+    docs = pa.table({"i": list(range(len(texts))), "text": texts})  # noqa: F841
+    want = duckdb.sql(
+        f"SELECT i, {tokens_sql('text')}, {token_count_sql('text')} "
+        "FROM docs ORDER BY i"
+    ).fetchall()
+    assert got == want
+    assert got[0][1] == ["a", "b"] and got[0][2] == 2

@@ -135,12 +135,17 @@ def str_hash_sql(expr: str) -> str:
 # Tokenization (whitespace) — the shared token stream
 # ----------------------------------------------------------------------
 
+# Java's \s is this ASCII class, but RE2's (DuckDB) leaves out U+000B,
+# so both engines split on the class spelled out.
+WS_RUN = r"[ \t\n\x0B\f\r]+"
+
+
 def tokens_expr(col: Column) -> Column:
-    return F.split(F.trim(col), r"\s+")
+    return F.split(F.trim(col), WS_RUN)
 
 
 def tokens_sql(expr: str) -> str:
-    return rf"string_split_regex(trim({expr}), '\s+')"
+    return f"string_split_regex(trim({expr}), '{WS_RUN}')"
 
 
 def token_count_expr(col: Column) -> Column:

@@ -18,8 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Knuth/Fibonacci-style multiplicative constants; products stay < 2^63
-# for ids < ~3.5e9 so BIGINT arithmetic is exact in both engines.
+# Knuth/Fibonacci-style multiplicative constants. The id is reduced
+# modulo the span before it is multiplied, so every product stays below
+# 150000 * 3266489917 < 2^49 and BIGINT arithmetic is exact in both
+# engines for every id. Both engines' '%' truncates toward zero, so the
+# reduction leaves (id * A) % S unchanged, negative ids included.
 AX = 2654435761
 AY = 2246822519
 AZ = 3266489917
@@ -31,16 +34,20 @@ Z_SPAN_MM = 12_000
 TILE_SIZE = 50.0  # reference tile edge (datasets/README.md: 50x50 m)
 
 
+def _mix(id_col: Column, a: int, span: int) -> Column:
+    return (id_col % F.lit(span)) * F.lit(a) % F.lit(span)
+
+
 def x_col(id_col: Column) -> Column:
-    return F.lit(X0) + (id_col * F.lit(AX)) % F.lit(SPAN_MM) / F.lit(1000.0)
+    return F.lit(X0) + _mix(id_col, AX, SPAN_MM) / F.lit(1000.0)
 
 
 def y_col(id_col: Column) -> Column:
-    return F.lit(Y0) + (id_col * F.lit(AY)) % F.lit(SPAN_MM) / F.lit(1000.0)
+    return F.lit(Y0) + _mix(id_col, AY, SPAN_MM) / F.lit(1000.0)
 
 
 def z_col(id_col: Column) -> Column:
-    return (id_col * F.lit(AZ)) % F.lit(Z_SPAN_MM) / F.lit(1000.0)
+    return _mix(id_col, AZ, Z_SPAN_MM) / F.lit(1000.0)
 
 
 def geocode(df, id_col: str = "page_id"):
@@ -51,16 +58,20 @@ def geocode(df, id_col: str = "page_id"):
 
 # --- DuckDB oracle SQL fragments (identical arithmetic) ---------------
 
+def _mix_sql(id_expr: str, a: int, span: int) -> str:
+    return f"((({id_expr} % {span}) * {a}) % {span})"
+
+
 def x_sql(id_expr: str) -> str:
-    return f"(119250.0 + (({id_expr} * 2654435761) % 150000) / 1000.0)"
+    return f"({X0} + {_mix_sql(id_expr, AX, SPAN_MM)} / 1000.0)"
 
 
 def y_sql(id_expr: str) -> str:
-    return f"(485050.0 + (({id_expr} * 2246822519) % 150000) / 1000.0)"
+    return f"({Y0} + {_mix_sql(id_expr, AY, SPAN_MM)} / 1000.0)"
 
 
 def z_sql(id_expr: str) -> str:
-    return f"((({id_expr} * 3266489917) % 12000) / 1000.0)"
+    return f"({_mix_sql(id_expr, AZ, Z_SPAN_MM)} / 1000.0)"
 
 
 def pages_cte_sql(table: str, id_expr: str, extra_cols: str = "") -> str:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import (
     HASH_MOD,
+    WS_RUN,
     shingles_from_tokens_expr,
     shingles_from_tokens_sql,
     str_hash_sql,
@@ -106,16 +107,15 @@ FROM documents GROUP BY text
 # ----------------------------------------------------------------------
 
 def _java_tokens(s: str | None) -> list[str] | None:
-    """Python mirror of ``tokens_expr`` = F.split(F.trim(text), r"\\s+"):
+    """Python mirror of ``tokens_expr`` = F.split(F.trim(text), WS_RUN):
     Spark's trim strips only spaces (U+0020) from both ends, so a
     leading tab or a trailing newline survives it and splits to an
-    empty first or last token; Java regex \\s is the ASCII class
-    [ \\t\\n\\x0B\\f\\r] (NOT Python's unicode \\s)."""
+    empty first or last token."""
     if s is None:
         return None
     import re
 
-    return re.split(r"[ \t\n\x0b\f\r]+", s.strip(" "))
+    return re.split(WS_RUN, s.strip(" "))
 
 
 def shingle_sids_udf(n: int = 3):

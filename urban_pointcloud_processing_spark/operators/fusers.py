@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.pip import pip_flag, pip_flags_pandas_udf
+from ..functions.pip import pip_flag, pip_flags
 from ..labels import Labels
 from ..plans.pipeline import Processor
 from ..sources.layers import polygon_layer
@@ -51,10 +51,12 @@ class PipEnricher:
     front — the same compute-once-reuse-everywhere pattern as
     RasterEnricher. Fuser stages then find their flag column present.
 
-    All missing flags come from ONE map-only pass of the Arrow kernel
-    (pip_flags_pandas_udf) over the fixture polygon layer
-    (sources/layers.polygon_layer()): batched NumPy, no shuffle, no
-    join. ``flag_types`` maps flag column → bgt_type values.
+    All missing flags come from the cell-index kernel (pip_flags) over
+    the fixture polygon layer (sources/layers.polygon_layer()): one
+    broadcast hash join against a plan-time cell table, then an exact
+    crossing-number refine for points in cells an edge passes through.
+    JVM only, no shuffle. ``flag_types`` maps flag column → bgt_type
+    values.
 
     ``edges`` is NOT read. It stays in the signature only because the
     benchmark (benchmark/workloads.py) and bench.py construct
@@ -72,14 +74,7 @@ class PipEnricher:
         }
         if not missing:
             return pages
-        flags = pip_flags_pandas_udf(polygon_layer(), missing)(F.col("x"), F.col("y"))
-        return (
-            pages.withColumn("_pipflags", flags)
-            .withColumns(
-                {flag: F.col("_pipflags").getField(flag) for flag in missing}
-            )
-            .drop("_pipflags")
-        )
+        return pip_flags(pages, polygon_layer(), missing)
 
 
 class _PipProcessor(Processor):

@@ -62,58 +62,34 @@ def test_fused_families_match_sequential_chain(spark):
     exact by construction (whole-component claims leave the remaining
     CC partition unchanged); pole fusing detects over the pre-family
     unlabelled set, so this test pins output identity against the
-    strictly sequential reference chain on the fixture."""
+    strictly sequential reference chain on the fixture: the same
+    stages with each family replaced by its per-type steps, the mask
+    recomputed before every one (src/upcp/pipeline.py:88-95), run
+    through the same ``Pipeline.run``."""
     import urban_pointcloud_processing_spark.plans.full_pipeline as fp
+    from urban_pointcloud_processing_spark.plans.pipeline import Pipeline
 
-    lbl = (
-        fp._base(spark, SF_DIR)
-        .withColumn("label", F.lit(0))
-        .localCheckpoint(eager=True)
+    def per_type(prefix, claims, family):
+        return [
+            (f"{prefix}_{btype}", [int(lab)],
+             lambda lbl, b=btype, la=int(lab): fp._fold(
+                 lbl, claims(fp._unl(lbl), b, la)))
+            for _, btype, lab in family
+        ]
+
+    families = {
+        "pole_family": per_type("pole", fp._claims_pole, fp.POLE_STAGES),
+        "furniture_family": per_type(
+            "furniture", fp._claims_furniture, fp.FURN_STAGES),
+    }
+    chain = [s for stage in fp.pipeline_stages()
+             for s in families.get(stage[0], [stage])]
+    assert len(chain) == 15
+
+    base = (
+        fp._base(spark, SF_DIR).withColumn("label", F.lit(0)).localCheckpoint()
     )
-
-    def fold(cur, claims):
-        c = claims.groupBy("page_id").agg(F.min("lbl").alias("_lbl"))
-        return (
-            cur.join(c, "page_id", "left")
-            .withColumn(
-                "label",
-                F.when(
-                    (F.col("label") == 0) & F.col("_lbl").isNotNull(),
-                    F.col("_lbl"),
-                ).otherwise(F.col("label")),
-            )
-            .drop("_lbl")
-            .localCheckpoint(eager=True)
-        )
-
-    def unl(cur):
-        return cur.filter(F.col("label") == 0)
-
-    lbl = fold(lbl, fp._claims_ground_refine(unl(lbl)))
-    lbl = lbl.withColumn(
-        "label",
-        F.when(
-            (F.col("label") == int(Labels.GROUND)) & F.col("in_road"),
-            F.lit(int(Labels.ROAD)),
-        ).otherwise(F.col("label")),
-    )
-    lbl = fold(lbl, fp._claims_noise(unl(lbl)))
-    lbl = lbl.withColumn(
-        "label",
-        F.when(
-            (F.col("label") == 0) & F.col("in_building")
-            & (F.col("bz").isNull() | (F.col("z") <= F.col("bz") + fp.BUILD_EPS)),
-            F.lit(int(Labels.BUILDING)),
-        ).otherwise(F.col("label")),
-    )
-    lbl = fold(lbl, fp._claims_cable(unl(lbl)))
-    lbl = fold(lbl, fp._claims_car(unl(lbl)))
-    for _, bgt_type, lab in fp.POLE_STAGES:      # strictly sequential
-        lbl = fold(lbl, fp._claims_pole(unl(lbl), bgt_type, lab))
-    for _, bgt_type, lab in fp.FURN_STAGES:
-        lbl = fold(lbl, fp._claims_furniture(unl(lbl), bgt_type, lab))
-    for _, lab in fp.GROWER_STAGES:
-        lbl = fold(lbl, fp._claims_grower(lbl, lab))
+    lbl = Pipeline([fp.StageProcessor(*s) for s in chain]).run(base)
     seq = {r["page_id"]: r["label"]
            for r in lbl.select("page_id", "label").collect()}
 
@@ -180,27 +156,3 @@ def test_pipeline_kill_and_resume_from_stage_k(spark):
         assert lin.filter(F.col("stage_name") == "ground_refine").count() > 1
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_sequential_switch_matches_fused_on_fixture(spark):
-    """pipeline_stages(fused=False) — the reference-exact sequential
-    switch (ADVICE r04) — must produce the same labels as the fused
-    fast path on the fixture, running through the same runner fold."""
-    import urban_pointcloud_processing_spark.plans.full_pipeline as fp
-
-    names = [n for n, _, _ in fp.pipeline_stages(fused=False)]
-    assert "pole_boom" in names and "furniture_bank" in names
-    assert "pole_family" not in names
-
-    lbl = (
-        fp._base(spark, SF_DIR)
-        .withColumn("label", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    for _, _, step in fp.pipeline_stages(fused=False):
-        lbl = step(lbl).localCheckpoint(eager=True)
-    seq = {r["page_id"]: r["label"]
-           for r in lbl.select("page_id", "label").collect()}
-    fused = {r["page_id"]: r["label"]
-             for r in full_pipeline_labels(spark, SF_DIR).collect()}
-    assert fused == seq

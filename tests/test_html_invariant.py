@@ -39,3 +39,40 @@ def test_html_entities_and_whitespace(spark):
     assert got[0] == "a & b c <d>"
     assert got[1] == "x y"
     assert got[2] == "&lt;"
+
+
+def test_html_whitespace_alike_in_spark_and_duckdb(spark):
+    """The UDF (Python re, str.strip) and the oracle (RE2, DuckDB trim)
+    collapse and strip the same characters. RE2's \\s leaves out
+    U+000B; Python's \\s and str.strip() also match U+00A0, U+0085,
+    U+2028, U+3000 and U+001C."""
+    import duckdb
+    import pyarrow as pa
+
+    from urban_pointcloud_processing_spark.functions.html import (
+        extract_text_sql,
+    )
+
+    odd = ["\x0b", "\xa0", "\u2028", "\x85", "\x1c", "\u3000"]
+    texts = (
+        [f"a{c}b" for c in odd]
+        + [f"{c}x{c}" for c in odd]
+        + [f"<p>{c}</p> y <b>{c}</b>" for c in odd]
+        + ["  a \t\n\x0c\r b  ", "&amp;\x0b&lt;", "", " "]
+    )
+    df = spark.createDataFrame(
+        [(i, t.encode("utf-8")) for i, t in enumerate(texts)],
+        "i int, html binary",
+    )
+    got = [
+        tuple(r) for r in df.select(
+            "i", extract_text_col(F.col("html"))
+        ).orderBy("i").collect()
+    ]
+    docs = pa.table({"i": list(range(len(texts))), "html": texts})  # noqa: F841
+    want = duckdb.sql(
+        f"SELECT i, {extract_text_sql('html')} FROM docs ORDER BY i"
+    ).fetchall()
+    assert got == want
+    assert got[0][1] == "a b"  # U+000B collapses
+    assert got[1][1] == "a\xa0b"  # U+00A0 is not a separator

@@ -11,14 +11,17 @@ Reference mapping:
   25-102), ``Engine.polygon_edges`` / ``Engine.point_layer`` /
   ``Engine.line_layer`` (≙ BGTPolyReader / BGTPointReader /
   BGTLineReader, bgt_utils.py:19-197).
-- processors: ``full_pipeline_processors()`` — the 15 reference stages
-  (fused families included) as ``Pipeline``-compatible stages, plus
-  the predicate processors in ``operators.fusers``
+- processors: ``full_pipeline_processors()`` and ``StageProcessor``
+  (defined in ``plans.full_pipeline``, re-exported here) — the 15
+  reference stages (fused families included) as ``Pipeline`` stages,
+  plus the predicate processors in ``operators.fusers``
   (GroundSurfaceFuser, BuildingFuser, RoadFuser, …).
 - ``Pipeline(processors).run(pages_df) -> labelled_df`` (≙
-  src/upcp/pipeline.py:41-97) with optional parquet stage checkpoints
-  + per-tile lineage (the resumable path); ``Labels`` constants
-  (≙ labels.py:3-99).
+  src/upcp/pipeline.py:41-97) — the one stage runner. Every stage
+  materialises (a localCheckpoint, or with ``checkpoint_dir`` a parquet
+  stage table plus per-tile lineage that a rerun resumes from) and
+  records its claimed-row count in ``Pipeline.metrics``. ``Labels``
+  constants (≙ labels.py:3-99).
 
 Example (mirrors the reference notebook chain)::
 
@@ -37,37 +40,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .labels import Labels
-from .plans.full_pipeline import _base, pipeline_stages
+from .plans.full_pipeline import (
+    StageProcessor,
+    _base,
+    full_pipeline_processors,
+)
 from .plans.pipeline import Pipeline, Processor
 from .sources.layers import line_segments_df, point_layer_df, polygon_edges_df
 from .sources.pages import pages_from_orders
 from .sources.raster import raster_df
-
-
-class StageProcessor(Processor):
-    """One full-pipeline stage (or fused family) as a Pipeline stage.
-
-    ``step`` is the claims-fold closure from ``pipeline_stages()`` —
-    it consumes and returns the full label state, so ``apply`` is a
-    straight delegation and ``Pipeline.run``'s checkpoint/lineage
-    machinery (parquet stage tables, per-tile metrics, resume-skip)
-    applies unchanged. Not usable with ``run_fused`` (these stages are
-    join-shaped, not single-predicate) — ``run`` handles them."""
-
-    def __init__(self, name: str, labels: list[int], step) -> None:
-        self.name = name
-        self.label = list(labels)  # Pipeline metrics/lineage accept lists
-        self._step = step
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return self._step(df)
-
-
-def full_pipeline_processors() -> list[StageProcessor]:
-    """The reference's 15-stage process_sequence as Pipeline stages
-    (pole and furniture families fused, first-writer-wins preserved —
-    see plans/full_pipeline.py)."""
-    return [StageProcessor(n, labs, s) for n, labs, s in pipeline_stages()]
 
 
 class Engine:
@@ -116,7 +97,6 @@ class Engine:
         table + per-tile lineage and reruns resume mid-chain."""
         return Pipeline(
             processors if processors is not None else full_pipeline_processors(),
-            eager=True,
             checkpoint_dir=checkpoint_dir,
             run_id=run_id,
         )

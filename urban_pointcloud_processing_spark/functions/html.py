@@ -8,12 +8,15 @@ ops — no per-row Python loop) implementing a fixed, order-pinned chain:
   1. decode UTF-8
   2. strip tags       <[^>]*>  → ' '
   3. decode the 5 standard entities (&amp; last, per HTML spec order)
-  4. collapse \\s+    → ' '
-  5. strip
+  4. collapse [ \\t\\n\\x0B\\f\\r]+ → ' '  (``text.WS_RUN``)
+  5. strip U+0020 at both ends
 
 Every step is expressible in RE2 as well, so the DuckDB oracle
 (``extract_text_sql``) reproduces the output byte-for-byte — the
-golden-bytes test strategy of SURVEY.md §5.
+golden-bytes test strategy of SURVEY.md §5. Steps 4-5 name their
+characters explicitly: Python's ``\\s`` and ``str.strip()`` also match
+Unicode spaces (U+00A0, U+0085, U+2028, …) and U+001C-U+001F, which
+RE2's ``\\s`` and DuckDB's ``trim`` do not.
 """
 
 from __future__ import annotations
@@ -22,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from .text import WS_RUN
 
 # order matters: &amp; must decode LAST or "&amp;lt;" would double-decode
 ENTITIES = [
@@ -33,7 +38,6 @@ ENTITIES = [
 ]
 
 TAG_RE = r"<[^>]*>"
-WS_RE = r"\s+"
 
 
 @F.pandas_udf(StringType())
@@ -43,8 +47,8 @@ def extract_text(html: pd.Series) -> pd.Series:
     s = s.str.replace(TAG_RE, " ", regex=True)
     for ent, ch in ENTITIES:
         s = s.str.replace(ent, ch, regex=False)
-    s = s.str.replace(WS_RE, " ", regex=True)
-    return s.str.strip()
+    s = s.str.replace(WS_RUN, " ", regex=True)
+    return s.str.strip(" ")
 
 
 def extract_text_col(html: Column) -> Column:
@@ -57,5 +61,5 @@ def extract_text_sql(expr: str) -> str:
     for ent, ch in ENTITIES:
         ch_sql = ch.replace("'", "''")
         s = f"replace({s}, '{ent}', '{ch_sql}')"
-    s = rf"regexp_replace({s}, '\s+', ' ', 'g')"
-    return f"trim({s})"
+    s = f"regexp_replace({s}, '{WS_RUN}', ' ', 'g')"
+    return f"trim({s}, ' ')"

@@ -18,11 +18,12 @@ candidates over points[mask]).
 Spark re-expression: an ordered fold over an enriched base table
 (raster ground/building z + PIP road/building flags computed ONCE).
 Each stage is a claims function ``u -> (page_id, lbl)`` evaluated on
-the current unlabelled subset; the fold is a left join + CASE. Stage
-boundaries localCheckpoint (the reference's per-tile caching /
-intermediate writes) so the 15-stage plan never nests; at cluster
-scale the same fold runs with parquet/Iceberg stage checkpoints via
-plans.pipeline.Pipeline.
+the current unlabelled subset; the fold is a left join + CASE. The
+stages run through ``Pipeline.run`` (plans/pipeline.py), which
+localCheckpoints every stage boundary (the reference's per-tile
+caching / intermediate writes) so the 15-stage plan never nests; with
+a ``checkpoint_dir`` the same runner writes parquet (Iceberg at
+cluster scale) stage tables instead.
 
 Same-shape stage FAMILIES are fused (VERDICT r03 item 3): the three
 pole stages (7-9) and the two furniture stages (10-11) each run ONE
@@ -75,6 +76,7 @@ from ..sources.layers import (
     roads_meta_df,
 )
 from ..sources.pages import pages_from_orders
+from .pipeline import Pipeline, Processor
 
 # ---------------------------------------------------------------------
 # Stage parameters (fixture-scaled, identical to the standalone queries)
@@ -766,27 +768,23 @@ def _unl(cur: DataFrame) -> DataFrame:
     return cur.filter(F.col("label") == 0)
 
 
-def pipeline_stages(
-    fused: bool = True,
-) -> list[tuple[str, list[int], object]]:
+def pipeline_stages() -> list[tuple[str, list[int], object]]:
     """Ordered (name, labels_written, step) list — the single source of
     truth for the stage chain. ``step(lbl_state) -> lbl_state``; each
-    step is one reference pipeline stage (or fused family). The runner
-    materializes AFTER each step (localCheckpoint in-session, parquet
-    stage tables for the resumable path).
+    step is one reference pipeline stage (or fused family).
+    ``Pipeline.run`` materializes AFTER each step (localCheckpoint
+    in-session, parquet stage tables for the resumable path).
 
-    ``fused=True`` (default, fast path): the three pole stages and two
-    furniture stages run as single detection passes over the
-    PRE-FAMILY unlabelled set, whereas the reference recomputes the
-    mask before every processor (src/upcp/pipeline.py:88-95) — so on
-    data where poles of different types fall within the same search
-    radius the fused output can deviate from the reference's
-    sequential semantics (engine and oracle stay mutually consistent;
-    verified output-identical on both fixtures by
-    tests/test_full_pipeline.py). ``fused=False`` switches to the
-    retained strictly-sequential per-type chain — reference-exact
-    semantics at the cost of 3 extra full-table materializations
-    (ADVICE r04)."""
+    The three pole stages and two furniture stages run as single
+    detection passes over the PRE-FAMILY unlabelled set, whereas the
+    reference recomputes the mask before every processor
+    (src/upcp/pipeline.py:88-95) — so on data where poles of different
+    types fall within the same search radius the family output can
+    deviate from the reference's sequential semantics (engine and
+    oracle stay mutually consistent). ``_claims_pole`` and
+    ``_claims_furniture`` keep the strictly sequential per-type
+    claims; tests/test_full_pipeline.py pins the two chains
+    output-identical on the fixture (ADVICE r04)."""
     L = Labels
     stages: list[tuple[str, list[int], object]] = [
         ("ground_refine", [int(L.GROUND)],
@@ -814,28 +812,12 @@ def pipeline_stages(
          lambda lbl: _fold(lbl, _claims_cable(_unl(lbl)))),
         ("car_fuser", [int(L.CAR)],
          lambda lbl: _fold(lbl, _claims_car(_unl(lbl)))),
+        ("pole_family", [int(lab) for _, _, lab in POLE_STAGES],
+         lambda lbl: _fold_family(lbl, _claims_pole_family(_unl(lbl)))),
+        ("furniture_family", [int(lab) for _, _, lab in FURN_STAGES],
+         lambda lbl: _fold_family(
+             lbl, _claims_furniture_family(_unl(lbl)))),
     ]
-    if fused:
-        stages += [
-            ("pole_family", [int(lab) for _, _, lab in POLE_STAGES],
-             lambda lbl: _fold_family(lbl, _claims_pole_family(_unl(lbl)))),
-            ("furniture_family", [int(lab) for _, _, lab in FURN_STAGES],
-             lambda lbl: _fold_family(
-                 lbl, _claims_furniture_family(_unl(lbl)))),
-        ]
-    else:
-        # reference-exact sequential chain: mask recomputed before
-        # EVERY per-type stage, exactly like src/upcp/pipeline.py:88-95
-        for _i, btype, lab in POLE_STAGES:
-            stages.append(
-                (f"pole_{btype}", [int(lab)],
-                 lambda lbl, b=btype, la=lab: _fold(
-                     lbl, _claims_pole(_unl(lbl), b, int(la)))))
-        for _i, btype, lab in FURN_STAGES:
-            stages.append(
-                (f"furniture_{btype}", [int(lab)],
-                 lambda lbl, b=btype, la=lab: _fold(
-                     lbl, _claims_furniture(_unl(lbl), b, int(la)))))
     grower_name = {int(L.BUILDING): "grow_building",
                    int(L.STREET_LIGHT): "grow_light",
                    int(L.TRAFFIC_SIGN): "grow_sign",
@@ -848,16 +830,41 @@ def pipeline_stages(
     return stages
 
 
+class StageProcessor(Processor):
+    """One full-pipeline stage (or fused family) as a Pipeline stage.
+
+    ``step`` is the claims-fold closure from ``pipeline_stages()`` —
+    it consumes and returns the full label state, so ``apply`` is a
+    straight delegation and ``Pipeline.run``'s materialisation,
+    metrics, lineage and resume apply unchanged. Not usable with
+    ``run_fused`` (these stages are join-shaped, not single-predicate)."""
+
+    def __init__(self, name: str, labels: list[int], step) -> None:
+        self.name = name
+        self.label = list(labels)  # Pipeline metrics/lineage accept lists
+        self._step = step
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        return self._step(df)
+
+
+def full_pipeline_processors() -> list[StageProcessor]:
+    """The reference's 15-stage process_sequence as Pipeline stages
+    (pole and furniture families fused, first-writer-wins preserved).
+    Reads ``pipeline_stages`` at call time."""
+    return [StageProcessor(n, labs, s) for n, labs, s in pipeline_stages()]
+
+
 def full_pipeline_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(page_id, label) after the 15-stage first-writer-wins fold.
 
-    Memoized per (application, sf_dir): the fold materializes at eager
-    stage-boundary localCheckpoints, so the finished chain is a valid
-    in-session artifact — `pipeline_full_hist` (and any later caller)
-    reuses it instead of recomputing all 15 stages. This is the local
-    analog of the reference pipeline writing each stage's labels back
-    to the tile file (pipeline.py:88-95) and of Iceberg stage tables at
-    cluster scale (full_pipeline_labels_resumable)."""
+    Memoized per (application, sf_dir): ``Pipeline.run`` localCheckpoints
+    every stage boundary, so the finished chain is a valid in-session
+    artifact — `pipeline_full_hist` (and any later caller) reuses it
+    instead of recomputing all 15 stages. This is the local analog of
+    the reference pipeline writing each stage's labels back to the tile
+    file (pipeline.py:88-95) and of Iceberg stage tables at cluster
+    scale (full_pipeline_labels_resumable)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     # Evict entries whose SparkContext has stopped: their checkpointed
     # blocks are gone, so the cached DataFrame is unusable, and a
@@ -875,14 +882,10 @@ def full_pipeline_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached = _LBL_CACHE.get(key)
     if cached is not None:
         return cached
-    lbl = (
-        _base(spark, sf_dir)
-        .withColumn("label", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    for _, _, step in pipeline_stages():
-        lbl = step(lbl).localCheckpoint(eager=True)
-    out = lbl.select("page_id", "label")
+    # checkpoint the enrichment once, or stage 0 computes it twice
+    # (its fold joins the base against claims over the same base)
+    base = _base(spark, sf_dir).withColumn("label", F.lit(0)).localCheckpoint()
+    out = Pipeline(full_pipeline_processors()).run(base).select("page_id", "label")
     _LBL_CACHE[key] = out
     return out
 
@@ -900,51 +903,15 @@ def full_pipeline_labels_resumable(
     (north_rule resumability; reference analog
     scripts/ahn_batch_processor.py:53-57 — completed tiles skipped on
     rerun). A rerun over the same directory skips every stage whose
-    table COMMITTED: resume requires the ``_SUCCESS`` job-commit
-    marker, not just readable parquet — a job killed mid-commit (or
-    run with fileoutputcommitter algorithm v2) can leave a partially
-    written but readable directory, and resuming from it would
-    silently drop label state (ADVICE r04). Stages without the marker
-    are recomputed (mode="overwrite" replaces the partial output), so
-    a killed job resumes at the first uncommitted stage with identical
-    results (parquet round-trips the exact doubles). Returns
+    table committed (``stage_table_committed``), so a killed job
+    resumes at the first uncommitted stage with identical results
+    (parquet round-trips the exact doubles). Returns
     (labels_df, resumed_stage_names)."""
-    import time as _t
-
-    from .lineage import append_stage_lineage
-    from .pipeline import stage_table_committed
-
-    lbl = _base(spark, sf_dir).withColumn("label", F.lit(0))
-    resumed: list[str] = []
-    for i, (name, labels, step) in enumerate(pipeline_stages()):
-        path = f"{checkpoint_dir}/stage_{i:02d}_{name}"
-        try:
-            if not stage_table_committed(spark, path):
-                raise FileNotFoundError(f"{path}/_SUCCESS")
-            done = spark.read.parquet(path)
-            done.head(1)  # force footer read: empty/corrupt → recompute
-            lbl = done
-            resumed.append(name)
-            continue
-        except Exception:
-            pass
-        t0 = _t.time()
-        out = step(lbl)
-        out.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
-        # lineage `before`: for i > 0 `lbl` is the previous stage's
-        # parquet read (cheap rescan); at i == 0 it is the full
-        # un-materialized enrichment plan, and scanning it again just
-        # for per-tile rows_in would re-run PIP + raster over the
-        # corpus — the fold never adds or drops rows, so rows_in ==
-        # rows_out per tile and `out` substitutes exactly.
-        append_stage_lineage(
-            f"{checkpoint_dir}/_lineage", run_id, i, name,
-            before=lbl if i > 0 else out, after=out,
-            label=labels, wall_sec=_t.time() - t0,
-        )
-        lbl = out
-    return lbl.select("page_id", "label"), resumed
+    pipe = Pipeline(
+        full_pipeline_processors(), checkpoint_dir=checkpoint_dir, run_id=run_id
+    )
+    lbl = pipe.run(_base(spark, sf_dir).withColumn("label", F.lit(0)))
+    return lbl.select("page_id", "label"), pipe.resumed_stages
 
 
 # ---------------------------------------------------------------------

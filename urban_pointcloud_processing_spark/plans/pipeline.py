@@ -11,15 +11,18 @@ DataFrames. Each processor contributes a claim; the fold applies
     label := CASE WHEN label == target AND claim THEN op.label
                   ELSE label END
 
-so first-writer-wins falls out of the CASE ordering. The whole fold is
-ONE logical plan — Catalyst sees every stage and can fuse the scans;
-per-stage checkpoints (optional) cut lineage for resumability exactly
-where the reference writes intermediate tiles.
+so first-writer-wins falls out of the CASE ordering. Two folds share
+one processor list:
 
-At cluster scale ``run`` writes each stage boundary to a parquet/
-Iceberg checkpoint partitioned by tilecode and appends per-stage
-metrics (rows claimed, wall time) to a lineage table, mirroring the
-reference's per-processor logging (pipeline.py:92-95).
+- ``run_fused`` builds ONE lazy plan with a flat CASE — Catalyst sees
+  every stage and fuses the scans (single-predicate processors only).
+- ``run`` is the materialising stage runner, and the only one: every
+  stage boundary is a localCheckpoint, or, with ``checkpoint_dir``, a
+  parquet stage table plus per-tile lineage (rows claimed, wall time)
+  so a rerun resumes mid-chain, mirroring the reference's
+  per-processor logging (pipeline.py:92-95) and its intermediate
+  tile writes. The 15-stage reference chain
+  (``plans.full_pipeline``) runs through it.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..labels import Labels
@@ -36,11 +39,17 @@ from ..labels import Labels
 class Processor:
     """A labelling stage. Subclasses either override ``claim`` (pure
     column predicate over the enriched frame) or ``enrich`` + ``claim``
-    when the stage needs a join (PIP, raster, components).
+    when the stage needs a join (PIP, raster, components), or override
+    ``apply`` outright (``StageProcessor``).
 
     ``target_label`` is the label value a row must currently have for
     this stage to touch it — 0 (unlabelled) for most stages; e.g. the
     road fuser targets GROUND rows (reference road_fuser.py:81).
+
+    Row contract: ``apply`` rewrites ``label`` only; it never adds or
+    drops rows. ``Pipeline.run`` relies on it — stage 0's lineage
+    counts its output as its input instead of re-running the
+    un-materialised base plan.
     """
 
     label: int = Labels.UNKNOWN
@@ -93,22 +102,22 @@ def stage_table_committed(spark, path: str) -> bool:
 
 @dataclass
 class Pipeline:
-    """Ordered fold with optional per-stage materialization + metrics.
+    """Ordered processor list with two folds (see the module docstring).
 
-    ``eager=False`` (default): builds one lazy plan — the fast path.
-    ``eager=True``: localCheckpoints each stage and records claimed-row
-    counts (the reference's per-processor stats) — the resumable path;
-    with ``checkpoint_dir`` set, stages persist to parquet so a rerun
-    resumes from the last completed stage (idempotent-resume semantics
-    of scripts/ahn_batch_processor.py:53-57).
+    ``run`` materialises every stage and records one ``StageMetric``
+    (rows carrying the stage's labels, wall time) per computed stage.
+    With ``checkpoint_dir`` each stage persists to
+    ``stage_{i:02d}_{name}`` and appends per-tile lineage to
+    ``_lineage``; a rerun over the same directory skips every committed
+    stage (``resumed_stages``) — the idempotent-resume semantics of
+    scripts/ahn_batch_processor.py:53-57.
     """
 
     processors: list[Processor]
-    eager: bool = False
     checkpoint_dir: str | None = None
     run_id: str = "run0"
-    metrics: list[StageMetric] = field(default_factory=list)
-    resumed_stages: list[str] = field(default_factory=list)
+    metrics: list[StageMetric] = field(init=False, default_factory=list)
+    resumed_stages: list[str] = field(init=False, default_factory=list)
 
     def run(self, pages: DataFrame) -> DataFrame:
         from .lineage import append_stage_lineage
@@ -117,40 +126,38 @@ class Pipeline:
         if "label" not in df.columns:
             df = df.withColumn("label", F.lit(Labels.UNKNOWN))
         spark = df.sparkSession
+        ckpt = self.checkpoint_dir
         for i, proc in enumerate(self.processors):
-            if self.checkpoint_dir is not None:
-                path = f"{self.checkpoint_dir}/stage_{i:02d}_{proc.name}"
+            path = f"{ckpt}/stage_{i:02d}_{proc.name}"
+            if ckpt and stage_table_committed(spark, path):
                 try:
-                    if not stage_table_committed(spark, path):
-                        raise FileNotFoundError(f"{path}/_SUCCESS")
-                    df = spark.read.parquet(path)
-                    df.head(1)  # force footer read: empty/corrupt → retry
+                    done = spark.read.parquet(path)
+                    done.head(1)  # force footer read: empty/corrupt → recompute
+                    df = done
                     self.resumed_stages.append(proc.name)
-                    continue  # resume: stage already materialized
+                    continue
                 except Exception:
                     pass
             t0 = time.time()
-            out = proc.apply(df)
-            if self.checkpoint_dir is not None:
+            labs = (proc.label if isinstance(proc.label, (list, tuple))
+                    else [proc.label])
+            # the claimed-row count rides along in the materialising job
+            seen = Observation()
+            out = proc.apply(df).observe(seen, F.count_if(
+                F.col("label").isin([int(x) for x in labs])).alias("n"))
+            if ckpt:
                 out.write.mode("overwrite").parquet(path)
                 out = spark.read.parquet(path)
-            elif self.eager:
-                out = out.localCheckpoint(eager=True)
-            if self.eager or self.checkpoint_dir:
-                wall = time.time() - t0
-                labs = (proc.label if isinstance(proc.label, (list, tuple))
-                        else [proc.label])
-                claimed = out.filter(
-                    F.col("label").isin([int(x) for x in labs])
-                ).count()
-                self.metrics.append(StageMetric(proc.name, claimed, wall))
-                if self.checkpoint_dir is not None:
-                    append_stage_lineage(
-                        f"{self.checkpoint_dir}/_lineage",
-                        self.run_id, i, proc.name,
-                        before=df, after=out, label=proc.label,
-                        wall_sec=wall,
-                    )
+            else:
+                out = out.localCheckpoint()
+            wall = time.time() - t0
+            self.metrics.append(StageMetric(proc.name, seen.get["n"], wall))
+            if ckpt:
+                append_stage_lineage(
+                    f"{ckpt}/_lineage", self.run_id, i, proc.name,
+                    before=df if i > 0 else out, after=out,
+                    label=proc.label, wall_sec=wall,
+                )
             df = out
         return df
 
@@ -197,11 +204,12 @@ class Pipeline:
         return df.withColumn("label", label).drop(*drop)
 
     def label_statistics(self, labelled: DataFrame) -> DataFrame:
-        """Reference analysis_tools.get_label_stats (analysis/analysis_tools.py:8-18)."""
-        total = labelled.count()
+        """Reference analysis_tools.get_label_stats (analysis/analysis_tools.py:8-18).
+        One scan: the total is a window sum over the grouped rows."""
+        total = F.sum("n_points").over(Window.partitionBy())
         return (
             labelled.groupBy("label")
             .agg(F.count("*").alias("n_points"))
-            .withColumn("perc", F.round(F.col("n_points") / F.lit(total) * 100, 2))
+            .withColumn("perc", F.round(F.col("n_points") / total * 100, 2))
             .orderBy("label")
         )

@@ -74,6 +74,41 @@ def _shuffles(plan: str) -> int:
     return len(re.findall(r"(?<!Broadcast)Exchange ", plan))
 
 
+def _nodes(plan) -> list:
+    """Every node of a JVM physical plan, AQE's current plan included."""
+    out, todo = [], [plan]
+    while todo:
+        p = todo.pop()
+        out.append(p)
+        if p.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            todo.append(p.executedPlan())
+            continue
+        kids = p.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def test_flagship_joins_the_raster_on_one_bigint_key(spark):
+    """Two broadcast hash joins (raster cells, PIP cells); the raster one
+    (its build side scans the generated cell range) probes one packed
+    BIGINT key per point, not a (gx, gy) pair."""
+    from urban_pointcloud_processing_spark.queries import QUERIES
+
+    df = QUERIES["label_histogram"](spark, SF)
+    assert _physical(df).count("BroadcastHashJoin") == 2, _physical(df)
+    joins = [n for n in _nodes(df._jdf.queryExecution().executedPlan())
+             if _name(n) == "BroadcastHashJoinExec"]
+    raster = [j for j in joins if any(_name(n) == "RangeExec" for n in _nodes(j.right()))]
+    assert len(raster) == 1, [j.toString() for j in joins]
+    for keys in (raster[0].leftKeys(), raster[0].rightKeys()):
+        assert keys.size() == 1, raster[0].toString()
+        assert keys.apply(0).dataType().simpleString() == "bigint"
+
+
 def test_flagship_stays_in_the_jvm(spark):
     """The label_histogram flagship crosses no Python boundary, and its
     PIP flags add no shuffle: exactly one more broadcast hash join."""

@@ -37,12 +37,15 @@ bit-identical across them.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import per_session
 
 
 # --- Edge join ---------------------------------------------------------
@@ -353,11 +356,13 @@ def _entry_array(rows: np.ndarray, nrows: int, polys: list[dict],
     )
 
 
-class _CellGrid(NamedTuple):
+@dataclass(frozen=True, eq=False)
+class _CellGrid:
     """A flag spec rasterised: cell edge ``res``, the union bbox of the
     flag polygons (``x0, y0, x1, y1``), the grid origin cell
     (``i0, j0``) and row count ``span`` that pack a cell into
-    ``(i - i0) * span + (j - j0)``, and the cell table."""
+    ``(i - i0) * span + (j - j0)``, and the cell table. Hashed by
+    identity, so ``_ship`` can memoise on it."""
     res: float
     x0: float
     y0: float
@@ -441,7 +446,8 @@ class _Shipped(NamedTuple):
     flags: dict[str, Column]
 
 
-def _ship(spark, g: _CellGrid, flags: list[str], x: str, y: str) -> _Shipped:
+@per_session
+def _ship(spark, g: _CellGrid, flags: tuple[str, ...], x: str, y: str) -> _Shipped:
     px, py = F.col(x), F.col(y)
     # Spark orders NaN above every number, so NaN fails `<= x1`
     known = (px >= g.x0) & (px <= g.x1) & (py >= g.y0) & (py <= g.y1)
@@ -467,28 +473,18 @@ def _ship(spark, g: _CellGrid, flags: list[str], x: str, y: str) -> _Shipped:
 _CELLS: dict = {}
 
 
-def _shipped(spark, polygons: list[dict], flag_types: dict[str, list[str] | None],
-             x: str, y: str) -> _Shipped | None:
-    """``_ship`` of the ``_build_cells`` grid of (polygon list, flag
-    spec), memoised: the grid once per spec, the rest once per session
-    and coordinate columns (None without flag polygons). The polygon
-    list is keyed by identity and treated as immutable, as
-    ``sources.layers.polygon_layer()`` is."""
+def _grid(polygons: list[dict],
+          flag_types: dict[str, list[str] | None]) -> _CellGrid | None:
+    """``_build_cells``, memoised once per (polygon list, flag spec),
+    whatever the session. The polygon list is keyed by identity and
+    treated as immutable, as ``sources.layers.polygon_layer()`` is."""
     spec = tuple((f, None if ts is None else tuple(ts)) for f, ts in flag_types.items())
     hit = _CELLS.get((id(polygons), spec))
     if hit is None or hit[0] is not polygons:
         if len(_CELLS) >= 16:
             _CELLS.clear()
-        hit = _CELLS[(id(polygons), spec)] = (
-            polygons, _build_cells(polygons, flag_types), {})
-    _, grid, sessions = hit
-    if grid is None:
-        return None
-    key = (id(spark), x, y)
-    got = sessions.get(key)
-    if got is None or got[0] is not spark:
-        got = sessions[key] = (spark, _ship(spark, grid, list(flag_types), x, y))
-    return got[1]
+        hit = _CELLS[(id(polygons), spec)] = (polygons, _build_cells(polygons, flag_types))
+    return hit[1]
 
 
 def pip_flags(points: DataFrame, polygons: list[dict],
@@ -500,7 +496,7 @@ def pip_flags(points: DataFrame, polygons: list[dict],
 
     1. plan time: the flag polygons are rasterised into a cell table
        keyed by ``floor(x/r), floor(y/r)`` (``_build_cells``; memoised
-       by ``_shipped``);
+       by ``_grid``, its DataFrame and Columns per session by ``_ship``);
     2. points broadcast-left-join it on the packed cell key, as
        ``with_raster`` joins the raster; points outside the union bbox
        of the flag polygons, and NaN, ±Inf or NULL coordinates, get no
@@ -509,9 +505,10 @@ def pip_flags(points: DataFrame, polygons: list[dict],
        fold of the crossing test over the entry's edges). Only points
        in EDGE cells evaluate the fold.
     """
-    s = _shipped(points.sparkSession, polygons, flag_types, x, y)
-    if s is None:
+    g = _grid(polygons, flag_types)
+    if g is None:
         return points.withColumns({f: F.lit(False) for f in flag_types})
+    s = _ship(points.sparkSession, g, tuple(flag_types), x, y)
     joined = points.withColumn("_ck", s.key).join(F.broadcast(s.cells), "_ck", "left")
     return joined.withColumns(s.flags).drop(*s.cells.columns)
 

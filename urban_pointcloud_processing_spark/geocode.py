@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .session import per_session
+
 # Knuth/Fibonacci-style multiplicative constants. The id is reduced
 # modulo the span before it is multiplied, so every product stays below
 # 150000 * 3266489917 < 2^49 and BIGINT arithmetic is exact in both
@@ -50,10 +52,17 @@ def z_col(id_col: Column) -> Column:
     return _mix(id_col, AZ, Z_SPAN_MM) / F.lit(1000.0)
 
 
-def geocode(df, id_col: str = "page_id"):
-    """Append deterministic x, y, z columns derived from ``id_col``."""
+@per_session
+def _geocode_cols(spark, id_col: str) -> dict[str, Column]:
     c = F.col(id_col)
-    return df.withColumns({"x": x_col(c), "y": y_col(c), "z": z_col(c)})
+    return {"x": x_col(c), "y": y_col(c), "z": z_col(c)}
+
+
+def geocode(df, id_col: str = "page_id"):
+    """Append deterministic x, y, z columns derived from ``id_col``.
+    The Columns are built once per session (``session.per_session``):
+    building them takes ~80 py4j round trips."""
+    return df.withColumns(_geocode_cols(df.sparkSession, id_col))
 
 
 # --- DuckDB oracle SQL fragments (identical arithmetic) ---------------

@@ -8,6 +8,7 @@ sized so reference layers (dimension tables) always broadcast.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -46,3 +47,29 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+_MEMO: dict = {}
+MEMO_MAX = 64
+
+
+def per_session(fn):
+    """Memoise ``fn(spark, *args)`` once per live session and hashable
+    arguments. For plan constants only: DataFrames over literal or
+    generated rows and the Columns every plan reuses, never a scan, since
+    a memoised plan would keep its first file listing.
+
+    The key holds the session object itself, and SparkSession compares
+    by identity, so a new session never hits an entry of a collected one
+    whose ``id`` it reuses. The memo is bounded: past ``MEMO_MAX``
+    entries it starts over, as ``functions.pip._CELLS`` does.
+    """
+    @functools.wraps(fn)
+    def memo(spark, *args, **kwargs):
+        key = (fn, spark, args, tuple(sorted(kwargs.items())))
+        if key not in _MEMO:
+            if len(_MEMO) >= MEMO_MAX:
+                _MEMO.clear()
+            _MEMO[key] = fn(spark, *args, **kwargs)
+        return _MEMO[key]
+    return memo

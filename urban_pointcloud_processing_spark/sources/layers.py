@@ -12,6 +12,11 @@ Layers are dimension tables: tens-to-thousands of rows against a
 Polygons are stored both as vertex rings (for grouped-map geometry) and
 pre-exploded to an edge table with per-edge polygon bbox — the edge
 table is what the pure-Catalyst ray-cast PIP join consumes.
+
+Each ``*_df`` is built once per session (``session.per_session``): its
+rows are literals, so the DataFrame is a plan constant, and
+``createDataFrame`` with schema inference costs tens of milliseconds of
+driver time per call.
 """
 
 from __future__ import annotations
@@ -19,6 +24,8 @@ from __future__ import annotations
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import per_session
 
 X_LO, X_HI = 119250.0, 119400.0
 Y_LO, Y_HI = 485050.0, 485200.0
@@ -124,6 +131,7 @@ EDGE_COLS = ("layer", "polygon_id", "bgt_type", "x1", "y1", "x2", "y2",
              "px_min", "py_min", "px_max", "py_max")
 
 
+@per_session
 def polygon_edges_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(polygon_edges(), schema=list(EDGE_COLS))
 
@@ -153,6 +161,7 @@ def polygons_meta() -> list[tuple]:
     ]
 
 
+@per_session
 def polygons_meta_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(polygons_meta(), schema=list(META_COLS))
 
@@ -182,6 +191,7 @@ def point_layer() -> list[tuple]:
 POINT_COLS = ("bgt_type", "obj_id", "x", "y", "z")
 
 
+@per_session
 def point_layer_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(point_layer(), schema=list(POINT_COLS))
 
@@ -225,6 +235,7 @@ def line_segments() -> list[tuple]:
 SEGMENT_COLS = ("bgt_type", "line_id", "seg_idx", "x1", "y1", "x2", "y2")
 
 
+@per_session
 def line_segments_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(line_segments(), schema=list(SEGMENT_COLS))
 
@@ -248,6 +259,7 @@ def road_strips() -> list[tuple]:
     ]
 
 
+@per_session
 def roads_meta_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(
         road_strips(), schema=["rid", "rx0", "ry0", "rx1", "ry1"]

@@ -104,11 +104,9 @@ def _est_scan_partitions(spark: SparkSession, path: str) -> int | None:
 # kernel is 0.61 s vs 0.72 s). Above the threshold a few-split input
 # still spreads to all cores, so the compute-bound case (driver SFs
 # with 10×+ rows, the regime the spread exists for) keeps its
-# parallelism. Env-overridable for experiments; a production deployment
-# reads many-split tables and never reaches the repartition.
-SPREAD_MIN_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_SPREAD_MIN_BYTES", str(8 * 1024 * 1024)
-))
+# parallelism. A production deployment reads many-split tables and never
+# reaches the repartition.
+SPREAD_MIN_BYTES = 8 * 1024 * 1024
 
 
 def spread_small_scan(df: DataFrame, path: str | None = None,

@@ -5,7 +5,16 @@ in NPZ files (src/upcp/utils/ahn_utils.py:287-302,
 src/upcp/preprocessing/ahn_preprocessing.py:221-235). At 10^12-row
 scale a raster is just another (much smaller) table: one row per cell,
 keyed by global cell indices — the raster↔vector lookup becomes an
-equi-join that Catalyst plans as a broadcast hash join per tile.
+equi-join that Catalyst plans as a broadcast hash join per tile. The
+join key is one packed BIGINT per cell (``tiling.cell_id``), not the
+(gx, gy) pair: a single-long key hashes and compares without building
+a two-field key row per point.
+
+The raster is a plan constant, as the reference's interpolator is
+built once per tile and reused by every fuser (src/upcp/pipeline.py:
+84-86): ``raster_df`` and the Columns of ``with_raster`` are built once
+per session (``session.per_session``). Each query still recomputes and
+broadcasts the cells; nothing is cached across passes.
 
 Surfaces are pure integer-arithmetic functions of the cell indices
 (FIXTURES.md §5 intent), so the DuckDB oracle reproduces every value
@@ -21,7 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import per_session
 from ..sources.layers import TILE, X_HI, X_LO, Y_HI, Y_LO
+from ..tiling import CELL_LIM, cell_id, cell_key
 
 DEFAULT_RES = 1.0  # test-scale resolution (FIXTURES.md §5: 1 m variant)
 
@@ -34,8 +45,10 @@ def building_mask_col(gx: Column, gy: Column) -> Column:
     return ((gx * 7 + gy * 13) % 10) < 3
 
 
+@per_session
 def raster_df(spark: SparkSession, res: float = DEFAULT_RES) -> DataFrame:
-    """Materialize the raster for the fixture window, long format."""
+    """The raster for the fixture window, long format (one plan per
+    session and ``res``)."""
     gx0, gx1 = int(X_LO // res), int(X_HI // res)
     gy0, gy1 = int(Y_LO // res), int(Y_HI // res)
     nx = gx1 - gx0
@@ -61,20 +74,37 @@ def raster_df(spark: SparkSession, res: float = DEFAULT_RES) -> DataFrame:
     )
 
 
+@per_session
+def _point_cols(spark, res: float) -> list[Column]:
+    x, y = F.col("x"), F.col("y")
+    return [F.floor(x / F.lit(res)).alias("gx"), F.floor(y / F.lit(res)).alias("gy"),
+            F.col("*"), cell_id(x, y, res).alias("_rk")]
+
+
+@per_session
+def _cell_cols(spark) -> list[Column]:
+    gx, gy = F.col("gx"), F.col("gy")
+    # a cell past the packing's range would alias another cell's key
+    ok = gx.between(-CELL_LIM, CELL_LIM - 1) & gy.between(-CELL_LIM, CELL_LIM - 1)
+    return [F.when(ok, cell_key(gx, gy)).alias("_rk"), F.col("ground_z"),
+            F.col("building_z")]
+
+
 def with_raster(pages: DataFrame, raster: DataFrame,
                 res: float = DEFAULT_RES) -> DataFrame:
     """Raster lookup join: page → enclosing cell (reference
     FastGridInterpolator, src/upcp/utils/interpolation.py:336-348,
-    re-expressed as floor-key equi-join; broadcast at fixture scale)."""
-    keyed = pages.withColumns(
-        {"gx": F.floor(F.col("x") / F.lit(res)),
-         "gy": F.floor(F.col("y") / F.lit(res))}
-    )
-    return keyed.join(
-        F.broadcast(raster.select("gx", "gy", "ground_z", "building_z")),
-        ["gx", "gy"],
-        "left",
-    )
+    re-expressed as floor-key equi-join; broadcast at fixture scale).
+
+    Output: ``gx, gy, <pages columns>, ground_z, building_z`` with
+    ``gx, gy = floor(x/res), floor(y/res)``. Both sides join on the
+    packed ``tiling.cell_id`` key; a point with |x/res| or |y/res| at
+    or above 2^30, or a NaN, ±Inf or NULL coordinate, has no key and
+    gets NULL ``ground_z`` and ``building_z``."""
+    spark = pages.sparkSession
+    keyed = pages.drop("gx", "gy").select(*_point_cols(spark, res))
+    cells = F.broadcast(raster.select(*_cell_cols(spark)))
+    return keyed.join(cells, "_rk", "left").drop("_rk")
 
 
 # --- DuckDB oracle SQL fragments --------------------------------------

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .geocode import TILE_SIZE
+from .session import per_session
 
 
 def tile_x(x: Column, tile_size: float = TILE_SIZE) -> Column:
@@ -42,23 +43,41 @@ def cell_y(y: Column, res: float) -> Column:
     return F.floor(y / F.lit(res))
 
 
+CELL_SPAN = 1 << 31   # cy's share of a packed cell key
+CELL_LIM = 1 << 30    # |cell index| bound that keeps the packing exact
+
+
+def cell_key(cx: Column, cy: Column) -> Column:
+    """Pack integer cell indices into one BIGINT, ``cx * 2^31 + cy``:
+    collision-free for cx, cy in [-2^30, 2^30)."""
+    return cx * F.lit(CELL_SPAN) + cy
+
+
 def cell_id(x: Column, y: Column, res: float) -> Column:
-    """Single 64-bit cell key: (cx << 21 unavailable portably) — use a
-    collision-free pairing over the bounded coordinate domain instead.
-    RD coordinates are < 300 km, so floor(x/res) < 2^30 for res ≥ 1 mm.
-    """
-    return cell_x(x, res) * F.lit(1 << 31) + cell_y(y, res)
+    """The ``cell_key`` of the cell holding (x, y). NULL unless |x/res|
+    and |y/res| are below 2^30, so the product never overflows BIGINT
+    and NaN, ±Inf and NULL coordinates get no cell. RD coordinates are
+    < 300 km, so every real point has a key for res ≥ 1 mm."""
+    sx, sy = x / F.lit(res), y / F.lit(res)
+    known = (F.abs(sx) < F.lit(float(CELL_LIM))) & (F.abs(sy) < F.lit(float(CELL_LIM)))
+    return F.when(known, cell_key(F.floor(sx), F.floor(sy)))
+
+
+@per_session
+def _tile_cols(spark, x: str, y: str, tile_size: float) -> dict[str, Column]:
+    cx, cy = F.col(x), F.col(y)
+    return {
+        "tile_x": tile_x(cx, tile_size),
+        "tile_y": tile_y(cy, tile_size),
+        "tilecode": tilecode(cx, cy, tile_size),
+    }
 
 
 def with_tiles(df: DataFrame, x: str = "x", y: str = "y",
                tile_size: float = TILE_SIZE) -> DataFrame:
-    return df.withColumns(
-        {
-            "tile_x": tile_x(F.col(x), tile_size),
-            "tile_y": tile_y(F.col(y), tile_size),
-            "tilecode": tilecode(F.col(x), F.col(y), tile_size),
-        }
-    )
+    """Append tile_x, tile_y and tilecode. The Columns are built once
+    per session (``session.per_session``)."""
+    return df.withColumns(_tile_cols(df.sparkSession, x, y, tile_size))
 
 
 def neighbor_cells(cx: Column, cy: Column) -> Column:
@@ -67,7 +86,7 @@ def neighbor_cells(cx: Column, cy: Column) -> Column:
     self-join). Keys use the same pairing as cell_id."""
     deltas = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     return F.array(
-        *[(cx + F.lit(dx)) * F.lit(1 << 31) + (cy + F.lit(dy)) for dx, dy in deltas]
+        *[cell_key(cx + F.lit(dx), cy + F.lit(dy)) for dx, dy in deltas]
     )
 
 

@@ -40,6 +40,39 @@ def test_label_regions_two_blobs():
     assert n2 == 1
 
 
+def _flood_labels(g: np.ndarray) -> tuple[np.ndarray, int]:
+    """8-connected flood fill in raster-scan order: region k is the k-th
+    region met by the scan."""
+    labels = np.zeros(g.shape, dtype=np.int64)
+    n = 0
+    for i, j in zip(*np.nonzero(g)):
+        if labels[i, j]:
+            continue
+        n += 1
+        labels[i, j] = n
+        stack = [(i, j)]
+        while stack:
+            a, b = stack.pop()
+            for da in (-1, 0, 1):
+                for db in (-1, 0, 1):
+                    p, q = a + da, b + db
+                    if (0 <= p < g.shape[0] and 0 <= q < g.shape[1]
+                            and g[p, q] and not labels[p, q]):
+                        labels[p, q] = n
+                        stack.append((p, q))
+    return labels, n
+
+
+def test_label_regions_numbers_regions_in_scan_order():
+    rng = np.random.default_rng(3)
+    for _ in range(200):
+        g = rng.random(tuple(rng.integers(1, 14, 2))) < rng.random()
+        labels, n = label_regions(g)
+        want, want_n = _flood_labels(g)
+        assert n == want_n
+        assert (labels == want).all()
+
+
 def test_cluster_morphology_grouped(spark):
     rows = []
     # component 0: a 3×2 solid block of points at 1 m spacing

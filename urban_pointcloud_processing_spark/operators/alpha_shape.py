@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .components import min_root_components
+
 
 def _circumcircle(pa, pb, pc):
     """(center, radius²) of the triangle circumcircle; radius² = inf
@@ -198,27 +200,17 @@ def _boundary_loops(pts: np.ndarray, kept: list[tuple[int, int, int]]):
     pair_at: dict[tuple[int, tuple[int, int]], tuple[int, int]] = {}
     for v, bes in bd_at.items():
         tris_v = tri_at[v]
-        parent = {t: t for t in tris_v}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
         shared: dict[tuple[int, int], list[int]] = defaultdict(list)
         for ti in tris_v:
             for u in kept[ti]:
                 if u != v:
                     shared[(min(v, u), max(v, u))].append(ti)
-        for ts in shared.values():
-            for t2 in ts[1:]:
-                ra, rb = find(ts[0]), find(t2)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
+        fan = min_root_components(
+            ((ts[0], t2) for ts in shared.values() for t2 in ts[1:]), tris_v
+        )
         fan_edges: dict[int, list[tuple[int, int]]] = defaultdict(list)
         for e in bes:
-            fan_edges[find(edge_tri[e])].append(e)
+            fan_edges[fan[edge_tri[e]]].append(e)
         for es in fan_edges.values():
             if len(es) != 2:  # degenerate float triangulation — bail
                 return []

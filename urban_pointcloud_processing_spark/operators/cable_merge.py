@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from .components import min_root_components
+
 
 def _principal(xy: np.ndarray) -> np.ndarray:
     """Unit principal direction of a 2-D point set (largest eigvec)."""
@@ -338,14 +340,7 @@ def merge_clusters_pairwise_cc(
     for cid, xm, ym, zm in rows:
         clusters.setdefault(int(cid), []).append((int(xm), int(ym), int(zm)))
     geom = {cid: _cluster_geom(pts) for cid, pts in clusters.items()}
-    parent = {cid: cid for cid in clusters}
-
-    def find(c):
-        while parent[c] != c:
-            parent[c] = parent[parent[c]]
-            c = parent[c]
-        return c
-
+    pairs = []
     ids = sorted(clusters)
     for i, ca in enumerate(ids):
         va, amin, amax = geom[ca]
@@ -364,10 +359,8 @@ def merge_clusters_pairwise_cc(
                 continue
             if not _pair_curve_ok(clusters[ca] + clusters[cb]):
                 continue
-            ra, rb = find(ca), find(cb)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    return {cid: find(cid) for cid in clusters}
+            pairs.append((ca, cb))
+    return min_root_components(pairs, clusters)
 
 
 def merge_cables_cc(clustered: DataFrame,

@@ -1,245 +1,186 @@
-"""Connected components over the occupied-grid-cell graph.
+"""Connected components: the package's one union-find and the two-level
+Spark scheme every spatial CC runs on.
 
 Reference: LabelConnectedComp (src/upcp/region_growing/
 label_connected_comp.py:18-135) — CloudCompare octree CC at a grid
 size, then a size filter (:92-97), then a seed-fraction region fill
-(:111-123). Component ids are canonicalized to the MIN cell key of the
+(:111-123). Component ids are canonicalized to the MIN node of the
 component (SURVEY.md §7.3 item 2 — reference ids are octree-order-
 dependent, so tests compare partitions, not raw ids).
 
-- ``grid_components``: iterative min-label propagation + pointer
-  jumping over the cell adjacency graph, pure DataFrame ops, with
-  localCheckpoint every round (the north-rule "iterative connected-
-  component expansion over the cell graph with checkpointed
-  frontiers"). Converges in O(log d) rounds; works across tile
-  boundaries — the 10^12-row scale path.
+- ``min_root_components``: pure-Python union-find with min-node roots.
+  Every in-memory CC of the package runs on it: the per-block passes
+  below, DBSCAN cores, morphology regions, alpha-shape fans and the
+  pairwise cable merge.
+- ``grid_components``: CC over occupied grid cells, 8-neighborhood in
+  2-D (the z-collapsed analog of the reference's 26-neighborhood octree
+  grid); component = min ``tiling.cell_id`` key.
+- ``edge_components``: the same scheme over an explicit edge list with
+  caller-defined blocks (region growing's gated voxel graph).
 
-- ``grid_components_two_level``: the same output from one per-block
-  applyInPandas union-find plus a driver-side merge of the border
-  cells' roots — no iteration.
-
-Both snap points to cells with floor(x/g) and use 8-neighborhood
-adjacency in 2-D (the z-collapsed analog of the reference's
-26-neighborhood octree grid).
+Both Spark kernels are two-level and run in one pass, no iteration:
+nodes fall into spatial blocks, one ``applyInPandas`` union-find per
+block resolves the intra-block edges, and the inter-block ROOT graph —
+bounded by block surface area — resolves on the driver and broadcasts
+back (``_two_level``).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Hashable, Iterable
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..tiling import cell_x, cell_y, neighbor_cells
+from ..tiling import CELL_SPAN, cell_id, cell_key, cell_x, cell_y
 
-PAIR = 1 << 31
-
-
-def _with_cells(points: DataFrame, grid_size: float) -> DataFrame:
-    return points.withColumns(
-        {
-            "_cx": cell_x(F.col("x"), grid_size),
-            "_cy": cell_y(F.col("y"), grid_size),
-        }
-    ).withColumn("_cell", F.col("_cx") * F.lit(PAIR) + F.col("_cy"))
+BLOCK_CELLS = 64   # grid-CC block side, in cells (≤ 4096 cells a block)
+# half of the 8-neighborhood as cell-key offsets (cell_key is linear in
+# cx and cy): every undirected adjacency is (k, k + off) exactly once
+_FORWARD = [dx * CELL_SPAN + dy for dx, dy in ((0, 1), (1, -1), (1, 0), (1, 1))]
 
 
-def grid_components(
-    points: DataFrame,
-    grid_size: float,
-    point_id: str = "page_id",
-    max_rounds: int = 50,
-    out_col: str = "component",
-) -> DataFrame:
-    """Append ``component`` = min cell key of the point's component."""
-    pts = _with_cells(points, grid_size)
-    cells = pts.select("_cx", "_cy", "_cell").distinct().persist()
+def min_root_components(
+    pairs: Iterable[tuple[Hashable, Hashable]], nodes: Iterable[Hashable] = ()
+) -> dict:
+    """Union-find over the undirected ``pairs``: maps every node named in
+    ``pairs`` or ``nodes`` to the MIN node of its component, so the ids
+    are canonical whatever the pair order. Nodes must be mutually
+    comparable."""
+    parent = {n: n for n in nodes}
 
-    # adjacency: occupied cell -> occupied neighbor (incl. self). The
-    # neighbor explode is 9 rows/cell; the join back to `cells` keeps
-    # only occupied neighbors. Both sides are cell-level (small vs the
-    # point table) — this is the graph we iterate on.
-    edges = (
-        cells.select(
-            F.col("_cell").alias("src"),
-            F.explode(neighbor_cells(F.col("_cx"), F.col("_cy"))).alias("dst"),
-        )
-        .join(cells.select(F.col("_cell").alias("dst")), "dst")
-        .persist()
-    )
+    def find(a):
+        parent.setdefault(a, a)
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
 
-    comp = cells.select(F.col("_cell").alias("node"), F.col("_cell").alias("comp"))
-    comp = comp.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        # min over neighbors' labels (frontier expansion)
-        nbr_min = (
-            edges.join(comp.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-            .withColumnRenamed("src", "node")
-        )
-        stepped = (
-            comp.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.col("nbr_comp")).alias("comp"),
-            )
-        )
-        # pointer jumping (path halving): comp := comp[comp]
-        jumped = (
-            stepped.alias("a")
-            .join(
-                stepped.select(
-                    F.col("node").alias("comp"), F.col("comp").alias("comp2")
-                ).alias("b"),
-                "comp",
-                "left",
-            )
-            .select("node", F.coalesce("comp2", "comp").alias("comp"))
-        )
-        jumped = jumped.localCheckpoint(eager=True)  # checkpointed frontier
-        changed = (
-            jumped.join(comp.withColumnRenamed("comp", "old"), "node")
-            .filter(F.col("comp") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        comp = jumped
-        if changed == 0:
-            break
-    out = pts.join(comp.withColumnRenamed("node", "_cell"), "_cell").withColumnRenamed(
-        "comp", out_col
-    )
-    cells.unpersist()
-    edges.unpersist()
-    return out.drop("_cell", "_cx", "_cy")
-
-
-def grid_components_two_level(
-    points: DataFrame,
-    grid_size: float,
-    point_id: str = "page_id",
-    out_col: str = "component",
-    tile_cells: int = 64,
-) -> DataFrame:
-    """Two-level CC — the scalable form of ``grid_components`` with the
-    SAME output (component = min cell key of the global component):
-
-    1. partition occupied cells into (tile_cells × tile_cells) blocks;
-    2. per-block union-find via one ``applyInPandas`` pass (parallel,
-       no iteration — block cell counts are bounded);
-    3. cross-block edges exist only between BORDER cells; the
-       local-root merge graph is tiny (O(perimeter)), so it resolves
-       with a driver-side union-find and broadcasts back.
-
-    At 10^12 rows step 3's root graph stays small because components
-    rarely span many blocks (reference CC is per-50m-tile anyway); a
-    deeper hierarchy would repeat step 2 on the root graph if needed.
-    """
-    pts = _with_cells(points, grid_size)
-    tc = int(tile_cells)
-    # ONE exchange: group point-level cell keys straight by block with
-    # collect_set — the partial (map-side) set union dedups before the
-    # shuffle, so the wire carries distinct cells exactly like the old
-    # distinct() pass, without the second exchange the (cx,cy)→(bx,by)
-    # regroup used to cost (guide §2.4). Block cell counts are bounded
-    # (≤ tc², 4096 at the default), so the per-block set is small.
-    blocked = pts.select(
-        F.floor(F.col("_cx") / F.lit(tc)).cast("long").alias("_bx"),
-        F.floor(F.col("_cy") / F.lit(tc)).cast("long").alias("_by"),
-        "_cell",
-    ).groupBy("_bx", "_by").agg(F.collect_set("_cell").alias("_cells"))
-
-    roots_schema = "cell long, root long, bx long, by long, border boolean"
-
-    def local_cc(pdf: pd.DataFrame) -> pd.DataFrame:
-        cells = [int(c) for c in pdf["_cells"].iloc[0]]
-        parent = {k: k for k in cells}
-
-        def find(a: int) -> int:
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
-        occupied = set(parent)
-        for k in cells:
-            cx, cy = k // PAIR, k % PAIR
-            for dx in (-1, 0, 1):
-                for dy in (-1, 0, 1):
-                    nb = (cx + dx) * PAIR + (cy + dy)
-                    if nb in occupied:
-                        ra, rb = find(k), find(nb)
-                        if ra != rb:
-                            parent[max(ra, rb)] = min(ra, rb)
-        bx, by = int(pdf["_bx"].iloc[0]), int(pdf["_by"].iloc[0])
-        rows = []
-        for k in cells:
-            cx, cy = k // PAIR, k % PAIR
-            on_border = (
-                cx % tc in (0, tc - 1) or cy % tc in (0, tc - 1)
-            )
-            rows.append((k, find(k), bx, by, bool(on_border)))
-        return pd.DataFrame(rows, columns=["cell", "root", "bx", "by", "border"])
-
-    # grouped-map over the pre-aggregated one-row-per-block frame: the
-    # agg output is already hash-clustered by (_bx,_by), so the
-    # grouped-map adds NO exchange. localCheckpoint keeps the
-    # cell-level roots (domain-sized: one row per occupied cell, the
-    # same class as the PageRank frontiers) for BOTH the border-merge
-    # collect below and the final attach join — previously the
-    # transient persist was dropped before execution and the whole
-    # block pass recomputed in the output job.
-    local = blocked.groupBy("_bx", "_by").applyInPandas(
-        local_cc, schema=roots_schema
-    ).localCheckpoint(eager=True)
-
-    # cross-block merge edges: border cell ↔ neighboring border cell in
-    # a DIFFERENT block → (root_a, root_b)
-    border = local.filter(F.col("border")).select(
-        "cell", "root", "bx", "by",
-        # floor-division decode (PAIR is a power of two so the double
-        # quotient is exact): (cell / PAIR).cast('long') truncates toward
-        # zero and mis-decodes negative cx, pairing wrong with pmod.
-        F.floor(F.col("cell") / F.lit(PAIR)).cast("long").alias("cx"),
-        F.pmod(F.col("cell"), F.lit(PAIR)).alias("cy"),
-    )
-    a = border.select(
-        F.col("root").alias("root_a"),
-        F.explode(neighbor_cells(F.col("cx"), F.col("cy"))).alias("cell"),
-        F.col("bx").alias("bx_a"), F.col("by").alias("by_a"),
-    )
-    b = border.select("cell", F.col("root").alias("root_b"), "bx", "by")
-    merge_edges = (
-        a.join(b, "cell")
-        .filter((F.col("bx_a") != F.col("bx")) | (F.col("by_a") != F.col("by")))
-        .select("root_a", "root_b")
-        .distinct()
-        .collect()
-    )
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in merge_edges:
-        ra, rb = find(r["root_a"]), find(r["root_b"])
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    mapping = [(k, find(k)) for k in list(parent)]
-    spark = points.sparkSession
-    if mapping:
-        map_df = spark.createDataFrame(mapping, ["root", "_groot"])
-        resolved = local.join(F.broadcast(map_df), "root", "left").select(
-            "cell", F.coalesce("_groot", "root").alias(out_col)
-        )
-    else:
-        resolved = local.select("cell", F.col("root").alias(out_col))
-    out = pts.join(resolved.withColumnRenamed("cell", "_cell"), "_cell")
-    return out.drop("_cell", "_cx", "_cy")
+    return {n: find(n) for n in parent}
+
+
+def _block_frame(roots: dict, outward: list[tuple[int, int]]) -> pd.DataFrame:
+    """A block pass's output: one ``own`` row (node, local root) per node
+    of the block, and one outward row (node of ANOTHER block, local root
+    of its neighbour here) per edge that leaves the block."""
+    return pd.DataFrame({
+        "node": [*roots, *(n for n, _ in outward)],
+        "root": [*roots.values(), *(r for _, r in outward)],
+        "own": [True] * len(roots) + [False] * len(outward),
+    })
+
+
+def _two_level(blocked: DataFrame, block_cc) -> DataFrame:
+    """(node, component): ``block_cc`` runs once per ``_block`` group and
+    returns a ``_block_frame``. The block roots are read twice, so they
+    are local-checkpointed: no CacheManager entry, released with the
+    plan. The outward rows, joined to the own rows of their node, link
+    the local roots of adjacent blocks. Like the root graph they yield,
+    they are O(block surface): they broadcast into that join, and the
+    root graph resolves on the driver and broadcasts back."""
+    local = blocked.groupBy("_block").applyInPandas(
+        block_cc, "node long, root long, own boolean"
+    ).localCheckpoint(eager=True)
+    own = local.filter(F.col("own"))
+    root_edges = (
+        own.select("node", F.col("root").alias("_root_b"))
+        .join(F.broadcast(local.filter(~F.col("own"))), "node")
+        .select("root", "_root_b")
+    )
+    mapping = min_root_components(root_edges.distinct().collect())
+    if not mapping:
+        return own.select("node", F.col("root").alias("component"))
+    map_df = local.sparkSession.createDataFrame(
+        list(mapping.items()), "root long, _groot long"
+    )
+    return own.join(F.broadcast(map_df), "root", "left").select(
+        "node", F.coalesce("_groot", "root").alias("component")
+    )
+
+
+def _grid_block_cc(pdf: pd.DataFrame) -> pd.DataFrame:
+    cells = [int(k) for k in pdf["_cells"].iloc[0]]
+    occupied = set(cells)
+    roots = min_root_components(
+        ((k, k + off) for k in cells for off in _FORWARD if k + off in occupied),
+        cells,
+    )
+    # a cross-block adjacency joins two border cells, and one of them
+    # reaches the other by a forward offset
+    outward = [
+        (k + off, roots[k])
+        for k in map(int, pdf["_border"].iloc[0])
+        for off in _FORWARD
+        if k + off not in occupied
+    ]
+    return _block_frame(roots, outward)
+
+
+def grid_components(points: DataFrame, grid_size: float) -> DataFrame:
+    """Append ``component`` = min cell key of the point's component.
+
+    Cells are ``tiling.cell_id`` keys; a row with no cell (NULL, NaN,
+    ±Inf or out-of-range coordinates) is left out of the output. Blocks
+    are ``BLOCK_CELLS`` × ``BLOCK_CELLS`` cells. ONE exchange groups the
+    point-level keys by block with ``collect_set`` (the map-side partial
+    set union dedups before the shuffle). A cell is on its block's
+    border when its cx or cy is the block's first or last; that is
+    decided here from the cell columns, and only border cells look for
+    neighbours in other blocks.
+    """
+    pts = points.withColumn("_cell", cell_id(F.col("x"), F.col("y"), grid_size)).filter(
+        F.col("_cell").isNotNull()
+    )
+    cx, cy = cell_x(F.col("x"), grid_size), cell_y(F.col("y"), grid_size)
+    edge = (0, BLOCK_CELLS - 1)
+    on_border = F.pmod(cx, F.lit(BLOCK_CELLS)).isin(*edge) | F.pmod(
+        cy, F.lit(BLOCK_CELLS)
+    ).isin(*edge)
+    blocked = pts.groupBy(
+        cell_key(F.floor(cx / F.lit(BLOCK_CELLS)), F.floor(cy / F.lit(BLOCK_CELLS))).alias("_block")
+    ).agg(
+        F.collect_set("_cell").alias("_cells"),
+        F.collect_set(F.when(on_border, F.col("_cell"))).alias("_border"),
+    )
+    comp = _two_level(blocked, _grid_block_cc).withColumnRenamed("node", "_cell")
+    return pts.join(comp, "_cell").drop("_cell")
+
+
+def _edge_block_cc(pdf: pd.DataFrame) -> pd.DataFrame:
+    src, dst = pdf["src"].tolist(), pdf["dst"].tolist()
+    inside = (pdf["_src_block"] == pdf["_block"]).tolist()
+    roots = min_root_components(
+        ((s, d) for s, d, i in zip(src, dst, inside) if i), dst
+    )
+    outward = [(s, roots[d]) for s, d, i in zip(src, dst, inside) if not i]
+    return _block_frame(roots, outward)
+
+
+def edge_components(
+    nodes: DataFrame, edges: DataFrame, block: Callable[[Column], Column]
+) -> DataFrame:
+    """(node, component) — min-node components of ``nodes`` (node) over
+    the symmetric edge list ``edges`` (src, dst). ``block`` maps a node
+    key Column to its block id. Any function of the key gives the same
+    components; a spatial one keeps the edges across blocks few, and
+    computing it from the key spares a join back to the node table.
+    Edges group by their dst block (symmetric edges, so each block sees
+    every edge touching it), each node as a self edge in its own block.
+    """
+    rows = edges.select("src", "dst").unionByName(
+        nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+    )
+    blocked = rows.select(
+        "src", "dst",
+        block(F.col("src")).alias("_src_block"),
+        block(F.col("dst")).alias("_block"),
+    )
+    return _two_level(blocked, _edge_block_cc)
 
 
 def size_filter(

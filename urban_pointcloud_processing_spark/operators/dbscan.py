@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .components import min_root_components
+
 
 def dbscan_windows(
     win_pts: DataFrame,
@@ -59,25 +61,16 @@ def dbscan_windows(
         nbr = d2 <= eps_sq  # includes self (d2 = 0)
         core = nbr.sum(axis=1) >= min_samples
 
-        # components over core-core eps pairs (union-find, min-id root)
-        parent = np.arange(n)
-
-        def find(a: int) -> int:
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
+        # components over core-core eps pairs; pids are sorted, so the
+        # min-index root is the min core point id
         core_idx = np.where(core)[0]
-        for i in core_idx:
-            for j in core_idx[core_idx > i]:
-                if nbr[i, j]:
-                    ra, rb = find(i), find(j)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
+        ci, cj = np.nonzero(np.triu(nbr[np.ix_(core_idx, core_idx)], 1))
+        roots = min_root_components(
+            zip(core_idx[ci].tolist(), core_idx[cj].tolist()), core_idx.tolist()
+        )
         cluster = np.full(n, -1, dtype=np.int64)
-        for i in core_idx:
-            cluster[i] = pids[find(i)]
+        for i, r in roots.items():
+            cluster[i] = pids[r]
         # border: nearest core neighbor, tie-break smaller pid (pids
         # are sorted ascending, so argmin over (d2, index) suffices)
         for i in range(n):

@@ -5,7 +5,8 @@ cluster's neighborhood (:751-760), binary-dilate/erode the occupancy
 grid, label connected regions per z-slice with scipy.ndimage, and test
 region bounding boxes. scipy is not in this container, so dilation,
 erosion and 2-D CC are implemented in pure NumPy (shift-stack
-dilation; two-pass union-find CC) — same semantics, no external dep.
+dilation; CC on the shared union-find, components.min_root_components)
+— same semantics, no external dep.
 
 Spark strategy: clusters are bounded (a 50 m tile's worth of points at
 most), so the whole morphology pass is one ``applyInPandas`` per
@@ -24,6 +25,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .components import min_root_components
 
 
 def binary_dilate(grid: np.ndarray, iterations: int = 1) -> np.ndarray:
@@ -55,51 +58,26 @@ def binary_erode(grid: np.ndarray, iterations: int = 1) -> np.ndarray:
 
 
 def label_regions(grid: np.ndarray) -> tuple[np.ndarray, int]:
-    """2-D 8-connected component labelling (union-find; the scipy
-    ndimage.label analog). Returns (labels, n_regions); 0 = background."""
-    labels = np.zeros(grid.shape, dtype=np.int64)
-    parent: dict[int, int] = {}
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    nxt = 1
-    nx, ny = grid.shape
-    for i in range(nx):
-        for j in range(ny):
-            if not grid[i, j]:
-                continue
-            nbs = []
-            for di, dj in ((-1, -1), (-1, 0), (-1, 1), (0, -1)):
-                a, b = i + di, j + dj
-                if 0 <= a < nx and 0 <= b < ny and labels[a, b]:
-                    nbs.append(find(int(labels[a, b])))
-            if not nbs:
-                labels[i, j] = nxt
-                parent[nxt] = nxt
-                nxt += 1
-            else:
-                m = min(nbs)
-                labels[i, j] = m
-                for r in nbs:
-                    ra, rb = find(r), find(m)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-    # second pass: canonicalize + densify ids
-    remap: dict[int, int] = {}
-    out_n = 0
-    for i in range(nx):
-        for j in range(ny):
-            if labels[i, j]:
-                r = find(int(labels[i, j]))
-                if r not in remap:
-                    out_n += 1
-                    remap[r] = out_n
-                labels[i, j] = remap[r]
-    return labels, out_n
+    """2-D 8-connected component labelling (the scipy ndimage.label
+    analog). Returns (labels, n_regions); 0 = background, and regions
+    are numbered in raster-scan order of their first pixel, which is the
+    order of their min flat indices (``min_root_components`` roots)."""
+    g = np.asarray(grid, dtype=bool)
+    nx, ny = g.shape
+    idx = np.arange(g.size).reshape(g.shape)
+    pairs = []
+    # the forward half of the 8-neighborhood: (i, j) ~ (i + di, j + dj)
+    for di, dj in ((0, 1), (1, -1), (1, 0), (1, 1)):
+        lo, hi = max(0, -dj), ny - max(0, dj)
+        src, dst = idx[: nx - di, lo:hi], idx[di:, lo + dj : hi + dj]
+        both = g[: nx - di, lo:hi] & g[di:, lo + dj : hi + dj]
+        pairs += zip(src[both].tolist(), dst[both].tolist())
+    on = np.flatnonzero(g).tolist()
+    roots = min_root_components(pairs, on)
+    number = {r: k + 1 for k, r in enumerate(sorted(set(roots.values())))}
+    labels = np.zeros(g.shape, dtype=np.int64)
+    labels.flat[on] = [number[roots[f]] for f in on]
+    return labels, len(number)
 
 
 MORPH_SCHEMA = StructType(
@@ -320,24 +298,18 @@ def search_armaturen(
         if not detections:
             return _empty_arm()
         # cross-slice merge: adjacent slices with overlapping u-extents
-        parent = list(range(len(detections)))
-
-        def find(a):
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
-        for i, a in enumerate(detections):
-            for j in range(i + 1, len(detections)):
-                b = detections[j]
-                if abs(a[0] - b[0]) == 1 and a[1] <= b[2] and b[1] <= a[2]:
-                    ra, rb = find(i), find(j)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
+        blob_of = min_root_components(
+            (
+                (i, j)
+                for i, a in enumerate(detections)
+                for j, b in enumerate(detections[i + 1:], i + 1)
+                if abs(a[0] - b[0]) == 1 and a[1] <= b[2] and b[1] <= a[2]
+            ),
+            range(len(detections)),
+        )
         blobs: dict[int, list[tuple]] = {}
         for i, det in enumerate(detections):
-            blobs.setdefault(find(i), []).append(det)
+            blobs.setdefault(blob_of[i], []).append(det)
         rows = []
         for bid, (_, dets) in enumerate(sorted(blobs.items())):
             rows.append(

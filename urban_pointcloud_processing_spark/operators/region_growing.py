@@ -27,10 +27,8 @@ Spark-first re-expression (voxel-level, like the rest of the engine):
    angle(Na, Nb) < threshold_angle — evaluated as
    dot > 0 AND dot² > cos²θ·|Na|²·|Nb|² (pure products, no acos) —
    plus ONE final frontier expansion for accepted-but-not-seed voxels.
-   CC runs as the ONE-PASS two-level scheme over the explicit gated
-   edge list (per-block union-find grouped-map + driver merge of the
-   O(surface) inter-block root graph) — the operators/components.py
-   design generalized to arbitrary edges.
+   That CC is ``components.edge_components`` over the gated edge list,
+   with blocks of ``BLOCK_VOXELS`` × ``BLOCK_VOXELS`` voxel columns.
 
 Scale notes (100 TB): the point→voxel aggregation is a map-side partial
 agg on the voxel key; everything after operates on the voxel table
@@ -45,10 +43,14 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..tiling import cell_key
+from .components import edge_components
+
 SHIFT = 1 << 17  # voxel key packing: ((vx*SHIFT)+vy)*SHIFT+vz
+BLOCK_VOXELS = 16  # edge-CC block side, in voxels
 
 DEFAULT_VOXEL = 5.0
 DEFAULT_ANGLE_DEG = 20.0  # reference default threshold_angle=20
@@ -196,114 +198,12 @@ def _gated_edges(vox: DataFrame, cos2: float) -> DataFrame:
     )
 
 
-def _edge_cc_two_level(nodes: DataFrame, edges: DataFrame,
-                       block_cells: int = 16,
-                       persists: list | None = None) -> DataFrame:
-    """(node, comp) — min-key components over an EXPLICIT edge list in
-    ONE pass (no iteration): nodes partition into spatial blocks
-    (decoded from the voxel key), intra-block edges resolve with a
-    per-block union-find grouped-map, and the inter-block ROOT graph —
-    bounded by block surface area — resolves on the driver and
-    broadcasts back (the components.py two-level design, generalized
-    to gated edges). Replaces the O(rounds × jobs) min-label loop whose
-    fixed per-round scheduling cost dominated wall time."""
-    import pandas as pd
-
-    bs = block_cells
-
-    def _block(key: str) -> tuple:
-        """Block coords decoded ARITHMETICALLY from the packed voxel key
-        — no join back to the node table (the old version shuffled the
-        edge list twice just to attach _bx/_by)."""
-        vx = F.floor(F.col(key) / F.lit(SHIFT * SHIFT)).cast("long")
-        vy = F.pmod(F.floor(F.col(key) / F.lit(SHIFT)), F.lit(SHIFT))
-        return (
-            F.floor(vx / F.lit(bs)).cast("long"),
-            F.floor(vy / F.lit(bs)).cast("long"),
-        )
-
-    sbx, sby = _block("src")
-    dbx, dby = _block("dst")
-    nbx, nby = _block("node")
-    blocked = nodes.select("node", nbx.alias("_bx"), nby.alias("_by"))
-    ed = edges.select(
-        "src", "dst",
-        sbx.alias("_sbx"), sby.alias("_sby"),
-        dbx.alias("_bx"), dby.alias("_by"),
-    )
-    intra = ed.filter(
-        (F.col("_sbx") == F.col("_bx")) & (F.col("_sby") == F.col("_by"))
-    ).select("src", "dst", "_bx", "_by")
-    # per-block union-find over nodes + intra edges (edges are
-    # symmetric, so grouping by the src block sees every intra edge)
-    node_rows = blocked.select(
-        F.col("node").alias("src"), F.col("node").alias("dst"), "_bx", "_by"
-    )
-    roots_schema = "node long, root long"
-
-    def local_cc(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict[int, int] = {}
-
-        def find(a: int) -> int:
-            parent.setdefault(a, a)
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
-        for s, d in zip(pdf["src"], pdf["dst"]):
-            ra, rb = find(int(s)), find(int(d))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return pd.DataFrame(
-            {"node": list(parent), "root": [find(k) for k in parent]}
-        )
-
-    local = (
-        intra.unionByName(node_rows)
-        .groupBy("_bx", "_by")
-        .applyInPandas(local_cc, schema=roots_schema)
-        .persist()
-    )
-    if persists is not None:
-        persists.append(local)
-    inter = ed.filter(
-        (F.col("_sbx") != F.col("_bx")) | (F.col("_sby") != F.col("_by"))
-    ).select("src", "dst")
-    root_edges = (
-        inter.join(
-            local.select(F.col("node").alias("src"),
-                         F.col("root").alias("root_a")), "src")
-        .join(
-            local.select(F.col("node").alias("dst"),
-                         F.col("root").alias("root_b")), "dst")
-        .select("root_a", "root_b")
-        .distinct()
-        .collect()
-    )
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in root_edges:
-        ra, rb = find(r["root_a"]), find(r["root_b"])
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    mapping = [(k, find(k)) for k in list(parent)]
-    spark = nodes.sparkSession
-    if mapping:
-        map_df = spark.createDataFrame(mapping, ["root", "_groot"])
-        out = local.join(F.broadcast(map_df), "root", "left").select(
-            "node", F.coalesce("_groot", "root").alias("comp")
-        )
-    else:
-        out = local.select("node", F.col("root").alias("comp"))
-    return out
+def _voxel_block(key: Column) -> Column:
+    """The ``BLOCK_VOXELS`` × ``BLOCK_VOXELS`` (x, y) column block of a
+    packed voxel key, decoded arithmetically from the key."""
+    vx = F.floor(key / F.lit(SHIFT * SHIFT))
+    vy = F.pmod(F.floor(key / F.lit(SHIFT)), F.lit(SHIFT))
+    return cell_key(F.floor(vx / F.lit(BLOCK_VOXELS)), F.floor(vy / F.lit(BLOCK_VOXELS)))
 
 
 def region_grow(
@@ -338,18 +238,15 @@ def region_grow(
         .join(capable.select(F.col("node").alias("dst")), "dst")
         .select("src", "dst")
     )
-    cc_persists: list = []
-    comp = _edge_cc_two_level(
-        capable.select("node"), cap_edges, persists=cc_persists
-    )
+    comp = edge_components(capable.select("node"), cap_edges, _voxel_block)
     grown_comps = (
         comp.join(
             capable.filter(F.col("_seed")).select("node"), "node"
         )
-        .select("comp")
+        .select("component")
         .distinct()
     )
-    region_seeds = comp.join(F.broadcast(grown_comps), "comp").select(
+    region_seeds = comp.join(F.broadcast(grown_comps), "component").select(
         F.col("node").alias("vcell")
     )
     frontier = (
@@ -369,8 +266,6 @@ def region_grow(
     )
     vox.unpersist()
     edges.unpersist()
-    for df in cc_persists:
-        df.unpersist()
     # accepted is checkpointed, so ptsv's only remaining consumer is the
     # single final join — unpersist now (recomputing the map-only voxel
     # columns once costs ~a cache read) so no cached plan outlives the

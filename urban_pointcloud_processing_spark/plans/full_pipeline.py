@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 
 from .. import geocode as G
 from ..labels import Labels
-from ..operators.components import grid_components_two_level, size_filter
+from ..operators.components import grid_components, size_filter
 from ..operators.dbscan import dbscan_sql, dbscan_windows
 from ..operators.geometry import cluster_stats, cluster_stats_sql
 from ..operators.neighbors import binned_statistic_2d
@@ -177,7 +177,7 @@ def _claims_ground_refine(u: DataFrame) -> DataFrame:
         & ~is_g
     ).select("page_id", "x", "y")
     comps = size_filter(
-        grid_components_two_level(unk, grid_size=REFINE_GRID),
+        grid_components(unk, grid_size=REFINE_GRID),
         REFINE_MIN_COMP,
     ).filter(F.col("component") != -1)
     cells = comps.select(
@@ -219,7 +219,7 @@ def _claims_noise(u: DataFrame) -> DataFrame:
     )
     small = (
         size_filter(
-            grid_components_two_level(gb, grid_size=NOISE_GRID),
+            grid_components(gb, grid_size=NOISE_GRID),
             NOISE_MIN_COMP,
         )
         .filter(F.col("component") == -1)
@@ -297,7 +297,7 @@ def _claims_car(u: DataFrame) -> DataFrame:
     band = u.filter(
         (dz >= F.lit(CAR_BAND[0])) & (dz <= F.lit(CAR_BAND[1]))
     ).select("page_id", "x", "y")
-    comps = grid_components_two_level(band, grid_size=CAR_GRID)
+    comps = grid_components(band, grid_size=CAR_GRID)
     stats = cluster_stats(comps)
     ext_x = F.col("x_max") - F.col("x_min")
     ext_y = F.col("y_max") - F.col("y_min")
@@ -454,7 +454,7 @@ def _claims_furniture(u: DataFrame, bgt_type: str, label: int) -> DataFrame:
     band = u.filter((dz > SF_BAND[0]) & (dz <= SF_BAND[1])).select(
         "page_id", "x", "y", "z", "gz"
     )
-    comps = grid_components_two_level(band, grid_size=SF_GRID)
+    comps = grid_components(band, grid_size=SF_GRID)
     # comps passes gz through; derive the exact integer ground from it
     # (gz = 2 + k/100 ⇒ round(gz·100) recovers 200 + k exactly)
     assign = comps.select(
@@ -646,7 +646,7 @@ def _claims_furniture_family(u: DataFrame) -> DataFrame:
     band = u.filter((dz > SF_BAND[0]) & (dz <= SF_BAND[1])).select(
         "page_id", "x", "y", "z", "gz"
     )
-    comps = grid_components_two_level(band, grid_size=SF_GRID)
+    comps = grid_components(band, grid_size=SF_GRID)
     assign = comps.select(
         "page_id", "component", "x", "y", "z",
         F.round(F.col("gz") * 100.0).cast("long").alias("gz_c"),
@@ -710,7 +710,7 @@ def _claims_grower(lbl_df: DataFrame, label: int) -> DataFrame:
         (dz >= F.lit(GROW_BAND[0])) & (dz < F.lit(GROW_BAND[1]))
         & ((F.col("label") == 0) | (F.col("label") == int(label)))
     ).select("page_id", "x", "y", "label")
-    comps = grid_components_two_level(band, grid_size=GROW_GRID)
+    comps = grid_components(band, grid_size=GROW_GRID)
     frac = comps.groupBy("component").agg(
         (
             F.sum((F.col("label") == int(label)).cast("int")).cast("double")

@@ -282,7 +282,7 @@ def q_ground_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AHNFuser refine_ground: for every ground point, whether it falls
     under the dilated footprint of a ≥min-size UNKNOWN component in the
     band just above ground (and is therefore removed from GROUND)."""
-    from .operators.components import grid_components_two_level, size_filter
+    from .operators.components import grid_components, size_filter
 
     pages = pages_from_orders(spark, sf_dir)
     # enriched feeds both the ground and the unknown band — one scan
@@ -301,7 +301,7 @@ def q_ground_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         & ~is_ground
     ).select("page_id", "x", "y")
     comps = size_filter(
-        grid_components_two_level(unk, grid_size=_RG_GRID), _RG_MIN_COMP
+        grid_components(unk, grid_size=_RG_GRID), _RG_MIN_COMP
     ).filter(F.col("component") != -1)
     cells = comps.select(
         F.floor(F.col("x") / F.lit(_RG_GRID)).cast("long").alias("cx"),
@@ -605,8 +605,9 @@ FROM ground g JOIN comp c ON g.cx * 2147483648 + g.cy = c.cell
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid CC (1 m cells, 8-neighborhood) over ground-band pages;
     component id canonicalized to min cell key. Engine side runs the
-    iterative min-propagation + pointer-jumping DataFrame loop."""
-    from .operators.components import grid_components_two_level as grid_components
+    two-level ``grid_components``: one union-find per 64×64-cell block,
+    then a driver merge of the roots of adjacent blocks."""
+    from .operators.components import grid_components
 
     pages = pages_from_orders(spark, sf_dir)
     enriched = R.with_raster(pages, R.raster_df(spark))
@@ -1868,7 +1869,7 @@ def q_region_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seed-threshold region fill (reference label_connected_comp.py:
     111-123): ground-band components where >30% of points are road-PIP
     seeds get the road label grown to every point."""
-    from .operators.components import grid_components_two_level as grid_components
+    from .operators.components import grid_components
 
     pages = pages_from_orders(spark, sf_dir)
     enriched = R.with_raster(pages, R.raster_df(spark))
@@ -4042,7 +4043,7 @@ from .operators.geometry import cluster_mbr, cluster_stats, cluster_stats_sql  #
 def _ground_with_comp(
     spark: SparkSession, sf_dir: str, grid: float = 1.0
 ) -> DataFrame:
-    from .operators.components import grid_components_two_level as grid_components
+    from .operators.components import grid_components
 
     pages = pages_from_orders(spark, sf_dir)
     enriched = R.with_raster(pages, R.raster_df(spark))
@@ -4466,7 +4467,7 @@ def q_layer_grower(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LayerLCC: for each height band above the interpolated ground,
     run grid CC and grow the building seed label to components whose
     seed fraction exceeds the threshold; bands fold sequentially."""
-    from .operators.components import grid_components_two_level as grid_components
+    from .operators.components import grid_components
 
     pages = pages_from_orders(spark, sf_dir)
     enriched = R.with_raster(pages, R.raster_df(spark))
@@ -4866,7 +4867,7 @@ def q_street_furniture_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vs exact integer-mm mean ground) and dimension window, whose
     centroid lies within max_dist of a bench/bin registry object, label
     all their points CITY_BENCH (80)."""
-    from .operators.components import grid_components_two_level
+    from .operators.components import grid_components
 
     pages = pages_from_orders(spark, sf_dir)
     enriched = R.with_raster(pages, R.raster_df(spark))
@@ -4874,7 +4875,7 @@ def q_street_furniture_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
     band = enriched.filter(
         (dz > _SF_BAND[0]) & (dz <= _SF_BAND[1])
     ).select("page_id", "x", "y", "z").localCheckpoint(eager=True)
-    comps = grid_components_two_level(band, grid_size=_SF_GRID)
+    comps = grid_components(band, grid_size=_SF_GRID)
     # exact integer ground-z: gz = 2 + k/100 → gz_c = 200 + k (BIGINT)
     gz_c = (
         F.lit(200)

@@ -40,6 +40,14 @@ LEAK_PRONE = [
     "bloom_decontaminate",
     "cms_heavy_hitters",
     "domain_pagerank",
+    # the fuser detectors shared with the 15-stage fold
+    # (plans/full_pipeline.py), which localCheckpoint their inputs
+    "pole_fuser",
+    "street_furniture_fuser",
+    "cable_fuser_labels",
+    "ground_refine",
+    "noise_filter",
+    "car_fuser",
 ]
 
 

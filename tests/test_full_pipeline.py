@@ -63,24 +63,25 @@ def test_fused_families_match_sequential_chain(spark):
     CC partition unchanged); pole fusing detects over the pre-family
     unlabelled set, so this test pins output identity against the
     strictly sequential reference chain on the fixture: the same
-    stages with each family replaced by its per-type steps, the mask
-    recomputed before every one (src/upcp/pipeline.py:88-95), run
-    through the same ``Pipeline.run``."""
+    stages with each family replaced by its per-type steps — the
+    family detector called with one (stage, bgt_type, label) at a time,
+    the mask recomputed before every one (src/upcp/pipeline.py:88-95) —
+    run through the same ``Pipeline.run``."""
     import urban_pointcloud_processing_spark.plans.full_pipeline as fp
     from urban_pointcloud_processing_spark.plans.pipeline import Pipeline
 
     def per_type(prefix, claims, family):
         return [
-            (f"{prefix}_{btype}", [int(lab)],
-             lambda lbl, b=btype, la=int(lab): fp._fold(
-                 lbl, claims(fp._unl(lbl), b, la)))
-            for _, btype, lab in family
+            (f"{prefix}_{spec[1]}", [int(spec[2])],
+             lambda lbl, spec=spec: fp._fold_family(
+                 lbl, claims(fp._unl(lbl), (spec,))))
+            for spec in family
         ]
 
     families = {
-        "pole_family": per_type("pole", fp._claims_pole, fp.POLE_STAGES),
+        "pole_family": per_type("pole", fp.pole_claims, fp.POLE_STAGES),
         "furniture_family": per_type(
-            "furniture", fp._claims_furniture, fp.FURN_STAGES),
+            "furniture", fp.furniture_claims, fp.FURN_STAGES),
     }
     chain = [s for stage in fp.pipeline_stages()
              for s in families.get(stage[0], [stage])]
@@ -96,6 +97,41 @@ def test_fused_families_match_sequential_chain(spark):
     fused = {r["page_id"]: r["label"]
              for r in full_pipeline_labels(spark, SF_DIR).collect()}
     assert fused == seq
+
+
+def test_component_near_both_furniture_types(spark, monkeypatch):
+    """A band cluster at the midpoint of registry objects bank 8 and
+    afvalbak 14 (30.2 m apart) lies within 20 m of both. The standalone
+    street_furniture_fuser emits each member page once with CITY_BENCH
+    (80); the furniture family fold gives it RUBBISH_BIN (81), because
+    the afvalbak stage (10) precedes the bank stage (11)."""
+    import urban_pointcloud_processing_spark.plans.full_pipeline as fp
+    from urban_pointcloud_processing_spark import queries as Q
+    from urban_pointcloud_processing_spark.sources.layers import point_layer
+
+    objs = {i: (x, y) for _, i, x, y, _ in point_layer()}
+    mx = (objs[8][0] + objs[14][0]) / 2
+    my = (objs[8][1] + objs[14][1]) / 2
+    gz = 2.0
+    # a 3 × 3 grid 1 m apart (extent 2 m), 0.5 m above ground, one
+    # point 0.8 m up (cluster height 0.8 m); page 9 is above the band
+    rows = [(i * 3 + j, mx - 1.0 + i, my - 1.0 + j,
+             gz + (0.8 if (i, j) == (1, 1) else 0.5), gz)
+            for i in range(3) for j in range(3)]
+    rows.append((9, mx, my, gz + 3.0, gz))
+    pages = spark.createDataFrame(rows, "page_id long, x double, y double, "
+                                        "z double, gz double")
+    members = list(range(9))
+
+    monkeypatch.setattr(Q, "_pages_gz", lambda spark, sf_dir: pages)
+    got = [(r["page_id"], r["label"])
+           for r in Q.q_street_furniture_fuser(spark, SF_DIR).collect()]
+    assert sorted(got) == [(p, int(Labels.CITY_BENCH)) for p in members]
+
+    step = {name: s for name, _, s in fp.pipeline_stages()}["furniture_family"]
+    folded = {r["page_id"]: r["label"]
+              for r in step(pages.withColumn("label", F.lit(0))).collect()}
+    assert folded == {**{p: int(Labels.RUBBISH_BIN) for p in members}, 9: 0}
 
 
 def test_pipeline_kill_and_resume_from_stage_k(spark):

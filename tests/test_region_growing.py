@@ -11,9 +11,13 @@ from __future__ import annotations
 import pytest
 
 from urban_pointcloud_processing_spark.operators.region_growing import (
+    BLOCK_VOXELS,
+    SHIFT,
+    _voxel_block,
     region_grow,
     voxel_normals,
 )
+from urban_pointcloud_processing_spark.tiling import CELL_SPAN
 
 
 def _plane_points(spark, seed_x_max=5.0):
@@ -165,3 +169,23 @@ def test_region_grow_matches_reference_bfs_closure(spark):
 
     want = {r["page_id"]: (r["vcell"] in accepted) for r in ptsv}
     assert got == want
+
+
+def test_voxel_block_decodes_signed_fields(spark):
+    """_voxel_block recovers (vx, vy) from the packed key
+    ((vx·SHIFT)+vy)·SHIFT+vz exactly when vy or vz is negative: (5, 0,
+    −1) shares the block of (5, 0, 0), and (5, −1, 0) does not alias
+    it."""
+    from pyspark.sql import functions as F
+
+    voxels = [(5, 0, -1), (5, 0, 0), (5, -1, 0), (-3, -2, -1),
+              (17, -17, 5), (-40000, 40000, -65536), (65535, -65536, 65535)]
+    rows = [(i, (vx * SHIFT + vy) * SHIFT + vz)
+            for i, (vx, vy, vz) in enumerate(voxels)]
+    df = spark.createDataFrame(rows, "i int, key long")
+    got = dict(df.select("i", _voxel_block(F.col("key"))).collect())
+    want = {i: (vx // BLOCK_VOXELS) * CELL_SPAN + vy // BLOCK_VOXELS
+            for i, (vx, vy, _) in enumerate(voxels)}
+    assert got == want
+    assert got[0] == got[1] != got[2]
+    assert got[3] == -1 * CELL_SPAN - 1  # block (floor(-3/16), floor(-2/16))

@@ -18,7 +18,7 @@ the DuckDB oracle matches bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -30,6 +30,34 @@ from pyspark.sql.types import (
 
 def _mm(c):
     return F.round(c * F.lit(1000.0)).cast("long")
+
+
+def segment_d2(px: Column, py: Column) -> Column:
+    """Squared distance from (px, py) to the segment in the columns
+    (x1, y1)-(x2, y2): clamped projection, closed-form rational. The
+    same arithmetic as ``segment_d2_sql``, so both engines agree
+    bit-for-bit (the reference's shapely buffer-intersects test is this
+    distance against the buffer radius)."""
+    x1, y1, x2, y2 = (F.col(c) for c in ("x1", "y1", "x2", "y2"))
+    l2 = (x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1)
+    traw = ((px - x1) * (x2 - x1) + (py - y1) * (y2 - y1)) / l2
+    t = F.least(F.greatest(traw, F.lit(0.0)), F.lit(1.0))
+    dx = px - (x1 + t * (x2 - x1))
+    dy = py - (y1 + t * (y2 - y1))
+    return dx * dx + dy * dy
+
+
+def segment_d2_sql(px: str, py: str) -> str:
+    """``segment_d2`` as DuckDB text over a segment aliased ``s``."""
+    l2 = "((s.x2 - s.x1) * (s.x2 - s.x1) + (s.y2 - s.y1) * (s.y2 - s.y1))"
+    traw = (
+        f"((({px} - s.x1) * (s.x2 - s.x1) + ({py} - s.y1) * (s.y2 - s.y1))"
+        f" / {l2})"
+    )
+    t = f"LEAST(GREATEST({traw}, 0.0), 1.0)"
+    dx = f"({px} - (s.x1 + {t} * (s.x2 - s.x1)))"
+    dy = f"({py} - (s.y1 + {t} * (s.y2 - s.y1)))"
+    return f"({dx} * {dx} + {dy} * {dy})"
 
 
 def cluster_stats(with_comp: DataFrame, comp_col: str = "component") -> DataFrame:

@@ -200,9 +200,18 @@ def _gated_edges(vox: DataFrame, cos2: float) -> DataFrame:
 
 def _voxel_block(key: Column) -> Column:
     """The ``BLOCK_VOXELS`` × ``BLOCK_VOXELS`` (x, y) column block of a
-    packed voxel key, decoded arithmetically from the key."""
-    vx = F.floor(key / F.lit(SHIFT * SHIFT))
-    vy = F.pmod(F.floor(key / F.lit(SHIFT)), F.lit(SHIFT))
+    packed voxel key. The signed fields are decoded exactly: the low
+    field is the key's residue recentred into [−SHIFT/2, SHIFT/2), and
+    removing it leaves a multiple of SHIFT to shift down."""
+    bits, half = SHIFT.bit_length() - 1, F.lit(SHIFT // 2)
+
+    def low(v: Column) -> Column:
+        return F.pmod(v + half, F.lit(SHIFT)) - half
+
+    vz = low(key)
+    vxy = F.shiftright(key - vz, bits)
+    vy = low(vxy)
+    vx = F.shiftright(vxy - vy, bits)
     return cell_key(F.floor(vx / F.lit(BLOCK_VOXELS)), F.floor(vy / F.lit(BLOCK_VOXELS)))
 
 

@@ -40,12 +40,19 @@ WITH RECURSIVE query: chained ``l{k}`` label states, per-stage
 prefixed CTE chains (grid-CC reachability closures, three DBSCAN
 chains, PCA linearity, rectangle-overlap, seed-fraction growth).
 
-Stage parameters reuse the fixture-scaled values of the standalone
-queries (queries.py) — each stage is separately green there; this
-module is their composition. The one omission vs the reference chain:
-CableFuser's armatuur (suspended-streetlight) sub-step stays the
-standalone `armatuur_search` composite (NumPy morphology grouped-map,
-oracle-exact there); its CABLE/TRAM_CABLE labelling is stage 5 here.
+Each fuser's detector is defined once, here, and takes its input
+frame (page_id, x, y, z, gz) and, for the pole and furniture fusers,
+its (stage, bgt_type, label) stages as arguments: the fold calls it on
+the unlabelled subset with the raster ``gz``; the standalone queries
+in queries.py call the same function on all pages with the
+closed-form ground height (``raster.ground_z_col``), and they read
+their fixture-scaled parameters from the constants below. The oracle
+SQL of both stays separate text (queries.py, ``full_pipeline_sql``).
+
+The one omission vs the reference chain: CableFuser's armatuur
+(suspended-streetlight) sub-step stays the standalone
+`armatuur_search` composite (NumPy morphology grouped-map, oracle-exact
+there); its CABLE/TRAM_CABLE labelling is stage 5 here.
 The reference only runs the armatuur search on cable clusters with
 > 100 points (cable_fuser.py:683 ``np.sum(cable_mask) > 100``) — the
 fixture's densest cable cell has 8 points (sf0.01), so the sub-step
@@ -55,14 +62,19 @@ its full grouped-map + oracle cost for a guaranteed-empty claim set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import geocode as G
 from ..labels import Labels
 from ..operators.components import grid_components, size_filter
 from ..operators.dbscan import dbscan_sql, dbscan_windows
-from ..operators.geometry import cluster_stats, cluster_stats_sql
+from ..operators.geometry import (
+    cluster_stats,
+    cluster_stats_sql,
+    segment_d2,
+    segment_d2_sql,
+)
 from ..operators.neighbors import binned_statistic_2d
 from ..operators.pca import pca_cell_features
 from ..sources import raster as R
@@ -83,9 +95,9 @@ from .pipeline import Pipeline, Processor
 # ---------------------------------------------------------------------
 
 GROUND_EPS = 0.2                    # ahn_fuser.py:159 epsilon
-REFINE_BAND = (0.2, 1.5)            # ahn_fuser.py:96-125 refine band
-REFINE_GRID = 1.5
-REFINE_MIN_COMP = 5
+REFINE_BAND = (0.2, 1.5)            # ahn_fuser.py:96-125 (ref 0.02/0.5)
+REFINE_GRID = 1.5                   # ref grid_size 0.4 (sparse pages)
+REFINE_MIN_COMP = 5                 # ref min_comp_size 50
 NOISE_EPS = 0.2                     # noise_filter.py:72-74
 NOISE_MIN_COMP = 5                  # noise_filter.py:66-67 (ref 100)
 NOISE_GRID = 1.0
@@ -93,8 +105,9 @@ BUILD_EPS = 0.2                     # building_fuser.py:83-95 offset
 CABLE_RES = 5.0                     # cable_fuser.py:133-149
 CABLE_LIN = 0.9
 CABLE_MIN_PTS = 4
-TRAM_BUF = 2.5                      # cable_fuser tram rule
-TRAM_MAX_H = 8.0
+TRAM_BUF = 2.5                      # tram rule: track buffer ~2 + cable
+                                    # line buffer 0.5
+TRAM_MAX_H = 8.0                    # ref max_tramcable_height, scaled
 CAR_BAND = (-0.2, 2.0)              # car_fuser.py: above-surface window
 # 1.5 m CC grid: at sf0.01 band density a 3 m grid percolates into one
 # giant component that the ≤20 m dimension window rejects (car stage
@@ -103,7 +116,14 @@ CAR_GRID = 1.5
 CAR_MAX_EXT = 20.0
 CAR_PAD = 0.5
 CAR_MIN_PCT = 20.0                  # car_fuser.py:107 min_component_overlap
-POLE = {                            # pole_fuser.py:60-290 (see queries.py)
+# pole_fuser.py:60-290, fixture-scaled (reference defaults in parens —
+# the sf fixture is ~10⁴× sparser than LiDAR, so radii/eps scale up
+# while the chain's semantics stay identical): search_pad 6 (1.5), seed
+# z-band [0.5, 6.0] above ground (plane_height±0.1), DBSCAN eps 2.5
+# (0.05) / min_samples 4 (5), max_r 6 (0.5), candidate match buffer 3
+# (0.1), r_mult 1.5 (1.5), label_height 8 (4), object match radius 15
+# (1.2).
+POLE = {
     "search_r": 6.0, "zlo": 0.5, "zhi": 6.0,
     "eps": 2.5, "min_samples": 4,
     "max_r": 6.0, "match_buf": 3.0,
@@ -111,10 +131,11 @@ POLE = {                            # pole_fuser.py:60-290 (see queries.py)
     "obj_max_dist_sq": 225.0,
 }
 SF_BAND = (0.2, 1.0)                # street_furniture_fuser.py:40-110
-SF_GRID = 2.0
-SF_HEIGHT = (0.4, 1.0)
-SF_EXT = (1.5, 20.0)
-SF_MAX_D2 = 400.0
+SF_GRID = 2.0                       # CC grid (denser band than ground)
+SF_HEIGHT = (0.4, 1.0)              # cluster height above mean ground
+SF_EXT = (1.5, 20.0)                # axis-extent window (reference MBR
+                                    # window; rotated MBR: car_fuser_mbr)
+SF_MAX_D2 = 400.0                   # ≤ 20 m to a registry object
 GROW_BAND = (0.5, 2.5)              # layer_lcc.py:70-136 (one band here)
 GROW_GRID = 1.0
 GROW_FRAC = 0.1
@@ -161,10 +182,14 @@ def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _claims_ground_refine(u: DataFrame) -> DataFrame:
-    """Stage 1 — AHNFuser ground with refine_ground: ground-band points
-    NOT under the dilated footprint of a ≥min-size unknown component
-    just above the surface (queries.ground_refine, green standalone)."""
+def ground_refine(u: DataFrame) -> DataFrame:
+    """AHNFuser ground with refine_ground (ahn_fuser.py:96-125): every
+    ground-band point of ``u`` (|z − gz| < GROUND_EPS) with ``removed``
+    true where it lies under the one-cell-dilated footprint of a
+    ≥REFINE_MIN_COMP component of the non-ground points just above the
+    surface. The reference buffers an alpha-shape hull of each
+    component; on the gridded fixture the footprint is exactly the
+    component's occupied cells dilated by one cell. (page_id, removed)"""
     is_g = F.abs(F.col("z") - F.col("gz")) < GROUND_EPS
     ground = u.filter(is_g).select(
         "page_id",
@@ -203,16 +228,15 @@ def _claims_ground_refine(u: DataFrame) -> DataFrame:
         .distinct()
         .withColumn("_fp", F.lit(True))
     )
-    return (
-        ground.join(F.broadcast(fp), ["cx", "cy"], "left")
-        .filter(F.col("_fp").isNull())
-        .select("page_id", F.lit(int(Labels.GROUND)).alias("lbl"))
+    return ground.join(F.broadcast(fp), ["cx", "cy"], "left").select(
+        "page_id", F.col("_fp").isNotNull().alias("removed")
     )
 
 
-def _claims_noise(u: DataFrame) -> DataFrame:
-    """Stage 3 — NoiseFilter: below interpolated ground OR member of a
-    too-small ground-band component among the remaining points."""
+def noise_pages(u: DataFrame) -> DataFrame:
+    """NoiseFilter (noise_filter.py:15-84): the pages of ``u`` below the
+    interpolated ground (z − gz < −NOISE_EPS, :72-74) or in a ground-band
+    component of fewer than NOISE_MIN_COMP points (:66-67). (page_id)"""
     below = u.filter(F.col("z") - F.col("gz") < -NOISE_EPS).select("page_id")
     gb = u.filter(F.abs(F.col("z") - F.col("gz")) < NOISE_EPS).select(
         "page_id", "x", "y"
@@ -225,63 +249,75 @@ def _claims_noise(u: DataFrame) -> DataFrame:
         .filter(F.col("component") == -1)
         .select("page_id")
     )
+    return below.unionByName(small).distinct()
+
+
+def cable_cells(u: DataFrame) -> DataFrame:
+    """CableFuser cable detection (cable_fuser.py:133-149): the
+    CABLE_RES cells of ``u`` with PCA linearity above CABLE_LIN and at
+    least CABLE_MIN_PTS points, each cell one cluster.
+    (cell_x, cell_y, cluster_id)"""
     return (
-        below.unionByName(small)
-        .distinct()
-        .select("page_id", F.lit(int(Labels.NOISE)).alias("lbl"))
-    )
-
-
-def _claims_cable(u: DataFrame) -> DataFrame:
-    """Stage 5 — CableFuser labelling: linear 5 m cells → member points
-    → tram-track buffered-distance rule → TRAM_CABLE / CABLE."""
-    spark = u.sparkSession
-    feats = pca_cell_features(u, CABLE_RES, 3)
-    cables = feats.filter(
-        (F.col("linearity") > CABLE_LIN) & (F.col("n_points") >= CABLE_MIN_PTS)
-    ).select(
-        "cell_x", "cell_y",
-        (F.col("cell_x") * F.lit(100000) + F.col("cell_y")).alias("cluster_id"),
-    )
-    members = (
-        u.withColumns(
-            {
-                "cell_x": F.floor(F.col("x") / F.lit(CABLE_RES)).cast("long"),
-                "cell_y": F.floor(F.col("y") / F.lit(CABLE_RES)).cast("long"),
-            }
+        pca_cell_features(u, CABLE_RES, 3)
+        .filter(
+            (F.col("linearity") > CABLE_LIN)
+            & (F.col("n_points") >= CABLE_MIN_PTS)
         )
-        .join(F.broadcast(cables), ["cell_x", "cell_y"])
         .select(
-            "cluster_id", "page_id", "x", "y",
-            (F.col("z") - F.col("gz")).alias("h"),
+            "cell_x", "cell_y",
+            (F.col("cell_x") * F.lit(100000) + F.col("cell_y")).alias(
+                "cluster_id"
+            ),
         )
-        .localCheckpoint(eager=True)
     )
-    segs = line_segments_df(spark).select("x1", "y1", "x2", "y2")
-    l2 = (F.col("x2") - F.col("x1")) * (F.col("x2") - F.col("x1")) + (
-        F.col("y2") - F.col("y1")
-    ) * (F.col("y2") - F.col("y1"))
-    traw = (
-        (F.col("x") - F.col("x1")) * (F.col("x2") - F.col("x1"))
-        + (F.col("y") - F.col("y1")) * (F.col("y2") - F.col("y1"))
-    ) / l2
-    t = F.least(F.greatest(traw, F.lit(0.0)), F.lit(1.0))
-    dx = F.col("x") - (F.col("x1") + t * (F.col("x2") - F.col("x1")))
-    dy = F.col("y") - (F.col("y1") + t * (F.col("y2") - F.col("y1")))
+
+
+def cable_members(u: DataFrame) -> DataFrame:
+    """The rows of ``u`` inside a cable cell, with its columns plus
+    cell_x, cell_y and cluster_id."""
+    return u.withColumns(
+        {
+            "cell_x": F.floor(F.col("x") / F.lit(CABLE_RES)).cast("long"),
+            "cell_y": F.floor(F.col("y") / F.lit(CABLE_RES)).cast("long"),
+        }
+    ).join(F.broadcast(cable_cells(u)), ["cell_x", "cell_y"])
+
+
+def tram_verdict(members: DataFrame) -> DataFrame:
+    """Tram-cable rule (_classify_tram_cables, cable_fuser.py:462-503)
+    per cable cluster of ``members`` (cluster_id, x, y, z, gz): TRAM when
+    a member lies within TRAM_BUF of a tram-track segment and the
+    lowest member is below TRAM_MAX_H above ground.
+    (cluster_id, n_points, min_track_d2, min_height, is_tram)"""
+    segs = line_segments_df(members.sparkSession).select("x1", "y1", "x2", "y2")
     trackd = (
         members.crossJoin(F.broadcast(segs))
         .groupBy("cluster_id")
-        .agg(F.min(dx * dx + dy * dy).alias("min_track_d2"))
+        .agg(F.min(segment_d2(F.col("x"), F.col("y"))).alias("min_track_d2"))
     )
-    hstats = members.groupBy("cluster_id").agg(F.min("h").alias("min_height"))
-    verdict = hstats.join(trackd, "cluster_id").select(
-        "cluster_id",
+    stats = members.groupBy("cluster_id").agg(
+        F.count("*").alias("n_points"),
+        F.min(F.col("z") - F.col("gz")).alias("min_height"),
+    )
+    return stats.join(trackd, "cluster_id").select(
+        "cluster_id", "n_points", "min_track_d2", "min_height",
         (
             (F.col("min_track_d2") <= F.lit(TRAM_BUF ** 2))
             & (F.col("min_height") < F.lit(TRAM_MAX_H))
         ).alias("is_tram"),
     )
-    return members.join(F.broadcast(verdict), "cluster_id").select(
+
+
+def cable_claims(u: DataFrame) -> DataFrame:
+    """CableFuser labelling (get_labels, cable_fuser.py:690-745): every
+    cable-cluster member of ``u`` gets TRAM_CABLE where its cluster
+    passes the tram rule, else CABLE. (page_id, lbl)"""
+    members = (
+        cable_members(u)
+        .select("cluster_id", "page_id", "x", "y", "z", "gz")
+        .localCheckpoint(eager=True)
+    )
+    return members.join(F.broadcast(tram_verdict(members)), "cluster_id").select(
         "page_id",
         F.when(F.col("is_tram"), F.lit(int(Labels.TRAM_CABLE)))
         .otherwise(F.lit(int(Labels.CABLE)))
@@ -289,28 +325,22 @@ def _claims_cable(u: DataFrame) -> DataFrame:
     )
 
 
-def _claims_car(u: DataFrame) -> DataFrame:
-    """Stage 6 — CarFuser: CC over the above-surface band, dimension
-    window, road-strip overlap > min pct labels the whole cluster."""
-    spark = u.sparkSession
-    dz = F.col("z") - F.col("gz")
-    band = u.filter(
-        (dz >= F.lit(CAR_BAND[0])) & (dz <= F.lit(CAR_BAND[1]))
-    ).select("page_id", "x", "y")
-    comps = grid_components(band, grid_size=CAR_GRID)
-    stats = cluster_stats(comps)
+def road_overlap(stats: DataFrame) -> DataFrame:
+    """CarFuser footprint test (car_fuser.py:57-107) over
+    ``cluster_stats`` rows: components within CAR_MAX_EXT on both axes,
+    their bounding box padded by CAR_PAD (the half cell each point
+    occupies), and the percentage of that box covered by road strips —
+    exact rectangle intersections. Components touching no road are left
+    out. (component, n_points, road_pct)"""
     ext_x = F.col("x_max") - F.col("x_min")
     ext_y = F.col("y_max") - F.col("y_min")
-    dims = stats.filter(
-        (ext_x <= CAR_MAX_EXT) & (ext_y <= CAR_MAX_EXT)
-    ).select(
-        "component",
+    dims = stats.filter((ext_x <= CAR_MAX_EXT) & (ext_y <= CAR_MAX_EXT)).select(
+        "component", "n_points",
         (F.col("x_min") - CAR_PAD).alias("x0"),
         (F.col("x_max") + CAR_PAD).alias("x1"),
         (F.col("y_min") - CAR_PAD).alias("y0"),
         (F.col("y_max") + CAR_PAD).alias("y1"),
     )
-    roads = roads_meta_df(spark)
     cond = (
         (F.col("rx0") < F.col("x1")) & (F.col("rx1") > F.col("x0"))
         & (F.col("ry0") < F.col("y1")) & (F.col("ry1") > F.col("y0"))
@@ -319,16 +349,33 @@ def _claims_car(u: DataFrame) -> DataFrame:
         F.greatest(F.lit(0.0), F.least("x1", "rx1") - F.greatest("x0", "rx0"))
         * F.greatest(F.lit(0.0), F.least("y1", "ry1") - F.greatest("y0", "ry0"))
     )
-    passing = (
-        dims.join(F.broadcast(roads), cond)
-        .groupBy("component", "x0", "x1", "y0", "y1")
+    return (
+        dims.join(F.broadcast(roads_meta_df(stats.sparkSession)), cond)
+        .groupBy("component", "n_points", "x0", "x1", "y0", "y1")
         .agg(F.sum(ia).alias("_inter"))
-        .filter(
-            F.col("_inter")
-            / ((F.col("x1") - F.col("x0")) * (F.col("y1") - F.col("y0")))
-            * F.lit(100.0)
-            > CAR_MIN_PCT
+        .select(
+            "component", "n_points",
+            (
+                F.col("_inter")
+                / ((F.col("x1") - F.col("x0")) * (F.col("y1") - F.col("y0")))
+                * F.lit(100.0)
+            ).alias("road_pct"),
         )
+    )
+
+
+def _claims_car(u: DataFrame) -> DataFrame:
+    """Stage 6 — CarFuser: CC over the above-surface band; components
+    whose footprint overlaps the road by more than CAR_MIN_PCT are
+    claimed whole."""
+    dz = F.col("z") - F.col("gz")
+    band = u.filter(
+        (dz >= F.lit(CAR_BAND[0])) & (dz <= F.lit(CAR_BAND[1]))
+    ).select("page_id", "x", "y")
+    comps = grid_components(band, grid_size=CAR_GRID)
+    passing = (
+        road_overlap(cluster_stats(comps))
+        .filter(F.col("road_pct") > CAR_MIN_PCT)
         .select("component")
     )
     return comps.join(F.broadcast(passing), "component").select(
@@ -336,13 +383,26 @@ def _claims_car(u: DataFrame) -> DataFrame:
     )
 
 
-def _claims_pole(u: DataFrame, bgt_type: str, label: int) -> DataFrame:
-    """One BGTPoleFuser stage (candidate voxel columns →
-    nearest-object match → seed DBSCAN → cylinder relabel;
-    queries.pole_fuser, green standalone). The production pipeline
-    runs the FUSED family (_claims_pole_family); this per-type variant
-    is the strictly-sequential reference kept for the fusion identity
-    test (tests/test_full_pipeline.py)."""
+def _lookup(pairs, key: Column) -> Column:
+    """``key`` mapped through the literal (key, value) ``pairs``."""
+    return F.create_map(*[F.lit(v) for kv in pairs for v in kv])[key]
+
+
+def pole_claims(u: DataFrame, stages) -> DataFrame:
+    """BGTPoleFuser (pole_fuser.py:60-290) for the (stage, bgt_type,
+    label) ``stages``, in one detection pass over ``u``: registry object
+    → nearest pole-like 5 m voxel column → DBSCAN of its seed window →
+    seed-cluster radius and containment check → the cylinder
+    r_mult·r up to ground + label_h is claimed. Each claim carries its
+    stage; the fold resolves a page by MIN(stage, lbl), the reference's
+    first-writer-wins order (pipeline.py:88-95). Ground heights come
+    from the registry objects, not from ``u``. (page_id, stage, lbl)
+
+    Run on all three pole types at once, a later type detects over the
+    pre-family unlabelled set instead of the set left by the earlier
+    types; the two differ only when poles of different types interact
+    within the search radius, and tests/test_full_pipeline.py pins the
+    fused and per-type chains output-identical on the fixtures."""
     spark = u.sparkSession
     P = POLE
     pages = u.select("page_id", "x", "y", "z")
@@ -356,11 +416,15 @@ def _claims_pole(u: DataFrame, bgt_type: str, label: int) -> DataFrame:
         (F.col("bin_x") * 5.0 + 2.5).alias("wx"),
         (F.col("bin_y") * 5.0 + 2.5).alias("wy"),
     )
+    stage_of = _lookup([(t, k) for k, t, _ in stages], F.col("bgt_type"))
+    # the window id carries the stage (obj_id·100 + stage): the matched
+    # windows then feed the seed windows and the cluster pick with the
+    # same columns, and Spark computes them once for both
     objs = (
         point_layer_df(spark)
-        .filter(F.col("bgt_type") == bgt_type)
+        .filter(F.col("bgt_type").isin(*[t for _, t, _ in stages]))
         .select(
-            "obj_id",
+            (F.col("obj_id") * F.lit(100) + stage_of).alias("obj_id"),
             F.col("x").alias("ox"),
             F.col("y").alias("oy"),
             R.ground_z_col(F.floor(F.col("x")), F.floor(F.col("y"))).alias("gz"),
@@ -415,10 +479,7 @@ def _claims_pole(u: DataFrame, bgt_type: str, label: int) -> DataFrame:
     wpick = Window.partitionBy("win_id").orderBy("cluster")
     pick = (
         clus.join(
-            F.broadcast(
-                pmatch.select(F.col("obj_id").alias("win_id"), "gz", "wx", "wy")
-            ),
-            "win_id",
+            F.broadcast(pmatch.withColumnRenamed("obj_id", "win_id")), "win_id"
         )
         .filter(
             (F.col("cr") <= F.lit(P["max_r"]))
@@ -436,27 +497,37 @@ def _claims_pole(u: DataFrame, bgt_type: str, label: int) -> DataFrame:
         F.col("y") - F.col("ccy")
     ) * (F.col("y") - F.col("ccy"))
     rr = F.lit(P["r_mult"]) * F.col("cr")
+    stage = F.pmod(F.col("win_id"), F.lit(100))
     return (
         pages.join(F.broadcast(pick), cdist <= rr * rr)
         .filter(F.col("z") <= F.col("gz") + F.lit(P["label_h"]))
-        .select("page_id", F.lit(int(label)).alias("lbl"))
+        .select(
+            "page_id",
+            stage.alias("stage"),
+            _lookup([(k, int(lab)) for k, _, lab in stages], stage).alias("lbl"),
+        )
         .distinct()
     )
 
 
-def _claims_furniture(u: DataFrame, bgt_type: str, label: int) -> DataFrame:
-    """One BGTStreetFurnitureFuser stage (band clusters passing height
-    + dimension windows near an object). The production pipeline runs
-    the FUSED family (_claims_furniture_family); this per-type variant
-    is the sequential reference kept for the fusion identity test."""
-    spark = u.sparkSession
+def furniture_claims(u: DataFrame, stages) -> DataFrame:
+    """BGTStreetFurnitureFuser (street_furniture_fuser.py:40-110) for the
+    (stage, bgt_type, label) ``stages``, in one detection pass over
+    ``u``: CC over the band SF_BAND above ``gz``; a component passing
+    the height window (top z vs exact mean ground) and the extent window
+    whose centroid lies within √SF_MAX_D2 of an object of a stage's
+    type is claimed whole with that stage. (page_id, stage, lbl)
+
+    One pass is exact, not just empirically equal to running the types
+    one after another: claims are whole components, and removing whole
+    components from the band leaves every other component and its stats
+    unchanged."""
     dz = F.col("z") - F.col("gz")
     band = u.filter((dz > SF_BAND[0]) & (dz <= SF_BAND[1])).select(
         "page_id", "x", "y", "z", "gz"
     )
     comps = grid_components(band, grid_size=SF_GRID)
-    # comps passes gz through; derive the exact integer ground from it
-    # (gz = 2 + k/100 ⇒ round(gz·100) recovers 200 + k exactly)
+    # gz = 2 + k/100 ⇒ round(gz·100) recovers the integer 200 + k exactly
     assign = comps.select(
         "page_id", "component", "x", "y", "z",
         F.round(F.col("gz") * 100.0).cast("long").alias("gz_c"),
@@ -485,218 +556,26 @@ def _claims_furniture(u: DataFrame, bgt_type: str, label: int) -> DataFrame:
         & (ext_x >= SF_EXT[0]) & (ext_x <= SF_EXT[1])
         & (ext_y >= SF_EXT[0]) & (ext_y <= SF_EXT[1])
     )
-    objs = point_layer_df(spark).filter(F.col("bgt_type") == bgt_type).select(
-        F.col("x").alias("ox"), F.col("y").alias("oy")
+    btype = F.col("bgt_type")
+    objs = (
+        point_layer_df(u.sparkSession)
+        .filter(btype.isin(*[t for _, t, _ in stages]))
+        .select(
+            F.col("x").alias("ox"), F.col("y").alias("oy"),
+            _lookup([(t, k) for k, t, _ in stages], btype).alias("stage"),
+            _lookup([(t, int(lab)) for _, t, lab in stages], btype).alias("lbl"),
+        )
     )
     d2 = (F.col("center_x") - F.col("ox")) * (F.col("center_x") - F.col("ox")) + (
         F.col("center_y") - F.col("oy")
     ) * (F.col("center_y") - F.col("oy"))
     near = (
         dims_ok.join(F.broadcast(objs), d2 <= F.lit(SF_MAX_D2))
-        .select("component")
+        .select("component", "stage", "lbl")
         .distinct()
     )
     return assign.join(F.broadcast(near), "component").select(
-        "page_id", F.lit(int(label)).alias("lbl")
-    )
-
-
-def _claims_pole_family(u: DataFrame) -> DataFrame:
-    """Stages 7-9 FUSED — the three BGTPoleFuser stages (boom /
-    lichtmast / verkeersbord) share an identical detection plan, so
-    detection runs ONCE over the pre-family unlabelled set with
-    bgt_type as a data column; each claim carries its stage index and
-    the family fold resolves per page by MIN(stage, lbl), preserving
-    the reference's first-writer-wins order (pipeline.py:88-95,
-    notebook stage order). Cuts 2 full detection passes + 2 full-table
-    fold materializations (VERDICT r03 item 3).
-
-    vs the strictly sequential chain: a later pole stage here detects
-    over the pre-FAMILY unlabelled set rather than the
-    post-previous-pole-stage set. The two differ only when poles of
-    different types interact within the 6 m search radius; verified
-    output-identical to the sequential chain on the sf0.01/sf0.001
-    fixtures (tests/test_full_pipeline.py). The oracle mirrors the
-    fused semantics exactly.
-
-    Returns (page_id, stage, lbl)."""
-    spark = u.sparkSession
-    P = POLE
-    pages = u.select("page_id", "x", "y", "z")
-    bins = binned_statistic_2d(pages, res=5.0)
-    poles = bins.filter(
-        (F.col("z_max") - F.col("z_min") > 4.0)
-        & (F.col("n_points") >= 5)
-        & (F.abs(F.col("z_median") - (F.col("z_min") + F.col("z_max")) / 2) < 1.5)
-    ).select(
-        "bin_x", "bin_y",
-        (F.col("bin_x") * 5.0 + 2.5).alias("wx"),
-        (F.col("bin_y") * 5.0 + 2.5).alias("wy"),
-    )
-    stage_of = {t: (k, int(lab)) for k, t, lab in POLE_STAGES}
-    objs = (
-        point_layer_df(spark)
-        .filter(F.col("bgt_type").isin(*stage_of.keys()))
-        .select(
-            "obj_id", "bgt_type",
-            F.col("x").alias("ox"),
-            F.col("y").alias("oy"),
-            R.ground_z_col(F.floor(F.col("x")), F.floor(F.col("y"))).alias("gz"),
-        )
-    )
-    d2 = (F.col("wx") - F.col("ox")) * (F.col("wx") - F.col("ox")) + (
-        F.col("wy") - F.col("oy")
-    ) * (F.col("wy") - F.col("oy"))
-    wnd = Window.partitionBy("obj_id").orderBy(d2, F.col("bin_x"), F.col("bin_y"))
-    pmatch = (
-        F.broadcast(objs)
-        .join(poles, d2 <= F.lit(P["obj_max_dist_sq"]))
-        .withColumn("_rn", F.row_number().over(wnd))
-        .filter(F.col("_rn") == 1)
-        .select("obj_id", "bgt_type", "gz", "wx", "wy")
-    )
-    wdist = (F.col("x") - F.col("wx")) * (F.col("x") - F.col("wx")) + (
-        F.col("y") - F.col("wy")
-    ) * (F.col("y") - F.col("wy"))
-    wpts = (
-        pages.join(F.broadcast(pmatch), wdist <= F.lit(P["search_r"] ** 2))
-        .filter(
-            (F.col("z") >= F.col("gz") + F.lit(P["zlo"]))
-            & (F.col("z") <= F.col("gz") + F.lit(P["zhi"]))
-        )
-        .select(
-            F.col("obj_id").alias("win_id"),
-            F.col("page_id").alias("pid"),
-            "x", "y",
-        )
-    )
-    assign = dbscan_windows(
-        wpts, eps=P["eps"], min_samples=P["min_samples"]
-    ).filter(F.col("cluster") >= 0)
-    xmm = F.round(F.col("x") * 1000.0).cast("long")
-    ymm = F.round(F.col("y") * 1000.0).cast("long")
-    clus = (
-        assign.join(wpts, ["win_id", "pid"])
-        .groupBy("win_id", "cluster")
-        .agg(
-            (F.sum(xmm).cast("double") / F.count("*") / F.lit(1000.0)).alias("ccx"),
-            (F.sum(ymm).cast("double") / F.count("*") / F.lit(1000.0)).alias("ccy"),
-            (
-                F.greatest(F.max(xmm) - F.min(xmm), F.max(ymm) - F.min(ymm))
-                / F.lit(2000.0)
-            ).alias("cr"),
-        )
-    )
-    pdist = (F.col("wx") - F.col("ccx")) * (F.col("wx") - F.col("ccx")) + (
-        F.col("wy") - F.col("ccy")
-    ) * (F.col("wy") - F.col("ccy"))
-    wpick = Window.partitionBy("win_id").orderBy("cluster")
-    pick = (
-        clus.join(
-            F.broadcast(
-                pmatch.select(
-                    F.col("obj_id").alias("win_id"), "bgt_type",
-                    "gz", "wx", "wy",
-                )
-            ),
-            "win_id",
-        )
-        .filter(
-            (F.col("cr") <= F.lit(P["max_r"]))
-            & (
-                pdist
-                < (F.col("cr") + F.lit(P["match_buf"]))
-                * (F.col("cr") + F.lit(P["match_buf"]))
-            )
-        )
-        .withColumn("_rn", F.row_number().over(wpick))
-        .filter(F.col("_rn") == 1)
-        .select("win_id", "bgt_type", "ccx", "ccy", "cr", "gz")
-    )
-    cdist = (F.col("x") - F.col("ccx")) * (F.col("x") - F.col("ccx")) + (
-        F.col("y") - F.col("ccy")
-    ) * (F.col("y") - F.col("ccy"))
-    rr = F.lit(P["r_mult"]) * F.col("cr")
-    stage_col = F.create_map(
-        *[x for t, (k, _) in stage_of.items() for x in (F.lit(t), F.lit(k))]
-    )[F.col("bgt_type")]
-    lbl_col = F.create_map(
-        *[x for t, (_, lab) in stage_of.items() for x in (F.lit(t), F.lit(lab))]
-    )[F.col("bgt_type")]
-    return (
-        pages.join(F.broadcast(pick), cdist <= rr * rr)
-        .filter(F.col("z") <= F.col("gz") + F.lit(P["label_h"]))
-        .select("page_id", stage_col.alias("stage"), lbl_col.alias("lbl"))
-        .distinct()
-    )
-
-
-def _claims_furniture_family(u: DataFrame) -> DataFrame:
-    """Stages 10-11 FUSED — the two BGTStreetFurnitureFuser stages
-    share a type-independent detection (band CC + stats + dimension
-    window); only the near-object gate differs. Fusing is EXACT, not
-    just empirically identical: a passing component is claimed in its
-    entirety, and removing whole connected components from the band
-    leaves every remaining component (and its stats) unchanged, so a
-    later stage's detection over the post-claim set equals detection
-    over the pre-family set. Per-page resolution by MIN(stage, lbl)
-    reproduces first-writer-wins. Returns (page_id, stage, lbl)."""
-    spark = u.sparkSession
-    dz = F.col("z") - F.col("gz")
-    band = u.filter((dz > SF_BAND[0]) & (dz <= SF_BAND[1])).select(
-        "page_id", "x", "y", "z", "gz"
-    )
-    comps = grid_components(band, grid_size=SF_GRID)
-    assign = comps.select(
-        "page_id", "component", "x", "y", "z",
-        F.round(F.col("gz") * 100.0).cast("long").alias("gz_c"),
-    )
-    xmm = F.round(F.col("x") * 1000.0).cast("long")
-    ymm = F.round(F.col("y") * 1000.0).cast("long")
-    stats = assign.groupBy("component").agg(
-        F.max("z").alias("top_z"),
-        (F.sum("gz_c").cast("double") / F.count("*") / F.lit(100.0)).alias(
-            "mean_gz"
-        ),
-        F.min("x").alias("x_min"), F.max("x").alias("x_max"),
-        F.min("y").alias("y_min"), F.max("y").alias("y_max"),
-        (F.sum(xmm).cast("double") / F.count("*") / F.lit(1000.0)).alias(
-            "center_x"
-        ),
-        (F.sum(ymm).cast("double") / F.count("*") / F.lit(1000.0)).alias(
-            "center_y"
-        ),
-    )
-    h = F.col("top_z") - F.col("mean_gz")
-    ext_x = F.col("x_max") - F.col("x_min")
-    ext_y = F.col("y_max") - F.col("y_min")
-    dims_ok = stats.filter(
-        (h >= SF_HEIGHT[0]) & (h <= SF_HEIGHT[1])
-        & (ext_x >= SF_EXT[0]) & (ext_x <= SF_EXT[1])
-        & (ext_y >= SF_EXT[0]) & (ext_y <= SF_EXT[1])
-    )
-    objs = (
-        point_layer_df(spark)
-        .filter(F.col("bgt_type").isin(*[t for _, t, _ in FURN_STAGES]))
-        .select("bgt_type", F.col("x").alias("ox"), F.col("y").alias("oy"))
-    )
-    d2 = (F.col("center_x") - F.col("ox")) * (F.col("center_x") - F.col("ox")) + (
-        F.col("center_y") - F.col("oy")
-    ) * (F.col("center_y") - F.col("oy"))
-    near = (
-        dims_ok.join(F.broadcast(objs), d2 <= F.lit(SF_MAX_D2))
-        .select("component", "bgt_type")
-        .distinct()
-    )
-    stage_of = {t: (k, int(lab)) for k, t, lab in FURN_STAGES}
-    stage_col = F.create_map(
-        *[x for t, (k, _) in stage_of.items() for x in (F.lit(t), F.lit(k))]
-    )[F.col("bgt_type")]
-    lbl_col = F.create_map(
-        *[x for t, (_, lab) in stage_of.items() for x in (F.lit(t), F.lit(lab))]
-    )[F.col("bgt_type")]
-    return assign.join(F.broadcast(near), "component").select(
-        "page_id", stage_col.alias("stage"), lbl_col.alias("lbl")
+        "page_id", "stage", "lbl"
     )
 
 
@@ -768,6 +647,10 @@ def _unl(cur: DataFrame) -> DataFrame:
     return cur.filter(F.col("label") == 0)
 
 
+def _as(pages: DataFrame, label: int) -> DataFrame:
+    return pages.select("page_id", F.lit(int(label)).alias("lbl"))
+
+
 def pipeline_stages() -> list[tuple[str, list[int], object]]:
     """Ordered (name, labels_written, step) list — the single source of
     truth for the stage chain. ``step(lbl_state) -> lbl_state``; each
@@ -781,14 +664,16 @@ def pipeline_stages() -> list[tuple[str, list[int], object]]:
     (src/upcp/pipeline.py:88-95) — so on data where poles of different
     types fall within the same search radius the family output can
     deviate from the reference's sequential semantics (engine and
-    oracle stay mutually consistent). ``_claims_pole`` and
-    ``_claims_furniture`` keep the strictly sequential per-type
-    claims; tests/test_full_pipeline.py pins the two chains
-    output-identical on the fixture (ADVICE r04)."""
+    oracle stay mutually consistent). ``pole_claims`` and
+    ``furniture_claims`` called with one (stage, bgt_type, label) at a
+    time over a freshly masked set give the strictly sequential chain;
+    tests/test_full_pipeline.py pins the two chains output-identical
+    on the fixture (ADVICE r04)."""
     L = Labels
     stages: list[tuple[str, list[int], object]] = [
         ("ground_refine", [int(L.GROUND)],
-         lambda lbl: _fold(lbl, _claims_ground_refine(_unl(lbl)))),
+         lambda lbl: _fold(lbl, _as(
+             ground_refine(_unl(lbl)).filter(~F.col("removed")), L.GROUND))),
         ("road_retarget", [int(L.ROAD)],
          lambda lbl: lbl.withColumn(
              "label",
@@ -797,7 +682,7 @@ def pipeline_stages() -> list[tuple[str, list[int], object]]:
                  F.lit(int(L.ROAD)),
              ).otherwise(F.col("label")))),
         ("noise_filter", [int(L.NOISE)],
-         lambda lbl: _fold(lbl, _claims_noise(_unl(lbl)))),
+         lambda lbl: _fold(lbl, _as(noise_pages(_unl(lbl)), L.NOISE))),
         ("building_fuser", [int(L.BUILDING)],
          lambda lbl: lbl.withColumn(
              "label",
@@ -809,14 +694,14 @@ def pipeline_stages() -> list[tuple[str, list[int], object]]:
                  F.lit(int(L.BUILDING)),
              ).otherwise(F.col("label")))),
         ("cable_fuser", [int(L.CABLE), int(L.TRAM_CABLE)],
-         lambda lbl: _fold(lbl, _claims_cable(_unl(lbl)))),
+         lambda lbl: _fold(lbl, cable_claims(_unl(lbl)))),
         ("car_fuser", [int(L.CAR)],
          lambda lbl: _fold(lbl, _claims_car(_unl(lbl)))),
         ("pole_family", [int(lab) for _, _, lab in POLE_STAGES],
-         lambda lbl: _fold_family(lbl, _claims_pole_family(_unl(lbl)))),
+         lambda lbl: _fold_family(lbl, pole_claims(_unl(lbl), POLE_STAGES))),
         ("furniture_family", [int(lab) for _, _, lab in FURN_STAGES],
          lambda lbl: _fold_family(
-             lbl, _claims_furniture_family(_unl(lbl)))),
+             lbl, furniture_claims(_unl(lbl), FURN_STAGES))),
     ]
     grower_name = {int(L.BUILDING): "grow_building",
                    int(L.STREET_LIGHT): "grow_light",
@@ -963,20 +848,8 @@ l{k} AS MATERIALIZED (
 )"""
 
 
-def _seg_d2_sql(px: str, py: str) -> str:
-    l2 = "((s.x2 - s.x1) * (s.x2 - s.x1) + (s.y2 - s.y1) * (s.y2 - s.y1))"
-    traw = (
-        f"((({px} - s.x1) * (s.x2 - s.x1) + ({py} - s.y1) * (s.y2 - s.y1))"
-        f" / {l2})"
-    )
-    t = f"LEAST(GREATEST({traw}, 0.0), 1.0)"
-    dx = f"({px} - (s.x1 + {t} * (s.x2 - s.x1)))"
-    dy = f"({py} - (s.y1 + {t} * (s.y2 - s.y1)))"
-    return f"({dx} * {dx} + {dy} * {dy})"
-
-
 def _pole_family_sql() -> str:
-    """Stages 7-9 FUSED (mirrors _claims_pole_family): one detection
+    """Stages 7-9 FUSED (mirrors pole_claims): one detection
     chain over u7 with bgt_type carried through; claims resolve per
     page by the (stage, lbl) argmin — first-writer-wins in notebook
     stage order. Emits c9 (the family claims) for the l6→l9 fold."""
@@ -1073,7 +946,7 @@ c9 AS (
 
 
 def _furniture_family_sql() -> str:
-    """Stages 10-11 FUSED (mirrors _claims_furniture_family): one band
+    """Stages 10-11 FUSED (mirrors furniture_claims): one band
     CC + stats chain over u10; per-type near-object gates; claims
     resolve per page by the (stage, lbl) argmin. Fusing is exact —
     claimed components are whole CC classes, and removing whole
@@ -1341,7 +1214,7 @@ c5_members AS MATERIALIZED (
    AND CAST(floor(p.y / {CABLE_RES}) AS BIGINT) = c.cell_y
 ),
 c5_trackd AS (
-  SELECT m.cluster_id, MIN({_seg_d2_sql('m.x', 'm.y')}) AS min_track_d2
+  SELECT m.cluster_id, MIN({segment_d2_sql('m.x', 'm.y')}) AS min_track_d2
   FROM c5_members m CROSS JOIN {line_segments_values_sql()}
   GROUP BY m.cluster_id
 ),

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from . import geocode as G
 from .functions.pip import pip_hits, pip_hits_sql
+from .labels import Labels
 from .sources import raster as R
 from .sources.layers import (
     ROAD_TYPES,
@@ -25,6 +26,8 @@ from .sources.layers import (
     polygon_edges_df,
     polygon_edges_values_sql,
 )
+from .operators.geometry import segment_d2, segment_d2_sql
+from .plans import full_pipeline as FP
 from .sources.pages import pages_from_orders
 from .tiling import tile_x_sql, tile_y_sql
 
@@ -213,31 +216,33 @@ def q_building_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
 # AHNFuser refine_ground (reference ahn_fuser.py:96-125 + _refine_layer
 # :76-108): components of UNKNOWN points just above the ground surface
 # cast an object footprint; ground points under that footprint are
-# un-grounded. The reference computes a buffered alpha-shape hull of
-# each component (alpha_shape_utils.py:11-202); on the gridded fixture
-# the footprint is exactly the component's occupied-cell set dilated by
-# one cell (buffer ≈ grid size) — a scipy-free, fully relational
-# re-expression of the same subtraction.
-_RG_BAND = (0.2, 1.5)   # bottom, top (fixture-scaled; ref 0.02/0.5)
-_RG_MIN_COMP = 5        # ref min_comp_size=50, fixture-scaled
-_RG_GRID = 1.5          # ref grid_size=0.4, fixture-scaled (sparse pages)
-
+# un-grounded (detector: full_pipeline.ground_refine).
 _GZ = R.ground_z_sql(_GX, _GY)
 _BZ = R.building_z_sql(_GX, _GY)
+
+
+def _pages_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pages with the ground height ``gz`` the fuser detectors of
+    plans/full_pipeline.py read: the closed-form raster value, the
+    oracle's ``_GZ``."""
+    return pages_from_orders(spark, sf_dir).select(
+        "page_id", "x", "y", "z",
+        R.ground_z_col(F.floor(F.col("x")), F.floor(F.col("y"))).alias("gz"),
+    )
 
 _REFINE_CC = f"""
 ground AS (
   SELECT page_id, x, y,
-         CAST(floor(x / {_RG_GRID}) AS BIGINT) AS cx,
-         CAST(floor(y / {_RG_GRID}) AS BIGINT) AS cy
+         CAST(floor(x / {FP.REFINE_GRID}) AS BIGINT) AS cx,
+         CAST(floor(y / {FP.REFINE_GRID}) AS BIGINT) AS cy
   FROM pts WHERE abs(z - {_GZ}) < 0.2
 ),
 unk AS (
   SELECT page_id,
-         CAST(floor(x / {_RG_GRID}) AS BIGINT) AS cx,
-         CAST(floor(y / {_RG_GRID}) AS BIGINT) AS cy
+         CAST(floor(x / {FP.REFINE_GRID}) AS BIGINT) AS cx,
+         CAST(floor(y / {FP.REFINE_GRID}) AS BIGINT) AS cy
   FROM pts
-  WHERE z >= {_GZ} - {_RG_BAND[0]} AND z <= {_GZ} + {_RG_BAND[1]}
+  WHERE z >= {_GZ} - {FP.REFINE_BAND[0]} AND z <= {_GZ} + {FP.REFINE_BAND[1]}
     AND NOT abs(z - {_GZ}) < 0.2
 ),
 ucells AS (SELECT DISTINCT cx, cy, cx * 2147483648 + cy AS cell FROM unk),
@@ -257,7 +262,7 @@ usize AS (
   FROM unk u JOIN ucomp c ON u.cx * 2147483648 + u.cy = c.cell
   GROUP BY c.component
 ),
-big AS (SELECT component FROM usize WHERE n >= {_RG_MIN_COMP}),
+big AS (SELECT component FROM usize WHERE n >= {FP.REFINE_MIN_COMP}),
 fp AS (
   SELECT DISTINCT uc.cx + dx.d AS cx, uc.cy + dy.d AS cy
   FROM ucells uc
@@ -282,55 +287,8 @@ def q_ground_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AHNFuser refine_ground: for every ground point, whether it falls
     under the dilated footprint of a ≥min-size UNKNOWN component in the
     band just above ground (and is therefore removed from GROUND)."""
-    from .operators.components import grid_components, size_filter
-
-    pages = pages_from_orders(spark, sf_dir)
-    # enriched feeds both the ground and the unknown band — one scan
-    enriched = R.with_raster(pages, R.raster_df(spark)).select(
-        "page_id", "x", "y", "z", "ground_z"
-    ).localCheckpoint(eager=True)
-    is_ground = F.abs(F.col("z") - F.col("ground_z")) < 0.2
-    ground = enriched.filter(is_ground).select(
-        "page_id",
-        F.floor(F.col("x") / F.lit(_RG_GRID)).cast("long").alias("cx"),
-        F.floor(F.col("y") / F.lit(_RG_GRID)).cast("long").alias("cy"),
-    )
-    unk = enriched.filter(
-        (F.col("z") >= F.col("ground_z") - F.lit(_RG_BAND[0]))
-        & (F.col("z") <= F.col("ground_z") + F.lit(_RG_BAND[1]))
-        & ~is_ground
-    ).select("page_id", "x", "y")
-    comps = size_filter(
-        grid_components(unk, grid_size=_RG_GRID), _RG_MIN_COMP
-    ).filter(F.col("component") != -1)
-    cells = comps.select(
-        F.floor(F.col("x") / F.lit(_RG_GRID)).cast("long").alias("cx"),
-        F.floor(F.col("y") / F.lit(_RG_GRID)).cast("long").alias("cy"),
-    ).distinct()
-    offs = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 0), (0, 1),
-            (1, -1), (1, 0), (1, 1)]
-    fp = (
-        cells.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            (F.col("cx") + F.lit(dx)).alias("cx"),
-                            (F.col("cy") + F.lit(dy)).alias("cy"),
-                        )
-                        for dx, dy in offs
-                    ]
-                )
-            ).alias("c")
-        )
-        .select("c.cx", "c.cy")
-        .distinct()
-        .withColumn("_fp", F.lit(True))
-    )
-    return (
-        ground.join(F.broadcast(fp), ["cx", "cy"], "left")
-        .select("page_id", F.col("_fp").isNotNull().alias("removed"))
-    )
+    # the pages feed both the ground and the unknown band — one scan
+    return FP.ground_refine(_pages_gz(spark, sf_dir).localCheckpoint(eager=True))
 
 
 # ----------------------------------------------------------------------
@@ -1784,20 +1742,9 @@ def q_noise_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     is noise if its ground-band component is too small (< 5 points,
     component == −1 after the size filter, :66-67) OR it lies below the
     interpolated ground (z − ground_z < −ε, :72-74)."""
-    pages = pages_from_orders(spark, sf_dir)
-    enriched = R.with_raster(pages, R.raster_df(spark))
-    small = (
-        q_component_size_filter(spark, sf_dir)
-        .filter(F.col("component") == -1)
-        .select("page_id")
-        .withColumn("_small", F.lit(True))
+    return FP.noise_pages(_pages_gz(spark, sf_dir)).select(
+        "page_id", F.lit(True).alias("is_noise")
     )
-    flagged = enriched.join(small, "page_id", "left").withColumn(
-        "is_noise",
-        F.coalesce(F.col("_small"), F.lit(False))
-        | (F.col("z") - F.col("ground_z") < F.lit(-0.2)),
-    )
-    return flagged.filter(F.col("is_noise")).select("page_id", "is_noise")
 
 
 # ----------------------------------------------------------------------
@@ -2709,33 +2656,10 @@ def q_cable_grow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return matched.select("page_id", "cable_id", "dist_sq")
 
 
-def _cable_members_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = pages_from_orders(spark, sf_dir)
-    feats = pca_cell_features(pages, 5.0, 3)
-    cables = feats.filter(
-        (F.col("linearity") > 0.9) & (F.col("n_points") >= 4)
-    ).select("cell_x", "cell_y")
-    return (
-        pages.withColumns(
-            {
-                "cell_x": F.floor(F.col("x") / 5.0).cast("long"),
-                "cell_y": F.floor(F.col("y") / 5.0).cast("long"),
-            }
-        )
-        .join(F.broadcast(cables), ["cell_x", "cell_y"])
-        .select(
-            (F.col("cell_x") * F.lit(100000) + F.col("cell_y")).alias(
-                "cluster_id"
-            ),
-            "x", "y", "z",
-        )
-    )
-
-
 _CM_MAX_GAP = 50.0  # fixture-scaled: detected cable cells sit one
 # 5 m-cell row apart per ~50 m (sparse pages), vs the reference's
 # LiDAR-density max_gap; semantics identical, threshold scaled like
-# every other fixture parameter (see _POLE).
+# every other fixture parameter (see full_pipeline.POLE).
 
 
 def _cable_merge_cc_sql() -> str:
@@ -2933,24 +2857,9 @@ def q_cable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cables in tests/test_cable_merge.py."""
     from .operators.cable_merge import merge_cables_cc
 
-    return merge_cables_cc(_cable_members_df(spark, sf_dir),
+    members = FP.cable_members(pages_from_orders(spark, sf_dir))
+    return merge_cables_cc(members.select("cluster_id", "x", "y", "z"),
                            max_gap=_CM_MAX_GAP)
-
-
-def _seg_d2_sql(px: str, py: str) -> str:
-    """Squared distance from point to segment (s.x1,s.y1)-(s.x2,s.y2):
-    clamped projection, closed-form rational — identical text on both
-    engines (reference uses shapely buffer-intersects; this is the
-    equivalent distance-threshold test)."""
-    l2 = "((s.x2 - s.x1) * (s.x2 - s.x1) + (s.y2 - s.y1) * (s.y2 - s.y1))"
-    traw = (
-        f"((({px} - s.x1) * (s.x2 - s.x1) + ({py} - s.y1) * (s.y2 - s.y1))"
-        f" / {l2})"
-    )
-    t = f"LEAST(GREATEST({traw}, 0.0), 1.0)"
-    dx = f"({px} - (s.x1 + {t} * (s.x2 - s.x1)))"
-    dy = f"({py} - (s.y1 + {t} * (s.y2 - s.y1)))"
-    return f"({dx} * {dx} + {dy} * {dy})"
 
 
 # ----------------------------------------------------------------------
@@ -2997,7 +2906,7 @@ near AS (
    AND p.x <= GREATEST(s.x1, s.x2) + {_PUB_OFFSET}
    AND p.y >= LEAST(s.y1, s.y2) - {_PUB_OFFSET}
    AND p.y <= GREATEST(s.y1, s.y2) + {_PUB_OFFSET}
-  WHERE {_seg_d2_sql('p.x', 'p.y')} <= {_PUB_OFFSET ** 2}
+  WHERE {segment_d2_sql('p.x', 'p.y')} <= {_PUB_OFFSET ** 2}
   GROUP BY p.page_id
 )
 SELECT i.page_id,
@@ -3023,19 +2932,9 @@ def q_pip_union_buffer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("y") >= F.least("y1", "y2") - F.lit(_PUB_OFFSET))
         & (F.col("y") <= F.greatest("y1", "y2") + F.lit(_PUB_OFFSET))
     )
-    l2 = (F.col("x2") - F.col("x1")) * (F.col("x2") - F.col("x1")) + (
-        F.col("y2") - F.col("y1")
-    ) * (F.col("y2") - F.col("y1"))
-    traw = (
-        (F.col("x") - F.col("x1")) * (F.col("x2") - F.col("x1"))
-        + (F.col("y") - F.col("y1")) * (F.col("y2") - F.col("y1"))
-    ) / l2
-    t = F.least(F.greatest(traw, F.lit(0.0)), F.lit(1.0))
-    dx = F.col("x") - (F.col("x1") + t * (F.col("x2") - F.col("x1")))
-    dy = F.col("y") - (F.col("y1") + t * (F.col("y2") - F.col("y1")))
     near = (
         pages.join(F.broadcast(segs), box)
-        .filter(dx * dx + dy * dy <= F.lit(_PUB_OFFSET ** 2))
+        .filter(segment_d2(F.col("x"), F.col("y")) <= F.lit(_PUB_OFFSET ** 2))
         .select("page_id").distinct().withColumn("_near", F.lit(True))
     )
     return (
@@ -3351,32 +3250,19 @@ def q_armatuur_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics additionally validated on constructed cable+blob fixtures
     in tests/test_morphology.py."""
     from .operators.morphology import search_armaturen
-
-    pages = pages_from_orders(spark, sf_dir)
-    feats = pca_cell_features(pages, 5.0, 3)
-    cables = feats.filter(
-        (F.col("linearity") > 0.9) & (F.col("n_points") >= 4)
-    ).select("cell_x", "cell_y",
-             (F.col("cell_x") * F.lit(100000) + F.col("cell_y")).alias(
-                 "cluster_id"))
-    keyed = pages.withColumns(
-        {
-            "cell_x": F.floor(F.col("x") / 5.0).cast("long"),
-            "cell_y": F.floor(F.col("y") / 5.0).cast("long"),
-        }
-    )
-    members = keyed.join(
-        F.broadcast(cables.select("cell_x", "cell_y", "cluster_id")),
-        ["cell_x", "cell_y"],
-    ).select("cluster_id", "x", "y", "z", F.lit(True).alias("is_cable"))
-    # non-cable neighborhood: nearest cable cluster within 10 m
-    # (the cable_grow attachment join)
     from .operators.neighbors import nearest_match
 
-    outside = keyed.join(
-        cables.select("cell_x", "cell_y"), ["cell_x", "cell_y"], "left_anti"
-    )
-    centers = cables.select(
+    pages = pages_from_orders(spark, sf_dir)
+    cells = FP.cable_cells(pages)
+    # non-cable neighborhood: nearest cable cluster within 10 m
+    # (the cable_grow attachment join)
+    outside = pages.withColumns(
+        {
+            "cell_x": F.floor(F.col("x") / F.lit(FP.CABLE_RES)).cast("long"),
+            "cell_y": F.floor(F.col("y") / F.lit(FP.CABLE_RES)).cast("long"),
+        }
+    ).join(cells.select("cell_x", "cell_y"), ["cell_x", "cell_y"], "left_anti")
+    centers = cells.select(
         "cluster_id",
         (F.col("cell_x") * 5.0 + 2.5).alias("x"),
         (F.col("cell_y") * 5.0 + 2.5).alias("y"),
@@ -3386,9 +3272,12 @@ def q_armatuur_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_cols=(),
     ).select("page_id", "cluster_id")
     neighborhood = grown.join(
-        keyed.select("page_id", "x", "y", "z"), "page_id"
+        pages.select("page_id", "x", "y", "z"), "page_id"
     ).select("cluster_id", "x", "y", "z", F.lit(False).alias("is_cable"))
-    return search_armaturen(members.unionByName(neighborhood))
+    on_cable = FP.cable_members(pages).select(
+        "cluster_id", "x", "y", "z", F.lit(True).alias("is_cable")
+    )
+    return search_armaturen(on_cable.unionByName(neighborhood))
 
 
 # ----------------------------------------------------------------------
@@ -3398,10 +3287,7 @@ def q_armatuur_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # height above ground is below the tram-wire ceiling.
 # ----------------------------------------------------------------------
 
-from .sources.layers import line_segments_df, line_segments_values_sql  # noqa: E402
-
-_TRAM_BUF = 2.5    # ref: track buffer ~2 + cable-line buffer 0.5
-_TRAM_MAX_H = 8.0  # ref max_tramcable_height, fixture-scaled
+from .sources.layers import line_segments_values_sql  # noqa: E402
 
 
 @register(
@@ -3421,7 +3307,7 @@ members AS (
    AND CAST(floor(p.y / 5.0) AS BIGINT) = c.cell_y
 ),
 trackd AS (
-  SELECT m.cluster_id, MIN({_seg_d2_sql('m.x', 'm.y')}) AS min_track_d2
+  SELECT m.cluster_id, MIN({segment_d2_sql('m.x', 'm.y')}) AS min_track_d2
   FROM members m CROSS JOIN {line_segments_values_sql()}
   GROUP BY m.cluster_id
 ),
@@ -3430,8 +3316,8 @@ stats AS (
   FROM members GROUP BY cluster_id
 )
 SELECT s.cluster_id, s.n_points, t.min_track_d2, s.min_height,
-       (t.min_track_d2 <= {_TRAM_BUF ** 2}
-        AND s.min_height < {_TRAM_MAX_H}) AS is_tram
+       (t.min_track_d2 <= {FP.TRAM_BUF ** 2}
+        AND s.min_height < {FP.TRAM_MAX_H}) AS is_tram
 FROM stats s JOIN trackd t ON t.cluster_id = s.cluster_id
 """,
 )
@@ -3439,51 +3325,7 @@ def q_tram_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tram-cable rule classification over the cable clusters: buffered
     track intersection (point-to-segment distance threshold against the
     tram line layer) AND min height above ground below the ceiling."""
-    pages = pages_from_orders(spark, sf_dir)
-    feats = pca_cell_features(pages, 5.0, 3)
-    cables = feats.filter(
-        (F.col("linearity") > 0.9) & (F.col("n_points") >= 4)
-    ).select(
-        "cell_x", "cell_y",
-        (F.col("cell_x") * F.lit(100000) + F.col("cell_y")).alias("cluster_id"),
-    )
-    gz = R.ground_z_col(F.floor(F.col("x")), F.floor(F.col("y")))
-    members = (
-        pages.withColumns(
-            {
-                "cell_x": F.floor(F.col("x") / 5.0).cast("long"),
-                "cell_y": F.floor(F.col("y") / 5.0).cast("long"),
-            }
-        )
-        .join(F.broadcast(cables), ["cell_x", "cell_y"])
-        .select("cluster_id", "x", "y", (F.col("z") - gz).alias("h"))
-    )
-    segs = line_segments_df(spark).select("x1", "y1", "x2", "y2")
-    l2 = (F.col("x2") - F.col("x1")) * (F.col("x2") - F.col("x1")) + (
-        F.col("y2") - F.col("y1")
-    ) * (F.col("y2") - F.col("y1"))
-    traw = (
-        (F.col("x") - F.col("x1")) * (F.col("x2") - F.col("x1"))
-        + (F.col("y") - F.col("y1")) * (F.col("y2") - F.col("y1"))
-    ) / l2
-    t = F.least(F.greatest(traw, F.lit(0.0)), F.lit(1.0))
-    dx = F.col("x") - (F.col("x1") + t * (F.col("x2") - F.col("x1")))
-    dy = F.col("y") - (F.col("y1") + t * (F.col("y2") - F.col("y1")))
-    trackd = (
-        members.crossJoin(F.broadcast(segs))
-        .groupBy("cluster_id")
-        .agg(F.min(dx * dx + dy * dy).alias("min_track_d2"))
-    )
-    stats = members.groupBy("cluster_id").agg(
-        F.count("*").alias("n_points"), F.min("h").alias("min_height")
-    )
-    return stats.join(trackd, "cluster_id").select(
-        "cluster_id", "n_points", "min_track_d2", "min_height",
-        (
-            (F.col("min_track_d2") <= F.lit(_TRAM_BUF ** 2))
-            & (F.col("min_height") < F.lit(_TRAM_MAX_H))
-        ).alias("is_tram"),
-    )
+    return FP.tram_verdict(FP.cable_members(_pages_gz(spark, sf_dir)))
 
 
 @register(
@@ -3503,7 +3345,7 @@ members AS (
    AND CAST(floor(p.y / 5.0) AS BIGINT) = c.cell_y
 ),
 trackd AS (
-  SELECT m.cluster_id, MIN({_seg_d2_sql('m.x', 'm.y')}) AS min_track_d2
+  SELECT m.cluster_id, MIN({segment_d2_sql('m.x', 'm.y')}) AS min_track_d2
   FROM members m CROSS JOIN {line_segments_values_sql()}
   GROUP BY m.cluster_id
 ),
@@ -3512,8 +3354,8 @@ hstats AS (
 ),
 verdict AS (
   SELECT s.cluster_id,
-         (t.min_track_d2 <= {_TRAM_BUF ** 2}
-          AND s.min_height < {_TRAM_MAX_H}) AS is_tram
+         (t.min_track_d2 <= {FP.TRAM_BUF ** 2}
+          AND s.min_height < {FP.TRAM_MAX_H}) AS is_tram
   FROM hstats s JOIN trackd t ON t.cluster_id = s.cluster_id
 )
 SELECT m.page_id, CASE WHEN v.is_tram THEN 70 ELSE 79 END AS label
@@ -3527,53 +3369,8 @@ def q_cable_fuser_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     label 70 where its cluster passes the tram rule, else 79. The
     suspended-streetlight step is the armatuur_search composite over
     the same clusters."""
-    pages = pages_from_orders(spark, sf_dir)
-    feats = pca_cell_features(pages, 5.0, 3)
-    cables = feats.filter(
-        (F.col("linearity") > 0.9) & (F.col("n_points") >= 4)
-    ).select(
-        "cell_x", "cell_y",
-        (F.col("cell_x") * F.lit(100000) + F.col("cell_y")).alias("cluster_id"),
-    )
-    gz = R.ground_z_col(F.floor(F.col("x")), F.floor(F.col("y")))
-    members = (
-        pages.withColumns(
-            {
-                "cell_x": F.floor(F.col("x") / 5.0).cast("long"),
-                "cell_y": F.floor(F.col("y") / 5.0).cast("long"),
-            }
-        )
-        .join(F.broadcast(cables), ["cell_x", "cell_y"])
-        .select("cluster_id", "page_id", "x", "y", (F.col("z") - gz).alias("h"))
-        .localCheckpoint(eager=True)
-    )
-    segs = line_segments_df(spark).select("x1", "y1", "x2", "y2")
-    l2 = (F.col("x2") - F.col("x1")) * (F.col("x2") - F.col("x1")) + (
-        F.col("y2") - F.col("y1")
-    ) * (F.col("y2") - F.col("y1"))
-    traw = (
-        (F.col("x") - F.col("x1")) * (F.col("x2") - F.col("x1"))
-        + (F.col("y") - F.col("y1")) * (F.col("y2") - F.col("y1"))
-    ) / l2
-    t = F.least(F.greatest(traw, F.lit(0.0)), F.lit(1.0))
-    dx = F.col("x") - (F.col("x1") + t * (F.col("x2") - F.col("x1")))
-    dy = F.col("y") - (F.col("y1") + t * (F.col("y2") - F.col("y1")))
-    trackd = (
-        members.crossJoin(F.broadcast(segs))
-        .groupBy("cluster_id")
-        .agg(F.min(dx * dx + dy * dy).alias("min_track_d2"))
-    )
-    hstats = members.groupBy("cluster_id").agg(F.min("h").alias("min_height"))
-    verdict = hstats.join(trackd, "cluster_id").select(
-        "cluster_id",
-        (
-            (F.col("min_track_d2") <= F.lit(_TRAM_BUF ** 2))
-            & (F.col("min_height") < F.lit(_TRAM_MAX_H))
-        ).alias("is_tram"),
-    )
-    return members.join(F.broadcast(verdict), "cluster_id").select(
-        "page_id",
-        F.when(F.col("is_tram"), F.lit(70)).otherwise(F.lit(79)).alias("label"),
+    return FP.cable_claims(_pages_gz(spark, sf_dir)).withColumnRenamed(
+        "lbl", "label"
     )
 
 
@@ -3810,24 +3607,19 @@ def q_pole_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # columns → per-object window → seed DBSCAN → cylinder relabel
 # ----------------------------------------------------------------------
 
-from .operators.dbscan import dbscan_sql, dbscan_windows  # noqa: E402
-from .sources.layers import point_layer_df  # noqa: E402
+from .operators.dbscan import dbscan_sql  # noqa: E402
 
-# Fixture-scaled parameters (reference defaults in parens — the sf
-# fixture is ~10⁴× sparser than LiDAR, so radii/eps scale up while the
-# chain's semantics stay identical): search_pad 6 (1.5), seed z-band
-# [0.5, 6.0] above ground (plane_height±0.1), DBSCAN eps 2.5 (0.05) /
-# min_samples 4 (5), max_r 6 (0.5), candidate match buffer 3 (0.1),
-# r_mult 1.5 (1.5), label_height 8 (4), object match radius 15 (1.2).
-_POLE = {
-    "search_r": 6.0, "zlo": 0.5, "zhi": 6.0,
-    "eps": 2.5, "min_samples": 4,
-    "max_r": 6.0, "match_buf": 3.0,
-    "r_mult": 1.5, "label_h": 8.0,
-    "obj_max_dist_sq": 225.0,
-}
+_PF_WPTS_CTE = f"""
+SELECT m.obj_id AS win_id, p.page_id AS pid, p.x, p.y
+FROM pmatch m JOIN pts p
+  ON (p.x - m.wx) * (p.x - m.wx) + (p.y - m.wy) * (p.y - m.wy)
+     <= {FP.POLE['search_r'] ** 2}
+WHERE p.z >= m.gz + {FP.POLE['zlo']} AND p.z <= m.gz + {FP.POLE['zhi']}
+"""
 
-_POLE_BINS_CTE = """
+_PF_ORACLE = f"""
+WITH RECURSIVE pts AS ({PAGES_CTE}),
+
 bins AS (
   SELECT CAST(floor(x / 5.0) AS BIGINT) AS bin_x,
          CAST(floor(y / 5.0) AS BIGINT) AS bin_y,
@@ -3840,19 +3632,7 @@ poles AS (
   FROM bins
   WHERE z_max - z_min > 4.0 AND n_points >= 5
     AND abs(z_median - (z_min + z_max) / 2) < 1.5
-)"""
-
-_POLE_WPTS_CTE = f"""
-SELECT m.obj_id AS win_id, p.page_id AS pid, p.x, p.y
-FROM pmatch m JOIN pts p
-  ON (p.x - m.wx) * (p.x - m.wx) + (p.y - m.wy) * (p.y - m.wy)
-     <= {_POLE['search_r'] ** 2}
-WHERE p.z >= m.gz + {_POLE['zlo']} AND p.z <= m.gz + {_POLE['zhi']}
-"""
-
-_POLE_FUSER_ORACLE = f"""
-WITH RECURSIVE pts AS ({PAGES_CTE}),
-{_POLE_BINS_CTE},
+),
 objs AS (
   SELECT obj_id, x AS ox, y AS oy,
          {R.ground_z_sql('CAST(floor(x) AS BIGINT)', 'CAST(floor(y) AS BIGINT)')}
@@ -3869,10 +3649,10 @@ pmatch AS (
                     + (p.cy - o.oy) * (p.cy - o.oy), p.bin_x, p.bin_y) AS rn
     FROM objs o JOIN poles p
       ON (p.cx - o.ox) * (p.cx - o.ox) + (p.cy - o.oy) * (p.cy - o.oy)
-         <= {_POLE['obj_max_dist_sq']}
+         <= {FP.POLE['obj_max_dist_sq']}
   ) WHERE rn = 1
 ),
-{dbscan_sql(_POLE_WPTS_CTE, _POLE['eps'], _POLE['min_samples'])},
+{dbscan_sql(_PF_WPTS_CTE, FP.POLE['eps'], FP.POLE['min_samples'])},
 clus AS (
   SELECT a.win_id, a.cluster, COUNT(*) AS n,
          CAST(SUM(CAST(round(w.x * 1000.0) AS BIGINT)) AS DOUBLE)
@@ -3893,20 +3673,20 @@ pick AS (
     SELECT c.*, m.gz,
            row_number() OVER (PARTITION BY c.win_id ORDER BY c.cluster) AS rn
     FROM clus c JOIN pmatch m ON m.obj_id = c.win_id
-    WHERE c.cr <= {_POLE['max_r']}
+    WHERE c.cr <= {FP.POLE['max_r']}
       AND (m.wx - c.ccx) * (m.wx - c.ccx) + (m.wy - c.ccy) * (m.wy - c.ccy)
-          < (c.cr + {_POLE['match_buf']}) * (c.cr + {_POLE['match_buf']})
+          < (c.cr + {FP.POLE['match_buf']}) * (c.cr + {FP.POLE['match_buf']})
   ) WHERE rn = 1
 )
 SELECT DISTINCT q.page_id, 60 AS label
 FROM pts q JOIN pick k
   ON (q.x - k.ccx) * (q.x - k.ccx) + (q.y - k.ccy) * (q.y - k.ccy)
-     <= ({_POLE['r_mult']} * k.cr) * ({_POLE['r_mult']} * k.cr)
-WHERE q.z <= k.gz + {_POLE['label_h']}
+     <= ({FP.POLE['r_mult']} * k.cr) * ({FP.POLE['r_mult']} * k.cr)
+WHERE q.z <= k.gz + {FP.POLE['label_h']}
 """
 
 
-@register("pole_fuser", _POLE_FUSER_ORACLE)
+@register("pole_fuser", _PF_ORACLE)
 def q_pole_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full BGTPoleFuser (reference pole_fuser.py:60-290): per registry
     object, match the nearest pole-like voxel column, DBSCAN the seed
@@ -3914,121 +3694,13 @@ def q_pole_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed cluster (radius + containment), then label the cylinder
     r_mult·r up to ground+label_height. Non-vacuous: labels actual
     pages with STREET_LIGHT (60)."""
-    from .operators.neighbors import binned_statistic_2d
-
-    P = _POLE
-    # pages feeds the candidate bins, the seed windows AND the final
+    # the pages feed the candidate bins, the seed windows and the
     # cylinder join — one scan
     pages = pages_from_orders(spark, sf_dir).select(
         "page_id", "x", "y", "z"
     ).localCheckpoint(eager=True)
-    bins = binned_statistic_2d(pages, res=5.0)
-    poles = bins.filter(
-        (F.col("z_max") - F.col("z_min") > 4.0)
-        & (F.col("n_points") >= 5)
-        & (F.abs(F.col("z_median") - (F.col("z_min") + F.col("z_max")) / 2) < 1.5)
-    ).select(
-        "bin_x", "bin_y",
-        (F.col("bin_x") * 5.0 + 2.5).alias("wx"),
-        (F.col("bin_y") * 5.0 + 2.5).alias("wy"),
-    )
-    objs = (
-        point_layer_df(spark)
-        .filter(F.col("bgt_type") == "lichtmast")
-        .select(
-            "obj_id",
-            F.col("x").alias("ox"),
-            F.col("y").alias("oy"),
-            R.ground_z_col(
-                F.floor(F.col("x")), F.floor(F.col("y"))
-            ).alias("gz"),
-        )
-    )
-    d2 = (F.col("wx") - F.col("ox")) * (F.col("wx") - F.col("ox")) + (
-        F.col("wy") - F.col("oy")
-    ) * (F.col("wy") - F.col("oy"))
-    from pyspark.sql import Window
-
-    wnd = Window.partitionBy("obj_id").orderBy(
-        d2, F.col("bin_x"), F.col("bin_y")
-    )
-    pmatch = (
-        F.broadcast(objs)
-        .join(poles, d2 <= F.lit(P["obj_max_dist_sq"]))
-        .withColumn("_rn", F.row_number().over(wnd))
-        .filter(F.col("_rn") == 1)
-        .select("obj_id", "gz", "wx", "wy")
-    )
-    wdist = (F.col("x") - F.col("wx")) * (F.col("x") - F.col("wx")) + (
-        F.col("y") - F.col("wy")
-    ) * (F.col("y") - F.col("wy"))
-    wpts = (
-        pages.join(F.broadcast(pmatch), wdist <= F.lit(P["search_r"] ** 2))
-        .filter(
-            (F.col("z") >= F.col("gz") + F.lit(P["zlo"]))
-            & (F.col("z") <= F.col("gz") + F.lit(P["zhi"]))
-        )
-        .select(
-            F.col("obj_id").alias("win_id"),
-            F.col("page_id").alias("pid"),
-            "x", "y",
-        )
-    )
-    assign = dbscan_windows(
-        wpts, eps=P["eps"], min_samples=P["min_samples"]
-    ).filter(F.col("cluster") >= 0)
-    xmm = F.round(F.col("x") * 1000.0).cast("long")
-    ymm = F.round(F.col("y") * 1000.0).cast("long")
-    clus = (
-        assign.join(wpts, ["win_id", "pid"])
-        .groupBy("win_id", "cluster")
-        .agg(
-            F.count("*").alias("n"),
-            (
-                F.sum(xmm).cast("double") / F.count("*") / F.lit(1000.0)
-            ).alias("ccx"),
-            (
-                F.sum(ymm).cast("double") / F.count("*") / F.lit(1000.0)
-            ).alias("ccy"),
-            (
-                F.greatest(
-                    F.max(xmm) - F.min(xmm), F.max(ymm) - F.min(ymm)
-                )
-                / F.lit(2000.0)
-            ).alias("cr"),
-        )
-    )
-    pdist = (F.col("wx") - F.col("ccx")) * (F.col("wx") - F.col("ccx")) + (
-        F.col("wy") - F.col("ccy")
-    ) * (F.col("wy") - F.col("ccy"))
-    wpick = Window.partitionBy("win_id").orderBy("cluster")
-    pick = (
-        clus.join(
-            F.broadcast(pmatch.select(F.col("obj_id").alias("win_id"), "gz", "wx", "wy")),
-            "win_id",
-        )
-        .filter(
-            (F.col("cr") <= F.lit(P["max_r"]))
-            & (
-                pdist
-                < (F.col("cr") + F.lit(P["match_buf"]))
-                * (F.col("cr") + F.lit(P["match_buf"]))
-            )
-        )
-        .withColumn("_rn", F.row_number().over(wpick))
-        .filter(F.col("_rn") == 1)
-        .select("win_id", "ccx", "ccy", "cr", "gz")
-    )
-    cdist = (F.col("x") - F.col("ccx")) * (F.col("x") - F.col("ccx")) + (
-        F.col("y") - F.col("ccy")
-    ) * (F.col("y") - F.col("ccy"))
-    rr = F.lit(P["r_mult"]) * F.col("cr")
-    return (
-        pages.join(F.broadcast(pick), cdist <= rr * rr)
-        .filter(F.col("z") <= F.col("gz") + F.lit(P["label_h"]))
-        .select("page_id", F.lit(60).alias("label"))
-        .distinct()
-    )
+    claims = FP.pole_claims(pages, ((8, "lichtmast", Labels.STREET_LIGHT),))
+    return claims.select("page_id", F.col("lbl").alias("label"))
 
 
 # ----------------------------------------------------------------------
@@ -4712,7 +4384,7 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .sources.layers import road_strips_values_sql, roads_meta_df  # noqa: E402
+from .sources.layers import road_strips_values_sql  # noqa: E402
 
 
 @register(
@@ -4749,37 +4421,11 @@ def q_car_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rectangle-intersection areas, no geometry lib. See
     car_fuser_mbr for the rotated-MBR overlap variant."""
     stats = cluster_stats(_ground_with_comp(spark, sf_dir, grid=_DIM_GRID))
-    ext_x = F.col("x_max") - F.col("x_min")
-    ext_y = F.col("y_max") - F.col("y_min")
-    # footprint = bbox padded by the half-cell each point occupies
-    # (singleton clusters still have a 1 m^2 footprint)
-    dims = stats.filter((ext_x <= 20.0) & (ext_y <= 20.0)).select(
-        "component", "n_points",
-        (F.col("x_min") - 0.5).alias("x0"), (F.col("x_max") + 0.5).alias("x1"),
-        (F.col("y_min") - 0.5).alias("y0"), (F.col("y_max") + 0.5).alias("y1"),
-    )
-    roads = roads_meta_df(spark)
-    cond = (
-        (F.col("rx0") < F.col("x1")) & (F.col("rx1") > F.col("x0"))
-        & (F.col("ry0") < F.col("y1")) & (F.col("ry1") > F.col("y0"))
-    )
-    ia = (
-        F.greatest(F.lit(0.0), F.least("x1", "rx1") - F.greatest("x0", "rx0"))
-        * F.greatest(F.lit(0.0), F.least("y1", "ry1") - F.greatest("y0", "ry0"))
-    )
-    overlap = (
-        dims.join(F.broadcast(roads), cond)
-        .groupBy("component", "n_points", "x0", "x1", "y0", "y1")
-        .agg(F.sum(ia).alias("_inter"))
-        .withColumn(
-            "road_pct",
-            F.col("_inter")
-            / ((F.col("x1") - F.col("x0")) * (F.col("y1") - F.col("y0")))
-            * F.lit(100.0),
-        )
-    )
-    return overlap.filter(F.col("road_pct") > 20.0).select(
-        "component", "n_points", "road_pct", F.lit(40).alias("label")
+    return (
+        FP.road_overlap(stats)
+        .filter(F.col("road_pct") > FP.CAR_MIN_PCT)
+        .select("component", "n_points", "road_pct",
+                F.lit(int(Labels.CAR)).alias("label"))
     )
 
 
@@ -4789,24 +4435,21 @@ def q_car_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
 # windows and must sit near a registry object of the right type.
 # ----------------------------------------------------------------------
 
-_SF_BAND = (0.2, 1.0)       # z − ground_z window for furniture points
-_SF_GRID = 2.0              # CC grid (denser band than ground -> finer)
-_SF_HEIGHT = (0.4, 1.0)     # min/max cluster height above mean ground
-_SF_EXT = (1.5, 20.0)       # axis-extent window (reference MBR window;
-                            # exact rotated-MBR variant: car_fuser_mbr)
-_SF_MAX_DIST_SQ = 400.0     # ≤ 20 m to a bank/afvalbak object
-_SF_TYPES = ("bank", "afvalbak")
 
-_SF_CC = f"""
+@register(
+    "street_furniture_fuser",
+    f"""
+WITH RECURSIVE pts AS ({PAGES_CTE}),
+
 fpts AS (
   SELECT page_id, x, y, z,
          CAST(200 + ((CAST(floor(x) AS BIGINT) * 31
                       + CAST(floor(y) AS BIGINT) * 17) % 100) AS BIGINT)
            AS gz_c,
-         CAST(floor(x / {_SF_GRID}) AS BIGINT) AS cx,
-         CAST(floor(y / {_SF_GRID}) AS BIGINT) AS cy
+         CAST(floor(x / {FP.SF_GRID}) AS BIGINT) AS cx,
+         CAST(floor(y / {FP.SF_GRID}) AS BIGINT) AS cy
   FROM pts
-  WHERE z - {_GZ} > {_SF_BAND[0]} AND z - {_GZ} <= {_SF_BAND[1]}
+  WHERE z - {_GZ} > {FP.SF_BAND[0]} AND z - {_GZ} <= {FP.SF_BAND[1]}
 ),
 fcells AS (SELECT DISTINCT cx, cy, cx * 2147483648 + cy AS cell FROM fpts),
 fadj AS (
@@ -4838,25 +4481,18 @@ fstats AS (
 ),
 fpass AS (
   SELECT s.component FROM fstats s
-  WHERE s.top_z - s.mean_gz >= {_SF_HEIGHT[0]}
-    AND s.top_z - s.mean_gz <= {_SF_HEIGHT[1]}
-    AND s.x_max - s.x_min >= {_SF_EXT[0]} AND s.x_max - s.x_min <= {_SF_EXT[1]}
-    AND s.y_max - s.y_min >= {_SF_EXT[0]} AND s.y_max - s.y_min <= {_SF_EXT[1]}
+  WHERE s.top_z - s.mean_gz >= {FP.SF_HEIGHT[0]}
+    AND s.top_z - s.mean_gz <= {FP.SF_HEIGHT[1]}
+    AND s.x_max - s.x_min >= {FP.SF_EXT[0]} AND s.x_max - s.x_min <= {FP.SF_EXT[1]}
+    AND s.y_max - s.y_min >= {FP.SF_EXT[0]} AND s.y_max - s.y_min <= {FP.SF_EXT[1]}
     AND EXISTS (
       SELECT 1 FROM {point_layer_values_sql()}
       WHERE o.bgt_type IN ('bank', 'afvalbak')
         AND (s.center_x - o.x) * (s.center_x - o.x)
-          + (s.center_y - o.y) * (s.center_y - o.y) <= {_SF_MAX_DIST_SQ}
+          + (s.center_y - o.y) * (s.center_y - o.y) <= {FP.SF_MAX_D2}
     )
 )
-"""
 
-
-@register(
-    "street_furniture_fuser",
-    f"""
-WITH RECURSIVE pts AS ({PAGES_CTE}),
-{_SF_CC}
 SELECT a.page_id, 80 AS label
 FROM fassign a JOIN fpass p ON p.component = a.component
 """,
@@ -4867,65 +4503,11 @@ def q_street_furniture_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vs exact integer-mm mean ground) and dimension window, whose
     centroid lies within max_dist of a bench/bin registry object, label
     all their points CITY_BENCH (80)."""
-    from .operators.components import grid_components
-
-    pages = pages_from_orders(spark, sf_dir)
-    enriched = R.with_raster(pages, R.raster_df(spark))
-    dz = F.col("z") - F.col("ground_z")
-    band = enriched.filter(
-        (dz > _SF_BAND[0]) & (dz <= _SF_BAND[1])
-    ).select("page_id", "x", "y", "z").localCheckpoint(eager=True)
-    comps = grid_components(band, grid_size=_SF_GRID)
-    # exact integer ground-z: gz = 2 + k/100 → gz_c = 200 + k (BIGINT)
-    gz_c = (
-        F.lit(200)
-        + (
-            F.floor(F.col("x")).cast("long") * 31
-            + F.floor(F.col("y")).cast("long") * 17
-        ) % 100
+    bench = Labels.CITY_BENCH
+    claims = FP.furniture_claims(
+        _pages_gz(spark, sf_dir), ((11, "afvalbak", bench), (11, "bank", bench))
     )
-    assign = comps.select("page_id", "component", "x", "y", "z").withColumn(
-        "gz_c", gz_c
-    )
-    xmm = F.round(F.col("x") * 1000.0).cast("long")
-    ymm = F.round(F.col("y") * 1000.0).cast("long")
-    stats = assign.groupBy("component").agg(
-        F.count("*").alias("n_points"),
-        F.max("z").alias("top_z"),
-        (F.sum("gz_c").cast("double") / F.count("*") / F.lit(100.0)).alias(
-            "mean_gz"
-        ),
-        F.min("x").alias("x_min"), F.max("x").alias("x_max"),
-        F.min("y").alias("y_min"), F.max("y").alias("y_max"),
-        (F.sum(xmm).cast("double") / F.count("*") / F.lit(1000.0)).alias(
-            "center_x"
-        ),
-        (F.sum(ymm).cast("double") / F.count("*") / F.lit(1000.0)).alias(
-            "center_y"
-        ),
-    )
-    h = F.col("top_z") - F.col("mean_gz")
-    ext_x = F.col("x_max") - F.col("x_min")
-    ext_y = F.col("y_max") - F.col("y_min")
-    dims_ok = stats.filter(
-        (h >= _SF_HEIGHT[0]) & (h <= _SF_HEIGHT[1])
-        & (ext_x >= _SF_EXT[0]) & (ext_x <= _SF_EXT[1])
-        & (ext_y >= _SF_EXT[0]) & (ext_y <= _SF_EXT[1])
-    )
-    objs = point_layer_df(spark).filter(
-        F.col("bgt_type").isin(*_SF_TYPES)
-    ).select(F.col("x").alias("ox"), F.col("y").alias("oy"))
-    d2 = (F.col("center_x") - F.col("ox")) * (
-        F.col("center_x") - F.col("ox")
-    ) + (F.col("center_y") - F.col("oy")) * (F.col("center_y") - F.col("oy"))
-    near = (
-        dims_ok.join(F.broadcast(objs), d2 <= F.lit(_SF_MAX_DIST_SQ))
-        .select("component")
-        .distinct()
-    )
-    return assign.join(F.broadcast(near), "component").select(
-        "page_id", F.lit(80).alias("label")
-    )
+    return claims.select("page_id", F.col("lbl").alias("label"))
 
 
 # ----------------------------------------------------------------------
@@ -4965,20 +4547,7 @@ def q_cable_line_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant; the principal-axis version runs inside armatuur_search).
     Means divide exact integer-mm sums so both engines agree
     bit-for-bit."""
-    pages = pages_from_orders(spark, sf_dir)
-    feats = pca_cell_features(pages, 5.0, 3)
-    cables = feats.filter(
-        (F.col("linearity") > 0.9) & (F.col("n_points") >= 4)
-    ).select(
-        "cell_x", "cell_y",
-        (F.col("cell_x") * F.lit(100000) + F.col("cell_y")).alias("cluster_id"),
-    )
-    members = pages.withColumns(
-        {
-            "cell_x": F.floor(F.col("x") / 5.0).cast("long"),
-            "cell_y": F.floor(F.col("y") / 5.0).cast("long"),
-        }
-    ).join(F.broadcast(cables), ["cell_x", "cell_y"])
+    members = FP.cable_members(pages_from_orders(spark, sf_dir))
     ymm = F.round(F.col("y") * 1000.0).cast("long")
     zmm = F.round(F.col("z") * 1000.0).cast("long")
     return members.groupBy(

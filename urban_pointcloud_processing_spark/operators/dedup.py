@@ -22,7 +22,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.text import (
     HASH_MOD,
@@ -295,24 +295,26 @@ def _band_key_expr(band: int):
     return acc
 
 
-def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
-    """Distinct (doc_a < doc_b) pairs sharing ≥1 LSH band bucket.
+def first_band_pairs(rows: DataFrame, id_col: str, keys: list[Column],
+                     names: tuple[str, str]) -> DataFrame:
+    """Distinct (a < b) id pairs of ``rows`` that share ≥1 band key;
+    ``keys`` holds one key Column per band, ``names`` the output pair
+    columns. The one LSH band self-join (MinHash and hyperplane LSH).
 
-    Round 6: a pair sharing several band buckets was emitted once per
-    band and deduplicated with a distinct over the pair table (a full
-    exchange). Each band row now carries the row's full band-key array
-    (LSH_BANDS longs), and a pair is kept only at its FIRST matching
-    band — the same dedup, computed in the join filter, no distinct
-    (the simhash_neardup first-equal-block idiom)."""
-    keys_arr = F.array(*[_band_key_expr(b) for b in range(LSH_BANDS)])
-    bands = sig.select(
-        "doc_id",
+    Each row explodes to one row per band and carries its full
+    band-key array; band rows equi-join on (band, key), and a pair
+    colliding on several bands is kept only at its FIRST equal band,
+    computed from the two arrays in the join filter — the same dedup as
+    a distinct over the pairs, without its exchange."""
+    keys_arr = F.array(*keys)
+    bands = rows.select(
+        id_col,
         keys_arr.alias("_ks"),
         F.posexplode(keys_arr).alias("band", "key"),
     )
     a, b = bands.alias("a"), bands.alias("b")
-    first_eq = F.lit(LSH_BANDS)
-    for i in reversed(range(LSH_BANDS)):
+    first_eq = F.lit(len(keys))
+    for i in reversed(range(len(keys))):
         first_eq = F.when(
             F.element_at(F.col("a._ks"), i + 1)
             == F.element_at(F.col("b._ks"), i + 1),
@@ -320,12 +322,20 @@ def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
         ).otherwise(first_eq)
     return (
         a.join(b, ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .filter(first_eq == F.col("band"))
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col(f"a.{id_col}").alias(names[0]),
+            F.col(f"b.{id_col}").alias(names[1]),
         )
+    )
+
+
+def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing ≥1 LSH band bucket."""
+    return first_band_pairs(
+        sig, "doc_id", [_band_key_expr(b) for b in range(LSH_BANDS)],
+        ("doc_a", "doc_b"),
     )
 
 

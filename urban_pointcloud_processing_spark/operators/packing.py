@@ -19,7 +19,7 @@ VERDICT r04 item 1):
    identical across the operator's independent scans);
 2. one map-side-combined aggregate computes per-bucket token sums; the
    collected result is **n_buckets rows** (driver-bounded, like the
-   ANN query matrix, `operators/similarity.py:141`);
+   ANN query matrix, `operators/similarity.py` ``_collect``);
 3. exclusive bucket offsets are broadcast back and a
    ``Window.partitionBy(bucket)`` (bucket-width-bounded, never
    corpus-wide) adds the within-bucket prefix.

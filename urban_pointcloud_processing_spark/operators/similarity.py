@@ -1,29 +1,61 @@
 """Similarity search over the embeddings table (array<float>, dim 64).
 
-Training-data-pipeline extension of SURVEY.md §2 (the reference's
-closest analog is its kNN machinery, src/upcp/utils/interpolation.py:
-119-308 — re-expressed here in embedding space):
+Training-data-pipeline extension of SURVEY.md §2: the reference's kNN
+machinery (src/upcp/utils/interpolation.py:119-308) re-expressed in
+embedding space.
 
-- brute-force cosine top-k (the exactness baseline),
-- cosine near-dup pairs (threshold join),
-- hyperplane-LSH-bucketed ANN (the 100 TB scale path: candidates come
-  from band equi-joins on a 16-bit signature instead of a cross join).
+One top-k kernel serves the four search queries. They differ only in
+which (query, vector) pairs they score:
 
-All dot products fold strictly left-to-right in index order on both
-engines (Spark ``aggregate(zip_with(...))`` vs DuckDB
-``list_reduce(list_transform(...))``), and every input is cast to
-double first — so cosines are bit-identical and the oracle can compare
-values, not just row counts. The LSH variant is deterministic (fixed
-integer hyperplanes), so its result set is oracle-reproducible too.
+- ``cosine_topk``: every pair (the exactness baseline);
+- ``ivf_topk`` and ``ivf_kmeans_topk``: the vectors whose nearest
+  centroid is among the query's ``nprobe`` nearest (modulo-picked or
+  Lloyd-trained centroids);
+- ``ann_lsh_topk``: the vectors that share ≥1 of 4 hyperplane-signature
+  bands with the query.
+
+Each shared piece exists once:
+
+- ``_collect``: the one driver collect of the query and centroid rows;
+- ``_decode``: an embedding batch as a float64 ``(n, dim)`` matrix;
+- ``_fold``: the dimension-order dot fold behind every norm, pair dot
+  and hyperplane projection;
+- ``_cosines`` and ``_rank_key``: round-9 cosines (NULL when a norm is
+  zero, the oracle's ``x / 0``) and the one ranking rule — cosine
+  descending, NULL after every finite value, ties to the lower id — for
+  the top-k, the centroid argmax and the probe order;
+- ``_signatures``: the hyperplane weight matrix and signature fold;
+- ``_topk``: one ``mapInPandas`` pass. Per Arrow batch the family's
+  candidate mask picks the pairs and self pairs drop; cosines are
+  computed for the masked pairs only; each query keeps its local top-k
+  and one ``row_number`` window ranks what the batches emit. The local
+  top-k is exact because vec_ids are distinct, so the order has no
+  ties.
+
+The pair queries (``cosine_neardup``, ``cosine_neardup_lsh``) stay
+joins verified by one pair-cosine Column; the LSH variant's candidates
+come from ``dedup.first_band_pairs``, the band self-join it shares
+with MinHash LSH.
+
+Exactness: every dot product folds left to right in index order on
+both engines (NumPy here, ``list_reduce(list_transform(...))`` in the
+DuckDB oracle) after a cast to double, so cosines are bit-identical
+and the oracle compares values, not just row counts. The hyperplanes
+are fixed integers, so LSH candidate sets are oracle-reproducible too.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
+import functools
+import operator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import HASH_MOD
+from .dedup import first_band_pairs
 
 HP_BITS = 16
 HP_BANDS = 4
@@ -35,25 +67,173 @@ HP_B = [(2654435761 * (b + 1) + 40503 * 6) % HASH_MOD or 1 for b in range(HP_BIT
 HP_MOD = 1009
 HP_SHIFT = HP_MOD // 2
 
+# (query, vector) cells a top-k block scores at once: bounds the pair
+# index and cosine arrays at any batch size.
+_PAIR_BLOCK = 1 << 18
+
+
+# ----------------------------------------------------------------------
+# The shared NumPy pieces
+# ----------------------------------------------------------------------
+
+def _decode(values) -> np.ndarray:
+    """An embedding column (Arrow batch or collected rows) as a float64
+    ``(n, dim)`` matrix; float32 → float64 is exact."""
+    return np.array(list(values), dtype=np.float64)
+
+
+def _fold(A: np.ndarray, B: np.ndarray, ia=slice(None), ib=slice(None)):
+    """Dot products over the last axis, folded in dimension order:
+    ``((0 + a0*b0) + a1*b1) + …`` — the oracle's ``list_reduce`` order,
+    so every value is bit-identical across engines. Leading axes
+    broadcast: row against row gives row dots, ``A[:, None]`` against
+    ``B[None]`` a dense ``(len(A), len(B))`` block. Index arrays
+    ``ia``/``ib`` fold the pairs ``(A[ia[j]], B[ib[j]])`` instead,
+    gathering one dimension per step, never whole rows."""
+    acc = 0.0
+    for i in range(A.shape[-1]):  # index order == fold order
+        acc = acc + A[..., i][ia] * B[..., i][ib]
+    return acc
+
+
+def _norms(M: np.ndarray) -> np.ndarray:
+    return np.sqrt(_fold(M, M))
+
+
+def _py_round9(m):
+    """Decimal-style round-half-away at 9 dp matching Spark F.round /
+    DuckDB round (np.round is half-even — differs at exact ties)."""
+    return np.sign(m) * np.floor(np.abs(m) * 1e9 + 0.5) / 1e9
+
+
+def _cosines(A, B, an, bn, ia=slice(None), ib=slice(None)) -> np.ndarray:
+    """``round(dot / (|a| |b|), 9)`` over ``_fold``'s rows or pairs; NaN
+    (emitted as NULL) where a norm is zero, like the oracle's ``x / 0``."""
+    den = an[ia] * bn[ib]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _py_round9(np.where(den == 0, np.nan, _fold(A, B, ia, ib) / den))
+
+
+def _rank_key(cos: np.ndarray) -> np.ndarray:
+    """The one ranking rule as a sort key: cosine descending with NULL
+    (NaN) after every finite value. Ties go to the lower id: centroid
+    columns are id-sorted and read with a first-max argmax or a stable
+    sort; the top-k sorts on vec_id explicitly."""
+    return np.where(np.isnan(cos), -np.inf, cos)
+
+
+def _nearest(V, vn, C, cn) -> np.ndarray:
+    """Each row's nearest centroid column under the ranking rule."""
+    cos = _cosines(V[:, None], C[None], vn[:, None], cn[None])
+    return np.argmax(_rank_key(cos), axis=1)
+
+
+def _signatures(M: np.ndarray) -> np.ndarray:
+    """HP_BITS-bit hyperplane sign signatures: bit b is set when the
+    dimension-order projection on hyperplane b (the integer weights
+    above, as doubles) is positive."""
+    i = np.arange(1, M.shape[1] + 1, dtype=np.int64)
+    w = (
+        np.array(HP_A, dtype=np.int64)[:, None] * i
+        + np.array(HP_B, dtype=np.int64)[:, None]
+    ) % HP_MOD - HP_SHIFT
+    proj = _fold(M[:, None], w.astype(np.float64)[None])
+    return ((proj > 0).astype(np.int64) << np.arange(HP_BITS)).sum(axis=1)
+
+
+def _bands(sig: np.ndarray) -> np.ndarray:
+    """(n, HP_BANDS) band values, HP_ROWS signature bits each."""
+    return (sig[:, None] >> (np.arange(HP_BANDS) * HP_ROWS)) & (
+        (1 << HP_ROWS) - 1
+    )
+
+
+def _collect(emb: DataFrame, *mods: int) -> list:
+    """The one driver collect of the search family: for each modulus
+    ``m`` in ``mods``, the rows with ``vec_id % m == 0`` as (ids,
+    float64 matrix), sorted by vec_id — all from one job.
+
+    Precondition: these sets are bounded. About n/query_mod +
+    n/centroid_mod rows come to the driver, and the matrices built from
+    them ship in every task closure. A corpus whose query or centroid
+    set outgrows the driver needs the distributed fallback of ROADMAP
+    open item 4 (``bounded_collect``), which belongs here."""
+    keep = functools.reduce(
+        operator.or_, [F.col("vec_id") % m == 0 for m in mods]
+    )
+    rows = sorted(
+        emb.filter(keep).select("vec_id", "embedding").collect(),
+        key=lambda r: r["vec_id"],
+    )
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    M = _decode(r["embedding"] for r in rows)
+    return [(ids[ids % m == 0], M[ids % m == 0]) for m in mods]
+
+
+def _topk(emb: DataFrame, qids, Q, k: int, candidates) -> DataFrame:
+    """The one embedding top-k: (query_id, vec_id, cosine, rank) for
+    the query rows ``qids``/``Q``.
+
+    ``candidates(V, vn)`` is the family's ``(n_queries, n_batch)`` mask
+    of the pairs to score in an Arrow batch (rows ``V``, norms ``vn``).
+    The corpus is scanned once with no pair materialisation: per batch,
+    self pairs drop, the masked pairs get their cosines in query blocks
+    of about ``_PAIR_BLOCK`` cells, and each query keeps its local
+    top-k by (cosine desc, NULL last, vec_id); one window over the
+    emitted rows picks the global top-k."""
+    qn = _norms(Q)
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = _decode(pdf["embedding"])
+            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            vn = _norms(V)
+            mask = candidates(V, vn) & (qids[:, None] != vids[None, :])
+            step = max(1, _PAIR_BLOCK // len(vids))
+            for lo in range(0, len(qids), step):
+                qi, vj = np.nonzero(mask[lo:lo + step])
+                if qi.size == 0:
+                    continue
+                qi += lo
+                cos = _cosines(Q, V, qn, vn, qi, vj)
+                order = np.lexsort((vids[vj], -_rank_key(cos), qi))
+                qi, vj, cos = qi[order], vj[order], cos[order]
+                # position within the query's run; runs start at the
+                # first index of each query id
+                keep = np.arange(qi.size) - np.searchsorted(qi, qi) < k
+                yield pd.DataFrame({
+                    "query_id": qids[qi[keep]],
+                    "vec_id": vids[vj[keep]],
+                    "cosine": cos[keep],
+                })
+
+    cand = emb.select("vec_id", "embedding").mapInPandas(
+        kernel, "query_id long, vec_id long, cosine double"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", "cosine", "rank")
+    )
+
+
+# ----------------------------------------------------------------------
+# Spark-side pieces: the dot UDF, signatures and pair cosines
+# ----------------------------------------------------------------------
 
 def dot_udf():
-    """Arrow pandas UDF computing the SAME left-to-right fold as the
-    oracle's list_reduce (``dot_sql``): a sequential loop over the
-    dimension index with each step vectorized across the batch — the
-    accumulation order per row is identical, so results stay
-    bit-identical while running ~50x faster than the interpreted
-    Catalyst higher-order fold."""
-    import numpy as np
+    """Arrow pandas UDF of row-pair dot products: ``_fold``, the same
+    left-to-right fold as the oracle's ``dot_sql``, each step vectorised
+    across the batch (~50x faster than the interpreted Catalyst
+    higher-order fold, bit-identical results)."""
     from pyspark.sql.types import DoubleType
 
     @F.pandas_udf(DoubleType())
     def dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.stack(a.to_numpy()).astype(np.float64)
-        bm = np.stack(b.to_numpy()).astype(np.float64)
-        acc = np.zeros(len(am), dtype=np.float64)
-        for i in range(am.shape[1]):  # index order == fold order
-            acc = acc + am[:, i] * bm[:, i]
-        return pd.Series(acc)
+        return pd.Series(_fold(_decode(a), _decode(b)))
 
     return dot
 
@@ -70,104 +250,57 @@ def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
 
-def _with_norm(emb: DataFrame) -> DataFrame:
-    d = dot_udf()
-    return emb.select(
-        "vec_id", "embedding",
-        F.sqrt(d(F.col("embedding"), F.col("embedding"))).alias("_norm"),
+def hp_signature_udf():
+    """``_signatures`` as a pandas UDF returning the signature as a
+    long. The engine computes signatures inside its own kernels; this
+    wrapper stays for ``bench.py``'s LSH probe."""
+    from pyspark.sql.types import LongType
+
+    @F.pandas_udf(LongType())
+    def sig(emb: pd.Series) -> pd.Series:
+        return pd.Series(_signatures(_decode(emb)))
+
+    return sig
+
+
+def _pair_cosine(ea: Column, eb: Column, na: Column, nb: Column) -> Column:
+    """Row-pair cosine ``round(dot / (na * nb), 9)``; NULL when a norm
+    is zero (the oracle's ``x / 0``; ANSI ``/`` would raise)."""
+    return F.round(F.try_divide(dot_udf()(ea, eb), na * nb), 9)
+
+
+def _with_norm_sig(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding, _norm, sig) in ONE mapInPandas pass: the
+    embedding column crosses the Arrow boundary once for both the norm
+    and the signature."""
+    emb_t = dict(emb.dtypes)["embedding"]
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            m = _decode(pdf["embedding"])
+            yield pd.DataFrame({
+                "vec_id": pdf["vec_id"].to_numpy(),
+                "embedding": pdf["embedding"],
+                "_norm": _norms(m),
+                "sig": _signatures(m),
+            })
+
+    return emb.select("vec_id", "embedding").mapInPandas(
+        kernel, f"vec_id long, embedding {emb_t}, _norm double, sig long"
     )
-
-
-def _cosine(pref_a: str, pref_b: str) -> Column:
-    return F.round(
-        dot_udf()(F.col(f"{pref_a}.embedding"), F.col(f"{pref_b}.embedding"))
-        / (F.col(f"{pref_a}._norm") * F.col(f"{pref_b}._norm")),
-        9,
-    )
-
-
-def _seq_dot_matrix(Q, V):
-    """(nq, nv) dot-product matrix accumulated in DIMENSION ORDER —
-    per-pair float accumulation identical to the oracle's
-    list_reduce fold (and to dot_udf)."""
-    import numpy as np
-
-    acc = np.zeros((Q.shape[0], V.shape[0]), dtype=np.float64)
-    for i in range(Q.shape[1]):
-        acc = acc + Q[:, i : i + 1] * V[None, :, i]
-    return acc
-
-
-def _py_round9(m):
-    """Decimal-style round-half-away at 9 dp matching Spark F.round /
-    DuckDB round (np.round is half-even — differs at exact ties)."""
-    import numpy as np
-
-    return np.sign(m) * np.floor(np.abs(m) * 1e9 + 0.5) / 1e9
 
 
 def cosine_topk(
     emb: DataFrame, k: int = 10, query_mod: int = 50
 ) -> DataFrame:
-    """Brute-force exact top-k by cosine for query vectors
-    (vec_id % query_mod == 0). The tiny query matrix is collected into
-    the mapInPandas closure (a broadcast, not a join), so the corpus is
-    scanned ONCE with no pair materialization: each Arrow batch emits
-    only its per-query local top-k; a final window over nq×k rows per
-    partition picks the global top-k. Deterministic (cosine desc,
-    vec_id) order; dot folds in dimension order → bit-identical to the
-    oracle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
-
-    qrows = sorted(
-        emb.filter(F.col("vec_id") % query_mod == 0)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-    qn = np.sqrt(_seq_dot_matrix(Q, Q).diagonal())
-
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("vec_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            vn = np.sqrt(_seq_dot_matrix(V, V).diagonal())
-            cos = _py_round9(_seq_dot_matrix(Q, V) / (qn[:, None] * vn[None, :]))
-            rows = {"query_id": [], "vec_id": [], "cosine": []}
-            for qi in range(len(qids)):
-                c = cos[qi].copy()
-                c[vids == qids[qi]] = -np.inf  # exclude self
-                # local top-k with (cosine desc, vec_id asc) tie-break
-                order = np.lexsort((vids, -c))[:k]
-                for j in order:
-                    if np.isfinite(c[j]):
-                        rows["query_id"].append(int(qids[qi]))
-                        rows["vec_id"].append(int(vids[j]))
-                        rows["cosine"].append(float(c[j]))
-            yield pd.DataFrame(rows)
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(gen, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    """Brute-force exact top-k by cosine for the query vectors
+    (vec_id % query_mod == 0): every (query, vector) pair is a
+    candidate."""
+    ((qids, Q),) = _collect(emb, query_mod)
+    return _topk(
+        emb, qids, Q, k, lambda V, vn: np.ones((len(qids), len(V)), bool)
     )
 
 
@@ -193,12 +326,15 @@ SELECT query_id, vec_id, cosine, rank FROM (
 
 def cosine_neardup(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """All (a < b) pairs with cosine ≥ threshold. Exact; at 100 TB this
-    runs per-LSH-bucket — see ann_lsh_topk for the bucketed path."""
-    base = _with_norm(emb)
+    runs per-LSH-bucket — see cosine_neardup_lsh for the bucketed path."""
+    base = _with_norm_sig(emb)
     a, b = base.alias("a"), base.alias("b")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn("cosine", _cosine("a", "b"))
+        .withColumn("cosine", _pair_cosine(
+            F.col("a.embedding"), F.col("b.embedding"),
+            F.col("a._norm"), F.col("b._norm"),
+        ))
         .filter(F.col("cosine") >= F.lit(threshold))
         .select(
             F.col("a.vec_id").alias("vec_a"),
@@ -221,52 +357,6 @@ WHERE round({dot} / (a.nrm * b.nrm), 9) >= {threshold}
 """
 
 
-def _with_norm_sig(emb: DataFrame) -> DataFrame:
-    """(vec_id, embedding, _norm, sig) in ONE mapInPandas pass — the
-    chained dot-UDF + signature-UDF pair cost two Arrow round trips of
-    the embedding column per row; fused they cost one (guide §4.1:
-    control how many columns cross, and how often). Norm uses the
-    dimension-order fold (== dot_udf); the signature reproduces
-    hp_signature_udf's weight formula and fold order exactly."""
-    import numpy as np
-    import pandas as pd
-
-    emb_t = dict(emb.dtypes)["embedding"]
-    schema = f"vec_id long, embedding {emb_t}, _norm double, sig long"
-
-    def gen(batches):
-        w = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            dim = m.shape[1]
-            if w is None or w.shape[1] != dim:
-                w = np.empty((HP_BITS, dim), dtype=np.float64)
-                for b in range(HP_BITS):
-                    for i in range(dim):
-                        w[b, i] = float(
-                            (HP_A[b] * (i + 1) + HP_B[b]) % HP_MOD - HP_SHIFT
-                        )
-            nrm = _norms_np(m)
-            sig = np.zeros(len(m), dtype=np.int64)
-            for b in range(HP_BITS):
-                acc = np.zeros(len(m), dtype=np.float64)
-                for i in range(dim):  # index order == fold order
-                    acc = acc + m[:, i] * w[b, i]
-                sig |= (acc > 0).astype(np.int64) << b
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "embedding": pdf["embedding"],
-                "_norm": nrm,
-                "sig": sig,
-            })
-
-    return emb.select("vec_id", "embedding").mapInPandas(gen, schema)
-
-
 def cosine_neardup_lsh(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Scale path for near-dup pairs: candidates come from the
     hyperplane-LSH band equi-join (share ≥1 of 4 signature bands), then
@@ -278,55 +368,15 @@ def cosine_neardup_lsh(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     (1-θ/π)^4 ≈ 0.53, and ≥1 of 4 bands ≈ 0.95; candidates are
     deterministic (fixed integer hyperplanes) so the oracle reproduces
     the SAME candidate set and the result is value-exact."""
-    # norms + signatures feed bands, both vector re-joins: one
-    # materialization (row per vector) beats recomputing the UDF 3×;
-    # fused norm+sig kernel = one Arrow pass (round 6)
+    # norms and signatures feed the bands and both vector re-joins: one
+    # materialisation (row per vector) beats recomputing the kernel 3×
     base = _with_norm_sig(emb).localCheckpoint(eager=True)
-    band_w = HP_BITS // HP_BANDS
-    bands = base.select(
-        "vec_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("sig"), i * band_w)
-                        .bitwiseAND(F.lit((1 << band_w) - 1))
-                        .alias("val"),
-                    )
-                    for i in range(HP_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select(
-        "vec_id", "sig",
-        F.col("bv.band").alias("band"), F.col("bv.val").alias("val"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    # a pair colliding on several bands would be emitted once per band;
-    # keep it only at its FIRST matching band (computable from the two
-    # signatures) instead of a distinct over the duplicated pairs —
-    # same dedup, one exchange fewer (the simhash_neardup idiom).
-    # Carrying sig costs 8 bytes per band row.
-    def _band_val(col, i):
-        return F.shiftright(col, i * band_w).bitwiseAND(
-            F.lit((1 << band_w) - 1)
-        )
-
-    first_eq = F.lit(HP_BANDS)
-    for i in reversed(range(HP_BANDS)):
-        first_eq = F.when(
-            _band_val(F.col("a.sig"), i) == _band_val(F.col("b.sig"), i),
-            F.lit(i),
-        ).otherwise(first_eq)
-    cand = (
-        a.join(b, ["band", "val"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .filter(first_eq == F.col("band"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-        )
+    mask = F.lit((1 << HP_ROWS) - 1)
+    cand = first_band_pairs(
+        base, "vec_id",
+        [F.shiftright("sig", i * HP_ROWS).bitwiseAND(mask)
+         for i in range(HP_BANDS)],
+        ("vec_a", "vec_b"),
     )
     va = base.select(
         F.col("vec_id").alias("vec_a"),
@@ -341,14 +391,9 @@ def cosine_neardup_lsh(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     return (
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
-        .withColumn(
-            "cosine",
-            F.round(
-                dot_udf()(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                9,
-            ),
-        )
+        .withColumn("cosine", _pair_cosine(
+            F.col("emb_a"), F.col("emb_b"), F.col("norm_a"), F.col("norm_b"),
+        ))
         .filter(F.col("cosine") >= F.lit(threshold))
         .select("vec_a", "vec_b", "cosine")
     )
@@ -394,68 +439,19 @@ WHERE round({dot} / (va.nrm * vb.nrm), 9) >= {threshold}
 # ----------------------------------------------------------------------
 
 
-def _norms_np(M):
-    import numpy as np
-
-    return np.sqrt(_seq_dot_matrix(M, M).diagonal())
-
-
-def _ivf_score_fused(emb: DataFrame, cent_ids, C, qids, Q, nprobe: int,
-                     k: int) -> DataFrame:
-    """Assignment + probe-list scoring fused into ONE map-only kernel
-    (the cosine_topk shape): per batch, vectors assign to their nearest
-    centroid and every query whose nprobe probe set contains that
-    centroid scores the vector — candidate (query, vec, cosine) rows
-    stream straight into the final per-query top-k window. Removes the
-    assigned-table materialization, the probes broadcast join and the
-    per-pair dot UDF stage. All doubles identical to the join-based
-    plan: probe sets use the same (round9-cosine desc, cent_id asc)
-    order; pair cosines use the dimension-order fold and round9."""
-    import numpy as np
-    import pandas as pd
-
-    cn = _norms_np(C)
-    qn = _norms_np(Q)
-    qcos = _py_round9(_seq_dot_matrix(Q, C) / (qn[:, None] * cn[None, :]))
-    # per query: the nprobe probed centroid COLUMN indexes
-    probe_cols = [
-        np.lexsort((cent_ids, -qcos[qi]))[:nprobe]
-        for qi in range(len(qids))
-    ]
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            vn = _norms_np(V)
-            ccos = _py_round9(
-                _seq_dot_matrix(V, C) / (vn[:, None] * cn[None, :])
-            )
-            best = np.argmax(ccos, axis=1)
-            pair = _py_round9(
-                _seq_dot_matrix(Q, V) / (qn[:, None] * vn[None, :])
-            )
-            rows = {"query_id": [], "vec_id": [], "cosine": []}
-            for qi in range(len(qids)):
-                sel = np.isin(best, probe_cols[qi]) & (vids != qids[qi])
-                for j in np.nonzero(sel)[0]:
-                    rows["query_id"].append(int(qids[qi]))
-                    rows["vec_id"].append(int(vids[j]))
-                    rows["cosine"].append(float(pair[qi, j]))
-            yield pd.DataFrame(rows)
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(
-        gen, "query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+def _ivf_topk(emb: DataFrame, qids, Q, C, nprobe: int, k: int) -> DataFrame:
+    """IVF candidates over the id-sorted centroid rows ``C``: a vector
+    is scored for a query when its nearest centroid is among the
+    query's ``nprobe`` nearest, both under the ranking rule. The probe
+    lists are picked on the driver; the assignment runs per batch
+    inside the top-k kernel, so no assigned table is materialised."""
+    cn = _norms(C)
+    qc = _cosines(Q[:, None], C[None], _norms(Q)[:, None], cn[None])
+    probes = np.argsort(-_rank_key(qc), axis=1, kind="stable")[:, :nprobe]
+    probed = np.zeros(qc.shape, dtype=bool)
+    np.put_along_axis(probed, probes, True, axis=1)
+    return _topk(
+        emb, qids, Q, k, lambda V, vn: probed[:, _nearest(V, vn, C, cn)]
     )
 
 
@@ -467,28 +463,12 @@ def ivf_topk(
     nprobe: int = 3,
 ) -> DataFrame:
     """IVF ANN top-k: corpus vectors assign to their nearest coarse
-    centroid (deterministic (cosine desc, centroid_id) argmax); each
-    query searches the union of its nprobe nearest centroids' lists
-    with exact cosines. Round 6: the bounded centroid/query matrices
-    collect ONCE to the driver; assignment is a map-only NumPy kernel
-    and probe selection runs on the driver — one collect job replaces
-    two eager checkpoints, two crossJoins and two windows, with
-    bit-identical arithmetic throughout (see _ivf_score_fused)."""
-    import numpy as np
-
-    rows = sorted(
-        emb.filter(
-            (F.col("vec_id") % centroid_mod == 0)
-            | (F.col("vec_id") % query_mod == 0)
-        ).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    M = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    cmask, qmask = ids % centroid_mod == 0, ids % query_mod == 0
-    cent_ids, C = ids[cmask], M[cmask]
-    qids, Q = ids[qmask], M[qmask]
-    return _ivf_score_fused(emb, cent_ids, C, qids, Q, nprobe, k)
+    centroid (vec_id % centroid_mod == 0); each query searches the
+    union of its nprobe nearest centroids' lists with exact cosines.
+    The centroid and query rows come to the driver in one collect job
+    (see ``_ivf_topk``)."""
+    (_, C), (qids, Q) = _collect(emb, centroid_mod, query_mod)
+    return _ivf_topk(emb, qids, Q, C, nprobe, k)
 
 
 def ivf_topk_sql(
@@ -581,33 +561,16 @@ def ivf_kmeans_topk(
     structure). The FULL corpus is still assigned to the trained
     centroids afterwards, so the inverted lists cover every vector.
     The oracle mirrors the same sample predicate. Default 1 = train on
-    everything (previous behavior).
+    everything.
 
-    Round 6 shape: each Lloyd iteration is ONE job — a map-only kernel
-    assigns the train sample against the in-closure centroid matrix
-    and emits per-task (cent_id, n, Σ µ-quantized components) partials
-    (≤ n_cents rows per task); the bounded partials merge on the
-    driver with exact integer sums. Replaces per-iteration
-    crossJoin + window + double posexplode aggregation + eager
-    checkpoint. Arithmetic is bit-identical: same µ-quantization
-    (half-away round), same Σ/n/Q double division, same dimension-order
-    norm fold, same (cosine desc, cent_id) assignment tie-break."""
-    import numpy as np
-    import pandas as pd
-
-    qrows = sorted(
-        emb.filter(
-            (F.col("vec_id") % centroid_mod == 0)
-            | (F.col("vec_id") % query_mod == 0)
-        ).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    M = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                  for r in qrows])
-    cent_ids, C = ids[ids % centroid_mod == 0], M[ids % centroid_mod == 0]
-    qids, Q = ids[ids % query_mod == 0], M[ids % query_mod == 0]
-
+    Each Lloyd iteration is ONE job: a map-only kernel assigns the
+    train sample to its nearest centroid (``_nearest``) and emits
+    per-task (cent_id, n, Σ µ-quantized components) partials (≤ n_cents
+    rows per task); the bounded partials merge on the driver with exact
+    integer sums. Arithmetic matches the oracle bit for bit: same
+    µ-quantization (half-away round), same Σ/n/Q double division, same
+    dimension-order norm fold, same ranking rule."""
+    (cent_ids, C), (qids, Q) = _collect(emb, centroid_mod, query_mod)
     train = (
         emb if train_mod <= 1
         else emb.filter(F.col("vec_id") % train_mod == 0)
@@ -617,24 +580,15 @@ def ivf_kmeans_topk(
         return (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int64)
 
     for _ in range(iters):
-        cn = _norms_np(C)
-        c_ids_iter, C_iter = cent_ids, C
 
-        def partials(batches, c_ids=c_ids_iter, Cm=C_iter, cnv=cn):
+        def partials(batches, c_ids=cent_ids, Cm=C, cn=_norms(C)):
             acc_n: dict[int, int] = {}
             acc_s: dict[int, object] = {}
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                V = np.stack([
-                    np.asarray(v, dtype=np.float64)
-                    for v in pdf["embedding"]
-                ])
-                vn = _norms_np(V)
-                cos = _py_round9(
-                    _seq_dot_matrix(V, Cm) / (vn[:, None] * cnv[None, :])
-                )
-                best = np.argmax(cos, axis=1)
+                V = _decode(pdf["embedding"])
+                best = _nearest(V, _norms(V), Cm, cn)
                 mq = _half_away(V * _KM_Q)
                 for ci in np.unique(best):
                     key = int(c_ids[ci])
@@ -672,7 +626,7 @@ def ivf_kmeans_topk(
             for cid in new_ids
         ], dtype=np.float64)
 
-    return _ivf_score_fused(emb, cent_ids, C, qids, Q, nprobe, k)
+    return _ivf_topk(emb, qids, Q, C, nprobe, k)
 
 
 def ivf_kmeans_topk_sql(
@@ -771,34 +725,6 @@ SELECT query_id, vec_id, cosine, rank FROM (
 # Hyperplane LSH — the ANN scale path
 # ----------------------------------------------------------------------
 
-def hp_signature_udf():
-    """16-bit hyperplane sign signature as a long. Per bit, the
-    projection folds over the dimension index sequentially (each step
-    vectorized across the Arrow batch) with integer weights
-    ((HP_A*(i+1) + HP_B) mod HP_MOD − HP_SHIFT, i 0-based) — signatures
-    are bit-identical to the oracle SQL."""
-    import numpy as np
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def sig(emb: pd.Series) -> pd.Series:
-        m = np.stack(emb.to_numpy()).astype(np.float64)
-        dim = m.shape[1]
-        w = np.empty((HP_BITS, dim), dtype=np.float64)
-        for b in range(HP_BITS):
-            for i in range(dim):
-                w[b, i] = float((HP_A[b] * (i + 1) + HP_B[b]) % HP_MOD - HP_SHIFT)
-        out = np.zeros(len(m), dtype=np.int64)
-        for b in range(HP_BITS):
-            acc = np.zeros(len(m), dtype=np.float64)
-            for i in range(dim):  # index order == fold order
-                acc = acc + m[:, i] * w[b, i]
-            out |= (acc > 0).astype(np.int64) << b
-        return pd.Series(out)
-
-    return sig
-
-
 def hp_signature_sql(emb: str) -> str:
     parts = []
     for b in range(HP_BITS):
@@ -815,102 +741,24 @@ def hp_signature_sql(emb: str) -> str:
 def ann_lsh_topk(
     emb: DataFrame, k: int = 10, query_mod: int = 50
 ) -> DataFrame:
-    """LSH-bucketed ANN top-k: candidates share ≥1 of 4 signature
-    bands. Deterministic hyperplanes → oracle-reproducible.
+    """LSH-bucketed ANN top-k: a vector is a candidate for a query when
+    they share ≥1 of 4 signature bands. Deterministic hyperplanes →
+    oracle-reproducible.
 
-    Round 6 shape: the corpus was already fully scanned just to
-    compute signatures, so for the BOUNDED query set the band check
-    runs inside the same Arrow pass — per batch, each vector's bands
-    compare against the collected query signatures (a few integer ops
-    per (query, vector)), exact cosines are computed ONLY for the
-    band-colliding survivors, and candidate rows stream into the final
-    per-query top-k window. The old plan's band explode (4× rows),
-    band equi-join shuffle, pair distinct, and two embedding re-attach
-    joins all disappear; candidate set and cosines are identical (same
-    band decomposition, same dimension-order fold, same round9). Scale
-    note: work is O(corpus × n_queries) integer band compares + the
-    same colliding-pair cosines as before — still never a cross-join
-    of the corpus against itself, and now with zero shuffle before the
-    nq×k-row top-k."""
-    import numpy as np
-    import pandas as pd
+    The corpus is scanned once anyway, so the band check runs inside
+    the top-k pass: per batch, each vector's bands compare against the
+    collected query bands (a few integer ops per pair) and cosines are
+    computed for the colliding pairs only. No band explode, band join,
+    pair distinct or embedding re-join; work is O(corpus × n_queries)
+    integer compares plus the colliding pairs' cosines — never a cross
+    join of the corpus against itself."""
+    ((qids, Q),) = _collect(emb, query_mod)
+    qb = _bands(_signatures(Q))
 
-    band_w = HP_BITS // HP_BANDS
-    qrows = sorted(
-        emb.filter(F.col("vec_id") % query_mod == 0)
-        .select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                  for r in qrows])
-    qn = _norms_np(Q)
-    # query signatures via the same weight formula / fold order
-    dim = Q.shape[1]
-    w_mat = np.empty((HP_BITS, dim), dtype=np.float64)
-    for b in range(HP_BITS):
-        for i in range(dim):
-            w_mat[b, i] = float(
-                (HP_A[b] * (i + 1) + HP_B[b]) % HP_MOD - HP_SHIFT
-            )
+    def collide(V, vn):
+        return (qb[:, None] == _bands(_signatures(V))[None]).any(axis=2)
 
-    def _sigs(M):
-        sig = np.zeros(len(M), dtype=np.int64)
-        for b in range(HP_BITS):
-            acc = np.zeros(len(M), dtype=np.float64)
-            for i in range(dim):  # index order == fold order
-                acc = acc + M[:, i] * w_mat[b, i]
-            sig |= (acc > 0).astype(np.int64) << b
-        return sig
-
-    qsig = _sigs(Q)
-    mask_val = (1 << band_w) - 1
-    qbands = np.stack(
-        [(qsig >> (i * band_w)) & mask_val for i in range(HP_BANDS)]
-    )  # (HP_BANDS, nq)
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            vn = _norms_np(V)
-            vsig = _sigs(V)
-            vbands = np.stack(
-                [(vsig >> (i * band_w)) & mask_val
-                 for i in range(HP_BANDS)]
-            )  # (HP_BANDS, nv)
-            rows = {"query_id": [], "vec_id": [], "cosine": []}
-            for qi in range(len(qids)):
-                match = np.zeros(len(vids), dtype=bool)
-                for i in range(HP_BANDS):
-                    match |= vbands[i] == qbands[i, qi]
-                match &= vids != qids[qi]
-                sel = np.nonzero(match)[0]
-                if sel.size == 0:
-                    continue
-                cos = _py_round9(
-                    _seq_dot_matrix(Q[qi:qi + 1], V[sel])[0]
-                    / (qn[qi] * vn[sel])
-                )
-                rows["query_id"].extend([int(qids[qi])] * sel.size)
-                rows["vec_id"].extend(int(v) for v in vids[sel])
-                rows["cosine"].extend(float(c) for c in cos)
-            if rows["query_id"]:
-                yield pd.DataFrame(rows)
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(
-        gen, "query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _topk(emb, qids, Q, k, collide)
 
 
 def ann_lsh_topk_sql(k: int = 10, query_mod: int = 50) -> str:

@@ -6,6 +6,10 @@ top-k, in the centroid argmax and in the probe order. The fixture
 variant zeroes a plain vector (7), a centroid under ``centroid_mod``
 20 (20) and a query under ``query_mod`` 50 (50), and every similarity
 query must still match its oracle row for row.
+
+The second variant drops every vec_id divisible by 10, so no row is a
+query under ``query_mod`` 50 or a centroid under ``centroid_mod`` 20:
+the searches must return an empty top-k, as the oracle does.
 """
 
 from __future__ import annotations
@@ -47,10 +51,24 @@ def zero_dir(tmp_path_factory):
         [[0.0] * dims if z else v for z, v in zip(zero.to_pylist(), col.to_pylist())],
         col.type,
     )
-    pq.write_table(
-        emb.set_column(emb.schema.get_field_index("embedding"), "embedding", zeroed),
-        d / "embeddings.parquet",
-    )
+    return _fixture_dir(d, emb.set_column(
+        emb.schema.get_field_index("embedding"), "embedding", zeroed
+    ))
+
+
+@pytest.fixture(scope="module")
+def no_query_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("no_queries")
+    emb = pq.read_table(f"{SOURCE}/embeddings.parquet")
+    keep = pa.array([v % 10 != 0 for v in emb.column("vec_id").to_pylist()])
+    assert 0 < pc.sum(keep).as_py() < len(emb)
+    return _fixture_dir(d, emb.filter(keep))
+
+
+def _fixture_dir(d, emb) -> str:
+    """``d`` holding ``emb`` as the embeddings and the other sf0.001
+    tables as symlinks."""
+    pq.write_table(emb, d / "embeddings.parquet")
     for t in TABLES:
         if t != "embeddings":
             os.symlink(f"{SOURCE}/{t}.parquet", d / f"{t}.parquet")
@@ -61,5 +79,13 @@ def zero_dir(tmp_path_factory):
 def test_zero_vector_parity(spark, zero_dir, name):
     report = compare(
         spark, zero_dir, name, Q.queries()[name], Q.oracle_sql()[name]
+    )
+    assert report.get("ok"), report
+
+
+@pytest.mark.parametrize("name", SIMILARITY)
+def test_no_query_rows_parity(spark, no_query_dir, name):
+    report = compare(
+        spark, no_query_dir, name, Q.queries()[name], Q.oracle_sql()[name]
     )
     assert report.get("ok"), report

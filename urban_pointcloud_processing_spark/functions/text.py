@@ -295,27 +295,6 @@ def quality_cols_sql(expr: str) -> dict[str, str]:
 # Shingles (word n-grams) — the dedup unit
 # ----------------------------------------------------------------------
 
-def shingles_from_tokens_expr(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined) from a token-array
-    column. ``toks`` MUST be a bound column (projected under its own
-    alias), not an inline ``tokens_expr(...)``: Spark does not hoist
-    non-lambda subexpressions out of LambdaFunction bodies, so an
-    inline expression would be re-evaluated for every gram element —
-    O(n·L²) per document instead of O(n·L) (measured >100× on
-    2k-token documents; a bound multi-referenced alias is protected
-    from CollapseProject inlining)."""
-    idx = F.sequence(F.lit(0), F.size(toks) - F.lit(n))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.get(toks, i + F.lit(j)) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def shingles_from_tokens_sql(tok_col: str, n: int = 3) -> str:
     """Shingle list from an ALREADY-MATERIALIZED token-list column
     (DuckDB lambdas may reference outer columns but not subqueries, so
@@ -419,8 +398,8 @@ def repetition_cols_expr(col: Column, n: int = REP_NGRAM_N,
     documents must pass ``toks`` as a BOUND token-array column
     (projected under its own alias): the gram lambda references the
     token array per element, and an inline tokenizer would re-run the
-    regex split per gram — O(n·L²) per document (see
-    shingles_from_tokens_expr)."""
+    regex split per gram — O(n·L²) per document (Spark does not hoist
+    non-lambda subexpressions out of a lambda body)."""
     if toks is None:
         toks = tokens_expr(col)
     has = (F.length(F.trim(col)) > 0) & (F.size(toks) >= n)

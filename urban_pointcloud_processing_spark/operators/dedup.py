@@ -27,7 +27,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..functions.text import (
     HASH_MOD,
     WS_RUN,
-    shingles_from_tokens_expr,
     shingles_from_tokens_sql,
     str_hash_sql,
     str_hash_udf,
@@ -124,8 +123,11 @@ def shingle_sids_udf(n: int = 3):
     with the batched NumPy char fold — the text crosses the Python
     boundary ONCE per doc instead of once per shingle row, and the
     downstream explode ships longs, not gram strings (guide §4.1/4.2).
-    Bit-identical to explode(shingles_from_tokens_expr) + str_hash_udf
-    (pinned by tests/test_parity.py shingle consumers)."""
+    Bit-identical to the oracle's ``shingles_from_tokens_sql`` +
+    ``str_hash_sql`` (pinned by the tests/test_parity.py cases of the
+    shingle consumers: doc_fingerprint, ngram_jaccard, minhash_lsh,
+    dedup_clusters, decontaminate, bloom_decontaminate,
+    boilerplate_shingles)."""
     from pyspark.sql.types import ArrayType, LongType
 
     from ..functions.text import str_hash_np
@@ -161,8 +163,8 @@ def shingle_table(docs: DataFrame, n: int = 3) -> DataFrame:
     One vectorized Arrow pass computes each document's shingle-hash
     array (``shingle_sids_udf``); the explode then carries longs only.
     Documents with < n tokens (or NULL text) emit an empty array and
-    disappear in the explode — exactly the rows the previous
-    shingles_from_tokens_expr + per-row-hash plan produced."""
+    disappear in the explode — exactly the rows of the oracle's
+    ``shingles_from_tokens_sql`` (the parity tests above pin it)."""
     return docs.select(
         "doc_id",
         F.explode(shingle_sids_udf(n)(F.col("text"))).alias("sid"),
@@ -496,8 +498,8 @@ def simhash_neardup(
     Buckets holding more than salt_target docs (boilerplate-heavy
     corpora) take the salted self-join path: side a spreads over
     ceil(n/target) salts by doc-id hash, side b replicates to every
-    salt — each (a, b) pair still meets exactly once, result identical
-    (operators/skew.py pattern; tests/test_skew.py)."""
+    salt (``skew.salted``) — each (a, b) pair still meets exactly once,
+    result identical (tests/test_skew.py)."""
     n_blocks, block_w = simhash_blocks(max_hamming)
     # the signature subtree feeds BOTH self-join sides plus the skew
     # sketch — materialize it once (tiny: one row per doc) instead of
@@ -526,35 +528,11 @@ def simhash_neardup(
     join_keys = ["blk", "val"]
     a_side, b_side = blocks, blocks
     if salt_target:
-        from .skew import cell_frequency_sketch
+        from .skew import cell_frequency_sketch, salted
 
-        hot = cell_frequency_sketch(blocks, ["blk", "val"], salt_target)
-        a_side = (
-            blocks.join(F.broadcast(hot), ["blk", "val"], "left")
-            .withColumn(
-                "_salt",
-                F.when(
-                    F.col("_salt_factor").isNotNull(),
-                    F.pmod(
-                        F.xxhash64(F.col("doc_id")), F.col("_salt_factor")
-                    ).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("_salt_factor")
-        )
-        b_side = (
-            blocks.join(F.broadcast(hot), ["blk", "val"], "left")
-            .withColumn(
-                "_salt",
-                F.explode(
-                    F.when(
-                        F.col("_salt_factor").isNotNull(),
-                        F.sequence(F.lit(0), F.col("_salt_factor") - F.lit(1)),
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .drop("_salt_factor")
-        )
+        hot = cell_frequency_sketch(blocks, join_keys, salt_target)
+        a_side = salted(blocks, join_keys, hot, "doc_id")
+        b_side = salted(blocks, join_keys, hot)
         join_keys = ["blk", "val", "_salt"]
     a, b = a_side.alias("a"), b_side.alias("b")
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))

@@ -1,4 +1,5 @@
-"""Distance joins: nearest-match, bounded kNN + IDW, binned statistics.
+"""Distance joins: nearest match, bounded kNN with IDW and max, kNN
+label fusion, binned statistics.
 
 Reference semantics re-created:
 - nearest-match with distance cap: street_furniture_fuser.py:80-85,
@@ -10,20 +11,44 @@ Reference semantics re-created:
   min/max/median/count per voxel column).
 
 Spark strategy (SURVEY.md §2.3): every theta-join becomes an equi-join
-on spatial-cell keys + residual distance predicate. The build side is
-exploded to its 3×3 cell neighbourhood (grid_disk ring-1), the probe
-joins on its own cell — with cell_res ≥ max_dist this is exhaustive,
-so results are EXACT, not approximate. Distances are compared as
-squared distances (exact double arithmetic, no sqrt) and top-k uses a
-deterministic (dist_sq, obj_id) tie-break (SURVEY.md §7.3 item 3).
+on spatial-cell keys plus a residual distance predicate. The
+cell-neighbourhood kNN machinery exists once:
+
+- ``knn_candidates_shuffle`` is the one candidate join. The build side
+  explodes to the 3×3 keys around its cell
+  (``tiling.neighbor_cell_ids``), the probe side keys on its own cell
+  (``tiling.cell_id``), and the residual filter keeps
+  ``dist_sq <= max_dist²``. Cells are max_dist wide, so the
+  neighbourhood holds every point within max_dist and the join is
+  exact, not approximate; distances compare squared (exact double
+  arithmetic, no sqrt). It runs as a shuffle join for build
+  sides that scale with the data, salted over hot probe cells with
+  ``skew.salted`` when asked; ``knn_candidates`` is the same join with
+  a broadcast hint, for small object layers.
+- ``nearest_k`` is the one nearest-k fold: per probe, the sorted slice
+  of its k nearest candidates under the deterministic (dist_sq,
+  build id) order (SURVEY.md §7.3 item 3). ``knn_idw``, ``knn_max``,
+  ``knn_label_fusion`` and ``queries.q_raster_build`` read it.
+- ``idw`` is the one weighted-mean fold over that slice; the fixed
+  accumulation order keeps the doubles bit-identical to the oracle.
+
+Cell keys are tiling's packed BIGINTs, which need |x/max_dist| and
+|y/max_dist| below 2^30. A point outside that range, and a NaN, ±Inf
+or NULL coordinate, gets no cell and pairs with nothing. That is the
+one deviation from an exact distance join: two points that are both
+outside the range never pair, even within max_dist of each other. The
+raster join (``sources/raster.py``) follows the same rule. RD
+coordinates stay below 300 km, so every real point has a cell for any
+max_dist ≥ 1 mm.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..tiling import cell_x, cell_y, neighbor_cells
+from ..tiling import cell_id, cell_x, cell_y, neighbor_cell_ids
+from .skew import cell_frequency_sketch, salted
 
 
 def _dist_sq(ax, ay, bx, by):
@@ -38,34 +63,13 @@ def knn_candidates(
     probe_id: str = "page_id",
     build_id: str = "obj_id",
     build_cols: tuple[str, ...] = ("bgt_type", "z"),
-    cell_res: float | None = None,
 ) -> DataFrame:
-    """(probe × build) candidate pairs within max_dist, via the
-    cell-neighborhood broadcast index. Exact when cell_res ≥ max_dist."""
-    cell_res = cell_res or max_dist
-    bx, by = F.col("_bx"), F.col("_by")
-    build_idx = (
-        build.select(
-            F.col(build_id),
-            F.col("x").alias("_bx"),
-            F.col("y").alias("_by"),
-            *[F.col(c) for c in build_cols],
-        )
-        .withColumn(
-            "_cell",
-            F.explode(neighbor_cells(cell_x(bx, cell_res), cell_y(by, cell_res))),
-        )
-    )
-    probe_keyed = probe.select(probe_id, "x", "y").withColumn(
-        "_cell",
-        cell_x(F.col("x"), cell_res) * F.lit(1 << 31) + cell_y(F.col("y"), cell_res),
-    )
-    d2 = _dist_sq(F.col("x"), F.col("y"), bx, by)
-    return (
-        probe_keyed.join(F.broadcast(build_idx), "_cell")
-        .withColumn("dist_sq", d2)
-        .filter(F.col("dist_sq") <= F.lit(max_dist * max_dist))
-        .drop("_cell", "_bx", "_by")
+    """(probe × build) candidate pairs within max_dist: the cell join
+    with the build side broadcast (``F.broadcast`` is the broadcast
+    hint), for small object layers."""
+    return knn_candidates_shuffle(
+        probe, build, max_dist, probe_id, build_id, build_cols,
+        join_hint="broadcast",
     )
 
 
@@ -76,99 +80,113 @@ def knn_candidates_shuffle(
     probe_id: str = "page_id",
     build_id: str = "obj_id",
     build_cols: tuple[str, ...] = ("label",),
-    cell_res: float | None = None,
     salt_target: int | None = None,
     join_hint: str | None = None,
     keep_keys: bool = False,
 ) -> DataFrame:
-    """Shuffle-join twin of ``knn_candidates`` for BUILD SIDES THAT
-    SCALE WITH THE DATA (e.g. labeled pages feeding label propagation):
-    both sides are keyed by spatial cell, the build side explodes to
-    its 3×3 neighborhood, and the join is a plain equi-join on the cell
-    key — sort-merge/shuffle-hash at scale, never a broadcast. Exact
-    for cell_res ≥ max_dist (same guarantee as the broadcast variant).
+    """The one candidate join: (probe_id, x, y, build_id, build_cols…,
+    dist_sq) for every probe × build pair within max_dist. Without a
+    hint it is a plain equi-join on the cell key — sort-merge or
+    shuffle-hash at scale — for BUILD SIDES THAT SCALE WITH THE DATA
+    (e.g. labeled pages feeding label propagation); ``knn_candidates``
+    is the same join with the build side broadcast.
 
-    ``salt_target`` arms explicit skew salting (operators/skew.py, the
-    north-rule dense-urban-cell case AQE's join split does not fully
-    cover): probe cells holding more than salt_target rows spread over
-    ceil(n/target) salt values (pmod of the probe id hash) and the
-    build rows of those cells replicate to every salt — the join key
-    becomes (cell, salt), each probe×build pair still meets exactly
-    once, so the result set is IDENTICAL to the unsalted join
-    (tests/test_skew.py asserts this).
+    ``salt_target`` arms explicit skew salting (the north-rule
+    dense-urban-cell case AQE's join split does not fully cover): probe
+    cells holding more than salt_target rows spread over
+    ceil(n/target) salts and their build rows replicate to every salt
+    (``skew.salted``). The join key becomes (cell, salt) and each
+    probe×build pair still meets exactly once, so the result set is
+    IDENTICAL to the unsalted join (tests/test_skew.py).
 
-    ``join_hint`` (e.g. 'merge') pins the join strategy — used by
-    bench.py's skew fixture to reproduce the at-scale sort-merge shape
-    when the synthetic build side is small enough that Catalyst would
-    broadcast it (at 10^12 rows the build side never fits a
-    broadcast, so SMJ/shuffle-hash is the real plan)."""
-    cell_res = cell_res or max_dist
+    ``join_hint`` pins the join strategy: 'broadcast' for
+    ``knn_candidates``; 'merge' in bench.py's skew fixture reproduces
+    the at-scale sort-merge shape when the synthetic build side is
+    small enough that Catalyst would broadcast it."""
     bx, by = F.col("_bx"), F.col("_by")
-    build_idx = (
-        build.select(
-            F.col(build_id),
-            F.col("x").alias("_bx"),
-            F.col("y").alias("_by"),
-            *[F.col(c) for c in build_cols],
-        )
-        .withColumn(
-            "_cell",
-            F.explode(neighbor_cells(cell_x(bx, cell_res), cell_y(by, cell_res))),
-        )
-    )
+    build_idx = build.select(
+        F.col(build_id), F.col("x").alias("_bx"), F.col("y").alias("_by"),
+        *[F.col(c) for c in build_cols],
+    ).withColumn("_cell", F.explode(neighbor_cell_ids(bx, by, max_dist)))
     probe_keyed = probe.select(probe_id, "x", "y").withColumn(
-        "_cell",
-        cell_x(F.col("x"), cell_res) * F.lit(1 << 31) + cell_y(F.col("y"), cell_res),
+        "_cell", cell_id(F.col("x"), F.col("y"), max_dist)
     )
-    d2 = _dist_sq(F.col("x"), F.col("y"), bx, by)
     keys = ["_cell"]
     if salt_target:
-        from .skew import cell_frequency_sketch
-
-        hot = cell_frequency_sketch(probe_keyed, ["_cell"], salt_target)
-        probe_keyed = (
-            probe_keyed.join(F.broadcast(hot), "_cell", "left")
-            .withColumn(
-                "_salt",
-                F.when(
-                    F.col("_salt_factor").isNotNull(),
-                    F.pmod(
-                        F.xxhash64(F.col(probe_id)), F.col("_salt_factor")
-                    ).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("_salt_factor")
-        )
-        build_idx = (
-            build_idx.join(F.broadcast(hot), "_cell", "left")
-            .withColumn(
-                "_salt",
-                F.explode(
-                    F.when(
-                        F.col("_salt_factor").isNotNull(),
-                        F.sequence(
-                            F.lit(0), F.col("_salt_factor") - F.lit(1)
-                        ),
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .drop("_salt_factor")
-        )
+        hot = cell_frequency_sketch(probe_keyed, keys, salt_target)
+        probe_keyed = salted(probe_keyed, keys, hot, probe_id)
+        build_idx = salted(build_idx, keys, hot)
         keys = ["_cell", "_salt"]
     if join_hint:
         build_idx = build_idx.hint(join_hint)
     out = (
         probe_keyed.join(build_idx, keys)
-        .withColumn("dist_sq", d2)
+        .withColumn("dist_sq", _dist_sq(F.col("x"), F.col("y"), bx, by))
         .filter(F.col("dist_sq") <= F.lit(max_dist * max_dist))
     )
     # keep_keys: a probe row has exactly one (cell[, salt]), so a
-    # downstream per-probe aggregation can group by (keys..., probe_id)
-    # — identical groups, and when the join ran as a shuffle join its
-    # cell hash-partitioning already satisfies that clustering, so the
-    # aggregation adds NO exchange (guide §2.4: share one exchange)
-    drop = ["_bx", "_by"] if keep_keys else [*keys, "_bx", "_by"]
-    return out.drop(*drop)
+    # downstream per-probe aggregation (nearest_k) can group by
+    # (keys..., probe_id) — identical groups, and when the join ran as a
+    # shuffle join its cell hash-partitioning already satisfies that
+    # clustering, so the aggregation adds NO exchange (guide §2.4)
+    return out.drop("_bx", "_by", *([] if keep_keys else keys))
+
+
+def nearest_k(
+    cand: DataFrame,
+    k: int,
+    probe_id: str,
+    build_id: str,
+    cols: tuple[str, ...],
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one nearest-k fold: (probe_id, _nb), where ``_nb`` is the
+    array of struct(dist_sq, build_id, cols…) of the probe's k nearest
+    candidates, sorted by (dist_sq, build_id) — exactly the rows a
+    ``row_number() <= k`` window over that order keeps, in one
+    aggregation instead of a window plus a regroup.
+
+    ``keys`` are join keys the probe determines (``keep_keys=True``):
+    grouping on them as well leaves the groups unchanged, and a shuffle
+    join's cell partitioning already satisfies the clustering, so the
+    candidate pairs aggregate in place instead of being re-shuffled
+    (guide §2.4)."""
+    out = cand.groupBy(*keys, probe_id).agg(
+        F.slice(
+            F.sort_array(F.collect_list(F.struct("dist_sq", build_id, *cols))),
+            1, k,
+        ).alias("_nb"),
+    )
+    return out.drop(*keys) if keys else out
+
+
+def idw(value_col: str, power: int = 2, reg: float = 1e-9) -> Column:
+    """Inverse-distance-weighted mean of ``value_col`` over
+    ``nearest_k``'s ``_nb`` (reference interpolation.py:285-301:
+    weights 1/(d^p + reg)). Both sums fold over the sorted slice, so the
+    float accumulation order is fixed and the result bit-exact against
+    the oracle. d^p with integer p is an exact multiplication chain (no
+    pow/libm), and the weight is recomputed from dist_sq inside the
+    fold: the same deterministic double as a precomputed column, and the
+    collected struct stays 8 bytes/row narrower."""
+
+    def weight(d2):
+        if power == 2:
+            dp = d2
+        elif power == 1:
+            dp = F.sqrt(d2)
+        else:
+            dp = F.pow(F.sqrt(d2), F.lit(float(power)))
+        return F.lit(1.0) / (dp + F.lit(reg))
+
+    return F.aggregate(
+        "_nb", F.lit(0.0), lambda a, s: a + weight(s["dist_sq"]) * s[value_col]
+    ) / F.aggregate("_nb", F.lit(0.0), lambda a, s: a + weight(s["dist_sq"]))
+
+
+def nearest_max(value_col: str) -> Column:
+    """Max of ``value_col`` over ``nearest_k``'s ``_nb``."""
+    return F.array_max(F.transform("_nb", lambda s: s[value_col]))
 
 
 def knn_label_fusion(
@@ -192,27 +210,13 @@ def knn_label_fusion(
         probe, labeled, max_dist, probe_id, build_id, (label_col,),
         salt_target=salt_target, keep_keys=True,
     )
-    join_keys = ["_cell", "_salt"] if salt_target else ["_cell"]
-    # Round 6: ONE probe-keyed aggregation replaces the chain
-    # row_number window → (probe,label) regroup → second window — three
-    # exchanges down to one (guide §2.4). The sorted slice reproduces
-    # the rn<=k neighbor set exactly ((dist_sq, build_id) ordering);
-    # the majority vote with ties to the SMALLER label is computed over
-    # the ≤k-element array in the projection: array_max over
-    # (n_votes, -label) pairs == (n_votes DESC, label ASC) row_number=1.
-    # group by (join keys..., probe_id): a probe determines its cell
-    # and salt, so groups are IDENTICAL to groupBy(probe_id) — but the
-    # shuffle-join's cell partitioning already satisfies the clustering
-    # and the 10^2-candidates-per-probe pair table is aggregated
-    # in place instead of re-shuffled (guide §2.4)
-    topk = cand.groupBy(*join_keys, probe_id).agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct("dist_sq", build_id, label_col))
-            ),
-            1, k,
-        ).alias("_nb"),
-    ).drop(*join_keys)
+    # one probe-keyed aggregation (nearest_k, grouped on the join keys
+    # too) then the majority vote with ties to the SMALLER label over
+    # the ≤k-element array: array_max over (n_votes, -label) pairs ==
+    # (n_votes DESC, label ASC) row_number=1 — three exchanges down to
+    # one (guide §2.4)
+    keys = ("_cell", "_salt") if salt_target else ("_cell",)
+    topk = nearest_k(cand, k, probe_id, build_id, (label_col,), keys)
     labels = F.transform("_nb", lambda s: s[label_col])
     scored = topk.select(
         probe_id,
@@ -276,56 +280,15 @@ def knn_idw(
     value_col: str = "z",
 ) -> DataFrame:
     """k-nearest IDW interpolation (reference interpolation.py:285-301:
-    weights 1/(d^p + reg), weighted mean of neighbour values).
-
-    The weighted sum is folded over a SORTED neighbour array
-    (sort_array + aggregate) so the float accumulation order is
-    deterministic — required for bit-exact oracle comparison.
-    """
+    weights 1/(d^p + reg), weighted mean of neighbour values), folded
+    over the sorted neighbour slice (``nearest_k``, ``idw``)."""
     cand = knn_candidates(
         probe, build, max_dist, probe_id, build_id, (value_col,)
     )
-
-    # d^p with integer p as exact multiplication chain (no pow/libm);
-    # the weight 1/(d^p + reg) is recomputed from dist_sq inside the
-    # fold — the same deterministic double as a precomputed column,
-    # and the collected struct stays 8 bytes/row narrower (guide §2.3
-    # "narrower types / shuffle fewer bytes")
-    def _w_of(d2):
-        if power == 2:
-            dp = d2
-        elif power == 1:
-            dp = F.sqrt(d2)
-        else:
-            dp = F.pow(F.sqrt(d2), F.lit(float(power)))
-        return F.lit(1.0) / (dp + F.lit(reg))
-
-    # Round 6: ONE aggregation replaces the row_number window + regroup:
-    # sort_array over the collected candidates then slice(1, k) selects
-    # exactly the rows rn<=k used to keep — the struct leads with
-    # (dist_sq, build_id), the same ordering key, and the fold below
-    # consumes the identical sorted prefix, so the float accumulation
-    # order is unchanged (bit-exact). n_neighbors = the slice length.
-    grouped = cand.groupBy(probe_id).agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct("dist_sq", build_id, value_col))
-            ),
-            1, k,
-        ).alias("_nb"),
-    )
-    return grouped.select(
+    return nearest_k(cand, k, probe_id, build_id, (value_col,)).select(
         probe_id,
         F.size("_nb").cast("long").alias("n_neighbors"),
-        (
-            F.aggregate(
-                "_nb", F.lit(0.0),
-                lambda a, s: a + _w_of(s["dist_sq"]) * s[value_col],
-            )
-            / F.aggregate(
-                "_nb", F.lit(0.0), lambda a, s: a + _w_of(s["dist_sq"])
-            )
-        ).alias("idw"),
+        idw(value_col, power, reg).alias("idw"),
     )
 
 
@@ -341,19 +304,9 @@ def knn_max(
     """'max' variant (reference interpolation.py:302-303): max of the k
     nearest neighbour values — used to build the building surface."""
     cand = knn_candidates(probe, build, max_dist, probe_id, build_id, (value_col,))
-    # same one-aggregation top-k as knn_idw; max over the sorted slice
-    # is order-independent, so results are unchanged
-    grouped = cand.groupBy(probe_id).agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct("dist_sq", build_id, value_col))
-            ),
-            1, k,
-        ).alias("_nb"),
-    )
-    return grouped.select(
+    return nearest_k(cand, k, probe_id, build_id, (value_col,)).select(
         probe_id,
-        F.array_max(F.transform("_nb", lambda s: s[value_col])).alias("max_val"),
+        nearest_max(value_col).alias("max_val"),
         F.size("_nb").cast("long").alias("n_neighbors"),
     )
 

@@ -155,9 +155,11 @@ def _collect(emb: DataFrame, *mods: int) -> list:
 
     Precondition: these sets are bounded. About n/query_mod +
     n/centroid_mod rows come to the driver, and the matrices built from
-    them ship in every task closure. A corpus whose query or centroid
-    set outgrows the driver needs the distributed fallback of ROADMAP
-    open item 4 (``bounded_collect``), which belongs here."""
+    them ship in every task closure. An empty set decodes to shape
+    (0,); the searches answer it with ``_no_hits``, as the oracle's
+    join does. A corpus whose query or centroid set outgrows the
+    driver needs the distributed fallback of ROADMAP open item 4
+    (``bounded_collect``), which belongs here."""
     keep = functools.reduce(
         operator.or_, [F.col("vec_id") % m == 0 for m in mods]
     )
@@ -168,6 +170,14 @@ def _collect(emb: DataFrame, *mods: int) -> list:
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     M = _decode(r["embedding"] for r in rows)
     return [(ids[ids % m == 0], M[ids % m == 0]) for m in mods]
+
+
+def _no_hits(emb: DataFrame) -> DataFrame:
+    """The empty top-k, for a search with no query or no centroid rows
+    (the oracle's join then has no pairs)."""
+    return emb.sparkSession.createDataFrame(
+        [], "query_id long, vec_id long, cosine double, rank int"
+    )
 
 
 def _topk(emb: DataFrame, qids, Q, k: int, candidates) -> DataFrame:
@@ -445,6 +455,8 @@ def _ivf_topk(emb: DataFrame, qids, Q, C, nprobe: int, k: int) -> DataFrame:
     query's ``nprobe`` nearest, both under the ranking rule. The probe
     lists are picked on the driver; the assignment runs per batch
     inside the top-k kernel, so no assigned table is materialised."""
+    if not (len(qids) and len(C)):
+        return _no_hits(emb)
     cn = _norms(C)
     qc = _cosines(Q[:, None], C[None], _norms(Q)[:, None], cn[None])
     probes = np.argsort(-_rank_key(qc), axis=1, kind="stable")[:, :nprobe]
@@ -571,6 +583,8 @@ def ivf_kmeans_topk(
     µ-quantization (half-away round), same Σ/n/Q double division, same
     dimension-order norm fold, same ranking rule."""
     (cent_ids, C), (qids, Q) = _collect(emb, centroid_mod, query_mod)
+    if not (len(qids) and len(C)):
+        return _no_hits(emb)
     train = (
         emb if train_mod <= 1
         else emb.filter(F.col("vec_id") % train_mod == 0)
@@ -753,6 +767,8 @@ def ann_lsh_topk(
     integer compares plus the colliding pairs' cosines — never a cross
     join of the corpus against itself."""
     ((qids, Q),) = _collect(emb, query_mod)
+    if not len(qids):
+        return _no_hits(emb)
     qb = _bands(_signatures(Q))
 
     def collide(V, vn):

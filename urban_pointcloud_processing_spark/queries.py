@@ -3492,51 +3492,28 @@ GROUP BY c.cell_x, c.cell_y
 def q_raster_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Surface-raster build: per occupied 5 m cell, IDW(k=8, p=2) of the
     point layer (ground surface) and max of the same neighbours
-    (building surface), rounded to 2 dp like the reference
-    (ahn_preprocessing.py:184-185)."""
-    from .operators.neighbors import knn_candidates
+    (building surface). The reference rounds both to 2 dp
+    (ahn_preprocessing.py:184-185); this does not (see below)."""
+    from .operators.neighbors import idw, knn_candidates, nearest_k, nearest_max
 
     cells = _grid_cells(spark, sf_dir, 5.0)
     cand = knn_candidates(
         cells, point_layer_df(spark), max_dist=40.0,
         probe_id="cell_id", build_cols=("z",),
     )
-    # Round 6 (guide §2.4): ONE cell-keyed aggregation — the sorted
-    # slice reproduces the old rn<=8 window pick exactly and the fold
-    # consumes the identical sorted prefix (bit-exact); the join back
-    # to `cells` (a second pages scan + distinct + equi-join) is
-    # replaced by decoding (cell_x, cell_y) from the pairing key
+    # ONE cell-keyed aggregation (nearest_k) feeds both surfaces; the
+    # IDW at p=2 is knn_idw's fold, bit-identical to the oracle. The
+    # join back to `cells` (a second pages scan + distinct + equi-join)
+    # is replaced by decoding (cell_x, cell_y) from the pairing key
     # cell_id = cell_x * 100000 + cell_y (coords are non-negative and
     # cell_y < 100000 in the RD window, so div/mod decode is exact).
-    # the IDW weight recomputes from dist_sq inside the fold — same
-    # deterministic double, 8 bytes/row narrower collect buffers
-    grouped = cand.groupBy("cell_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct("dist_sq", "obj_id", "z"))
-            ),
-            1, 8,
-        ).alias("_nb"),
-    )
-    reg9 = F.lit(1e-9)
-    idw = (
-        F.aggregate(
-            "_nb", F.lit(0.0),
-            lambda a, s: a + (F.lit(1.0) / (s["dist_sq"] + reg9)) * s["z"],
-        )
-        / F.aggregate(
-            "_nb", F.lit(0.0),
-            lambda a, s: a + F.lit(1.0) / (s["dist_sq"] + reg9),
-        )
-    )
-    # no 2-dp rounding here: engines disagree on half-way rounding and
-    # the reference's f16 quantization is a storage detail — the
-    # ordered fold already makes the double bit-identical to the oracle
-    return grouped.select(
+    # No 2-dp rounding here: engines disagree on half-way rounding and
+    # the reference's f16 quantization is a storage detail.
+    return nearest_k(cand, 8, "cell_id", "obj_id", ("z",)).select(
         F.expr("cell_id div 100000").alias("cell_x"),
         F.pmod(F.col("cell_id"), F.lit(100000)).cast("long").alias("cell_y"),
-        idw.alias("ground_z"),
-        F.array_max(F.transform("_nb", lambda s: s["z"])).alias("building_z"),
+        idw("z").alias("ground_z"),
+        nearest_max("z").alias("building_z"),
         F.size("_nb").cast("long").alias("n_neighbors"),
     )
 
@@ -3709,7 +3686,7 @@ def q_pole_fuser(spark: SparkSession, sf_dir: str) -> DataFrame:
 # math_utils.py:65-130)
 # ----------------------------------------------------------------------
 
-from .operators.geometry import cluster_mbr, cluster_stats, cluster_stats_sql  # noqa: E402
+from .operators.geometry import cluster_stats, cluster_stats_sql  # noqa: E402
 
 
 def _ground_with_comp(

@@ -53,14 +53,29 @@ def cell_key(cx: Column, cy: Column) -> Column:
     return cx * F.lit(CELL_SPAN) + cy
 
 
+def _cell_index(x: Column, y: Column, res: float) -> tuple[Column, Column, Column]:
+    """(cx, cy, known): the cell indices of (x, y) and the range test
+    |x/res|, |y/res| < 2^30 that every coordinate-built key passes."""
+    sx, sy = x / F.lit(res), y / F.lit(res)
+    known = (F.abs(sx) < F.lit(float(CELL_LIM))) & (F.abs(sy) < F.lit(float(CELL_LIM)))
+    return F.floor(sx), F.floor(sy), known
+
+
 def cell_id(x: Column, y: Column, res: float) -> Column:
     """The ``cell_key`` of the cell holding (x, y). NULL unless |x/res|
     and |y/res| are below 2^30, so the product never overflows BIGINT
     and NaN, ±Inf and NULL coordinates get no cell. RD coordinates are
     < 300 km, so every real point has a key for res ≥ 1 mm."""
-    sx, sy = x / F.lit(res), y / F.lit(res)
-    known = (F.abs(sx) < F.lit(float(CELL_LIM))) & (F.abs(sy) < F.lit(float(CELL_LIM)))
-    return F.when(known, cell_key(F.floor(sx), F.floor(sy)))
+    cx, cy, known = _cell_index(x, y, res)
+    return F.when(known, cell_key(cx, cy))
+
+
+def neighbor_cell_ids(x: Column, y: Column, res: float) -> Column:
+    """The 3×3 ``neighbor_cells`` around the cell holding (x, y), NULL
+    where ``cell_id`` is NULL: exploded, a point with no cell yields no
+    keys."""
+    cx, cy, known = _cell_index(x, y, res)
+    return F.when(known, neighbor_cells(cx, cy))
 
 
 @per_session

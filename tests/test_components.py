@@ -1,6 +1,6 @@
-"""Connected components: the one union-find (``min_root_components``) and
+"""Connected components: the one union-find (``min_root_components``),
 the two-level ``grid_components`` (component = min cell key of the
-global component)."""
+global component) and ``pair_components`` over an undirected pair list."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ import pytest
 from urban_pointcloud_processing_spark.operators.components import (
     grid_components,
     min_root_components,
+    pair_components,
 )
 from urban_pointcloud_processing_spark.sources.pages import synthetic_pages
 
@@ -110,6 +111,46 @@ def test_grid_components_job_count(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+
+
+def _path_components(spark, n: int) -> tuple[dict[int, int], int]:
+    """(node -> component, Spark jobs) of ``pair_components`` on an
+    n-node path. The ids are spread far apart and the pairs shuffled,
+    half of them reversed, so almost every edge crosses blocks."""
+    ids = [i * 10007 + 3 for i in range(n)]
+    rng = random.Random(n)
+    pairs = [p if rng.random() < 0.5 else p[::-1] for p in zip(ids, ids[1:])]
+    rng.shuffle(pairs)
+    sc = spark.sparkContext
+    group = f"test-pair-components-path-{n}"
+    sc.setJobGroup(group, group)
+    try:
+        out = pair_components(
+            spark.createDataFrame(pairs, "src long, dst long"),
+            spark.createDataFrame([(i,) for i in ids], "node long"),
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return {r["node"]: r["component"] for r in out}, jobs
+
+
+def test_pair_components_long_path(spark):
+    """A 200-node path resolves to its min id in one pass: it submits as
+    many Spark jobs as a 20-node path (no round per path length)."""
+    comp20, jobs20 = _path_components(spark, 20)
+    comp200, jobs200 = _path_components(spark, 200)
+    assert comp20 == dict.fromkeys(comp20, 3) and len(comp20) == 20
+    assert comp200 == dict.fromkeys(comp200, 3) and len(comp200) == 200
+    assert jobs200 == jobs20
+
+
+def test_pair_components_without_pairs(spark):
+    nodes = spark.createDataFrame([(9,), (-4,), (1 << 40,)], "node long")
+    out = pair_components(spark.createDataFrame([], "src long, dst long"), nodes)
+    assert {r["node"]: r["component"] for r in out.collect()} == {
+        9: 9, -4: -4, 1 << 40: 1 << 40,
+    }
 
 
 def test_min_root_components_is_order_independent():

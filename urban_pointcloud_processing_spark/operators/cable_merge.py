@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
-from .components import min_root_components
+from .components import min_root_components, pair_components
 
 
 def _principal(xy: np.ndarray) -> np.ndarray:
@@ -381,13 +381,12 @@ def merge_cables_cc(clustered: DataFrame,
        over (ca, cb) — each task sees exactly two clusters' points,
        never the corpus (the exact-integer kernel is summation-order
        independent, so distribution order cannot change the verdict);
-    4. CC over passing pairs by min-label propagation.
+    4. CC over the passing pairs in one two-level pass
+       (``components.pair_components``).
 
     Gate arithmetic is identical to merge_clusters_pairwise_cc (which
     remains the single-machine kernel used by the unit tests), so the
     recursive-CTE oracle is unchanged."""
-    from .dedup import graph_components_minlabel
-
     cos2 = _cos2(MERGE_MAX_ANGLE_DEG)
     gap_mm2 = int(round(max_gap * 1000.0)) ** 2
 
@@ -565,12 +564,10 @@ def merge_cables_cc(clustered: DataFrame,
         pair_pts.groupBy("ca", "cb")
         .applyInPandas(curve_gate, schema=ok_schema)
         .filter(F.col("ok"))
-        .select(F.col("ca").alias("doc_a"), F.col("cb").alias("doc_b"))
+        .select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
     )
-    comp = graph_components_minlabel(
-        passing, geom.select(F.col("cid").alias("doc_id"))
-    )
+    comp = pair_components(passing, geom.select(F.col("cid").alias("node")))
     return comp.select(
-        F.col("doc_id").alias("cluster_id"),
+        F.col("node").alias("cluster_id"),
         F.col("component").alias("merged_id"),
     )

@@ -17,12 +17,19 @@ dependent, so tests compare partitions, not raw ids).
   grid); component = min ``tiling.cell_id`` key.
 - ``edge_components``: the same scheme over an explicit edge list with
   caller-defined blocks (region growing's gated voxel graph).
+- ``pair_components``: ``edge_components`` over an undirected pair list
+  with hash blocks — the graphs with no spatial key: the near-dup pair
+  graph of ``dedup.dedup_clusters`` (and so ``corpus_clean``) and the
+  mergeable-pair graph of ``cable_merge.merge_cables_cc``.
 
-Both Spark kernels are two-level and run in one pass, no iteration:
-nodes fall into spatial blocks, one ``applyInPandas`` union-find per
-block resolves the intra-block edges, and the inter-block ROOT graph —
-bounded by block surface area — resolves on the driver and broadcasts
-back (``_two_level``).
+Every Spark kernel is two-level and runs in one pass, no iteration:
+nodes fall into blocks, one ``applyInPandas`` union-find per block
+resolves the intra-block edges, and the inter-block ROOT graph resolves
+on the driver and broadcasts back (``_two_level``). With spatial blocks
+that root graph is bounded by block surface area. Pair-graph ids carry
+no locality, so almost every pair crosses blocks: the root graph is
+then bounded only by the pairs themselves, at most two rows (one per
+direction) for each pair whose ends lie in different blocks.
 """
 
 from __future__ import annotations
@@ -36,6 +43,7 @@ from pyspark.sql import functions as F
 from ..tiling import CELL_SPAN, cell_id, cell_key, cell_x, cell_y
 
 BLOCK_CELLS = 64   # grid-CC block side, in cells (≤ 4096 cells a block)
+PAIR_BLOCKS = 64   # pair-graph blocks: a fixed hash of the node id
 # half of the 8-neighborhood as cell-key offsets (cell_key is linear in
 # cx and cy): every undirected adjacency is (k, k + off) exactly once
 _FORWARD = [dx * CELL_SPAN + dy for dx, dy in ((0, 1), (1, -1), (1, 0), (1, 1))]
@@ -181,6 +189,20 @@ def edge_components(
         block(F.col("dst")).alias("_block"),
     )
     return _two_level(blocked, _edge_block_cc)
+
+
+def pair_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(node, component) — ``edge_components`` of ``nodes`` (node) over
+    the undirected ``pairs`` (src, dst), each pair given in either
+    direction or both. Node ids carry no locality (an id range can put
+    every node in one block, or one node in each), so a node's block is
+    a fixed hash of its id into ``PAIR_BLOCKS`` blocks."""
+    edges = pairs.select("src", "dst").unionByName(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    return edge_components(
+        nodes, edges, lambda key: F.pmod(F.xxhash64(key), F.lit(PAIR_BLOCKS))
+    )
 
 
 def size_filter(

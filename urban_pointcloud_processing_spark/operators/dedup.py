@@ -33,6 +33,7 @@ from ..functions.text import (
     tokens_expr,
     tokens_sql,
 )
+from .components import pair_components
 
 # Deterministic hash-family constants, shared verbatim by the Spark
 # plan and the generated oracle SQL (kept < HASH_MOD so a*x fits i64).
@@ -572,99 +573,43 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 # ----------------------------------------------------------------------
 # Near-dup cluster canonicalization — the step AFTER pair detection in
 # a real dedup pipeline: connected components over the near-dup pair
-# graph, keep the minimal doc per component as the survivor. (The
-# reference's CC machinery re-applied to the dup graph; at web scale
-# this is the standard min-label-propagation CC, rounds bounded by the
-# dup-cluster diameter — near-dup clusters are shallow, and a
-# path-doubling variant would cut rounds to O(log diameter).)
+# graph, keep the minimal doc per component as the survivor (the
+# reference's CC machinery, ``components.pair_components``, re-applied
+# to the dup graph).
 # ----------------------------------------------------------------------
-
-def graph_components_minlabel(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_rounds: int = 50,
-) -> DataFrame:
-    """(id_col, component) — component = min node id reachable over the
-    symmetrized `pairs` (doc_a, doc_b) edges. Iterative min-label
-    propagation with per-round convergence check; each round is one
-    shuffle on the node key. FAILS LOUDLY if the graph diameter
-    exceeds max_rounds (silently-partial components would emit extra
-    'survivors' and break the oracle) — dup chains deeper than 50
-    need the path-doubling variant, not a bigger cap."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    lbl = nodes.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("comp")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        nb = (
-            edges.join(lbl, edges["s"] == lbl["id"])
-            .groupBy(F.col("d").alias("id2"))
-            .agg(F.min("comp").alias("_nb"))
-        )
-        new = (
-            lbl.join(nb, lbl["id"] == nb["id2"], "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce(F.col("_nb"), F.col("comp")))
-                .alias("comp"),
-                (F.col("_nb").isNotNull() & (F.col("_nb") < F.col("comp")))
-                .alias("_chg"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = new.filter(F.col("_chg")).limit(1).count()
-        lbl = new.drop("_chg")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"min-label CC did not converge in {max_rounds} rounds — "
-            "dup-graph diameter exceeds the cap; refusing to emit "
-            "partial components"
-        )
-    return lbl.select(F.col("id").alias(id_col), F.col("comp").alias("component"))
-
 
 def dedup_clusters(docs: DataFrame, n: int = 3,
                    threshold: float = 0.5,
                    sh: DataFrame | None = None) -> DataFrame:
     """(doc_id, canonical_id, cluster_size, is_survivor) — survivor
-    selection over the MinHash+LSH near-dup pair graph: CC by min-label
-    propagation, canonical = min doc_id per component, singletons keep
-    themselves."""
-    pairs = minhash_lsh_dedup(docs, n, threshold, sh=sh).localCheckpoint(
-        eager=True
-    )
-    # only docs that appear in a pair need propagation — singletons are
-    # trivially their own component, so the iterative CC runs on the
-    # (tiny) dup subgraph, not the corpus
+    selection over the MinHash+LSH near-dup pair graph: one two-level
+    CC pass (``components.pair_components``), canonical = min doc_id per
+    component, singletons keep themselves."""
+    pairs = minhash_lsh_dedup(docs, n, threshold, sh=sh).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).localCheckpoint(eager=True)
+    # only docs that appear in a pair enter the CC — singletons are
+    # trivially their own component, so the CC runs on the (tiny) dup
+    # subgraph, not the corpus
     paired = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
+        pairs.select(F.col("src").alias("node"))
+        .unionByName(pairs.select(F.col("dst").alias("node")))
         .distinct()
     )
-    comp_paired = graph_components_minlabel(pairs, paired)
     singles = (
-        docs.select("doc_id")
-        .join(paired, "doc_id", "left_anti")
-        .select("doc_id", F.col("doc_id").alias("component"))
+        docs.select(F.col("doc_id").alias("node"))
+        .join(paired, "node", "left_anti")
+        .select("node", F.col("node").alias("component"))
     )
-    comp = comp_paired.unionByName(singles)
+    comp = pair_components(pairs, paired).unionByName(singles)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
         comp.join(sizes, "component")
         .select(
-            "doc_id",
+            F.col("node").alias("doc_id"),
             F.col("component").alias("canonical_id"),
             "cluster_size",
-            (F.col("doc_id") == F.col("component")).alias("is_survivor"),
+            (F.col("node") == F.col("component")).alias("is_survivor"),
         )
     )
 

@@ -1155,7 +1155,7 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     content entirely. Composes three separately-green operators over
     ONE shared cached shingle table; each keeps its proven distributed
     shape (quality = map-only scan, contamination = broadcast eval
-    shingles, dedup CC = dup-subgraph propagation).
+    shingles, dedup CC = one two-level pass over the dup subgraph).
 
     The shared shingle table is a scratch parquet STAGE TABLE
     (_shingle_stage): at 100 TB the shingle table is corpus-sized —
@@ -1450,9 +1450,9 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_clusters", D.dedup_clusters_sql(3, 0.5))
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivor selection — the step AFTER near-dup pair detection:
-    connected components over the MinHash+LSH pair graph (min-label
-    propagation, one shuffle per round, rounds = dup-cluster diameter),
-    canonical = min doc_id per cluster. Every doc gets a row;
+    connected components over the MinHash+LSH pair graph (one
+    two-level pass, components.pair_components), canonical = min
+    doc_id per cluster. Every doc gets a row;
     singletons survive as their own canonical."""
     sh = _shingle_stage(spark, sf_dir, 3, "upcp_sh_dcl_")
     return D.dedup_clusters(_docs(spark, sf_dir), 3, 0.5, sh=sh)

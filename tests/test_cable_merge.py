@@ -1,19 +1,18 @@
 """Cable-merging semantics on constructed synthetic cables (the
-fixture-generator test strategy of reference las_utils.create_pole_las)."""
+fixture-generator test strategy of reference las_utils.create_pole_las),
+run through the engine's one merge, ``merge_cables_cc``."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
-from urban_pointcloud_processing_spark.operators.cable_merge import (
-    merge_cables,
-    merge_clusters_np,
-)
+from urban_pointcloud_processing_spark.operators.cable_merge import merge_cables_cc
 
 
 def _cable(cid: int, x0: float, x1: float, y: float, sag: float = 0.2,
-            n: int = 20) -> pd.DataFrame:
+           n: int = 20) -> pd.DataFrame:
     """Points along a sagging span from (x0,y) to (x1,y): a parabola in
     z with the given mid-span sag."""
     xs = np.linspace(x0, x1, n)
@@ -25,151 +24,74 @@ def _cable(cid: int, x0: float, x1: float, y: float, sag: float = 0.2,
     )
 
 
-def test_collinear_segments_merge():
-    # two halves of ONE span (same line, touching, shared parabola)
+def _halves() -> pd.DataFrame:
+    """Two halves of ONE span (same line, touching, shared parabola)."""
     xs = np.linspace(0.0, 40.0, 40)
     z = 10.0 - 0.2 * (1 - ((xs - 20.0) / 20.0) ** 2)
-    pdf = pd.DataFrame({
-        "cluster_id": np.where(xs < 20.0, 1, 2),
-        "x": xs, "y": 5.0, "z": z,
+    return pd.DataFrame({
+        "cluster_id": np.where(xs < 20.0, 1, 2), "x": xs, "y": 5.0, "z": z,
     })
-    m = merge_clusters_np(pdf, 15.0, 10.0, 0.5)
-    assert m == {1: 1, 2: 1}
 
 
-def test_perpendicular_or_distant_do_not_merge():
-    a = _cable(1, 0.0, 20.0, 5.0)
-    # perpendicular cable crossing nearby
-    b = pd.DataFrame({
-        "cluster_id": 2,
-        "x": 21.0, "y": np.linspace(0.0, 20.0, 20),
-        "z": 10.0,
+def _perpendicular() -> pd.DataFrame:
+    """A span, a perpendicular cable crossing nearby (angle gate) and a
+    collinear one 30 m on (gap > max_gap)."""
+    perp = pd.DataFrame({
+        "cluster_id": 2, "x": 21.0,
+        "y": np.linspace(0.0, 20.0, 20), "z": 10.0,
     })
-    m = merge_clusters_np(pd.concat([a, b]), 15.0, 10.0, 0.5)
-    assert m[1] == 1 and m[2] == 2
-    # collinear but far away (gap > max_gap)
-    c = _cable(3, 50.0, 70.0, 5.0)
-    m2 = merge_clusters_np(pd.concat([a, c]), 15.0, 10.0, 0.5)
-    assert m2[1] == 1 and m2[3] == 3
+    return pd.concat([_cable(1, 0.0, 20.0, 5.0), perp,
+                      _cable(3, 50.0, 70.0, 5.0)])
 
 
-def test_merge_is_transitive_fixpoint():
-    # three consecutive collinear segments merge into one id (min)
-    segs = pd.concat([
+def _chain() -> pd.DataFrame:
+    """Three consecutive collinear segments."""
+    return pd.concat([
         _cable(7, 0.0, 15.0, 3.0, sag=0.0),
         _cable(5, 16.0, 30.0, 3.0, sag=0.0),
         _cable(9, 31.0, 45.0, 3.0, sag=0.0),
     ])
-    m = merge_clusters_np(segs, 15.0, 10.0, 0.5)
-    assert set(m.values()) == {5}
 
 
-def test_merge_cables_grouped(spark):
-    pdf = pd.concat([
-        _cable(1, 0.0, 18.0, 2.0, sag=0.0),
-        _cable(2, 20.0, 38.0, 2.0, sag=0.0),
-        _cable(3, 0.0, 18.0, 80.0, sag=0.0),  # far row: own group merge
-    ])
-    df = spark.createDataFrame(pdf)
-    got = {
-        r["cluster_id"]: r["merged_id"]
-        for r in merge_cables(df, group_col=None).collect()
-    }
-    assert got[1] == 1 and got[2] == 1
-    assert got[3] == 3  # too far from the others (gap > max_gap)
-
-
-def test_catenary_fit_recovers_deep_sag_where_parabola_fails():
-    """VERDICT r01 item 9: a sagging cable the parabola rejects must be
-    accepted by the exact catenary fit."""
-    import numpy as np
-
-    from urban_pointcloud_processing_spark.operators.cable_merge import (
-        _pair_mergeable,
-        _parabola_rmse,
-        catenary_fit,
-    )
-
-    t = np.linspace(0.0, 40.0, 81)
-    z = 5.0 * np.cosh((t - 20.0) / 5.0)
-    a, b, c, rmse = catenary_fit(t, z)
-    assert rmse < 1e-9
-    assert abs(b - 20.0) < 1e-6 and abs(c - 5.0) < 1e-6
-    assert _parabola_rmse(t, z) > 5.0  # the old test would reject this
-
-    # two halves of the same deep catenary must merge under the
-    # catenary acceptance (max_rmse 0.5) even though the parabola rmse
-    # is far above it
-    xy = np.column_stack([t, np.zeros_like(t)])
-    left, right = t < 18.0, t > 22.0
-    assert _pair_mergeable(
-        xy[left], z[left], xy[right], z[right],
-        max_angle_deg=15.0, max_gap=10.0, max_rmse=0.5,
-    )
-
-
-def _rows(pdf: pd.DataFrame) -> list[tuple]:
-    return [
-        (int(c), int(round(x * 1000)), int(round(y * 1000)),
-         int(round(z * 1000)))
-        for c, x, y, z in zip(pdf["cluster_id"], pdf["x"], pdf["y"], pdf["z"])
-    ]
-
-
-def test_pairwise_cc_variant_matches_gate_semantics():
-    """The order-independent variant (merge_clusters_pairwise_cc, the
-    oracle-exact registered path) merges collinear smooth spans, keeps
-    perpendicular neighbors apart, and rejects rough (non-curve) z."""
-    from urban_pointcloud_processing_spark.operators.cable_merge import (
-        merge_clusters_pairwise_cc,
-    )
-
-    xs = np.linspace(0.0, 40.0, 40)
-    z = 10.0 - 0.2 * (1 - ((xs - 20.0) / 20.0) ** 2)
-    both = pd.DataFrame({
-        "cluster_id": np.where(xs < 20.0, 1, 2), "x": xs, "y": 5.0, "z": z,
-    })
-    assert merge_clusters_pairwise_cc(_rows(both)) == {1: 1, 2: 1}
-    # perpendicular neighbor stays separate (angle gate)
-    perp = pd.DataFrame({
-        "cluster_id": 3, "x": 21.0,
-        "y": np.linspace(0.0, 20.0, 20), "z": 10.0,
-    })
-    m = merge_clusters_pairwise_cc(_rows(pd.concat([both, perp])))
-    assert m[3] == 3 and m[1] == m[2] == 1
-    # aligned + close but jagged z: curve gate rejects
-    rough = both.copy()
+def _rough() -> pd.DataFrame:
+    """Aligned and close, but one half's z is jagged (curve gate)."""
+    rough = _halves()
     rng = np.random.default_rng(7)
-    rough.loc[rough.cluster_id == 2, "z"] += rng.uniform(
-        -3, 3, (rough.cluster_id == 2).sum()
-    )
-    m2 = merge_clusters_pairwise_cc(_rows(rough))
-    assert m2[1] == 1 and m2[2] == 2
+    second = rough.cluster_id == 2
+    rough.loc[second, "z"] += rng.uniform(-3, 3, second.sum())
+    return rough
 
 
-def test_merge_cables_cc_bucketed_path_matches_broadcast(spark, monkeypatch):
-    """The endpoint-cell-bucketed candidate enumeration (taken when the
-    cluster count exceeds MERGE_BROADCAST_MAX_CLUSTERS) must produce
-    exactly the pairs the broadcast self-join produces — the grid is a
-    superset prefilter ahead of the same exact gates."""
-    from urban_pointcloud_processing_spark.operators import cable_merge as cm
+@pytest.mark.parametrize(
+    "make, want",
+    [
+        (_halves, {1: 1, 2: 1}),
+        (_perpendicular, {1: 1, 2: 2, 3: 3}),
+        (_chain, {5: 5, 7: 5, 9: 5}),
+        (_rough, {1: 1, 2: 2}),
+    ],
+    ids=["collinear-halves", "perpendicular-and-far", "chain-to-min-id",
+         "rough-z"],
+)
+def test_merge_cables_cc(spark, make, want):
+    df = spark.createDataFrame(make())
+    got = {r["cluster_id"]: r["merged_id"] for r in merge_cables_cc(df).collect()}
+    assert got == want
 
+
+def test_merge_cables_cc_bucketed_path_matches_broadcast(spark):
+    """The endpoint-cell candidate join admits every pair the exact
+    gates accept: the result equals the one the all-pairs broadcast
+    self-join gave (a 3-span chain and a separate 2-span row)."""
     pdf = pd.concat([
         _cable(1, 0.0, 18.0, 2.0, sag=0.0),
         _cable(2, 20.0, 38.0, 2.0, sag=0.0),
         _cable(3, 40.0, 58.0, 2.0, sag=0.0),   # chains 1-2-3
-        _cable(7, 0.0, 18.0, 80.0, sag=0.0),   # isolated far row
-        _cable(9, 20.5, 38.5, 80.0, sag=0.0),  # merges with 7? gap 2.5m yes
+        _cable(7, 0.0, 18.0, 80.0, sag=0.0),   # far row
+        _cable(9, 20.5, 38.5, 80.0, sag=0.0),  # merges with 7: gap 2.5 m
     ])
-    df = spark.createDataFrame(pdf)
-    broadcast = {
+    got = {
         r["cluster_id"]: r["merged_id"]
-        for r in cm.merge_cables_cc(df).collect()
+        for r in merge_cables_cc(spark.createDataFrame(pdf)).collect()
     }
-    monkeypatch.setattr(cm, "MERGE_BROADCAST_MAX_CLUSTERS", 0)
-    bucketed = {
-        r["cluster_id"]: r["merged_id"]
-        for r in cm.merge_cables_cc(df).collect()
-    }
-    assert bucketed == broadcast
-    assert broadcast[1] == broadcast[2] == broadcast[3] == 1
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}

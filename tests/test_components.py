@@ -153,6 +153,32 @@ def test_pair_components_without_pairs(spark):
     }
 
 
+def test_pair_components_collects_each_link_once(spark, monkeypatch):
+    """The driver's root graph holds each cross-block link once, in
+    (min, max) order: at most one row per pair, where handing both
+    directions of every pair would give nearly two."""
+    from urban_pointcloud_processing_spark.operators import components
+
+    handed = []
+
+    def recording(pairs, nodes=()):
+        pairs = list(pairs)
+        handed.append(pairs)
+        return min_root_components(pairs, nodes)
+
+    monkeypatch.setattr(components, "min_root_components", recording)
+    ids = [i * 10007 + 3 for i in range(20)]
+    pairs = list(zip(ids, ids[1:]))
+    out = pair_components(
+        spark.createDataFrame(pairs, "src long, dst long"),
+        spark.createDataFrame([(i,) for i in ids], "node long"),
+    ).collect()
+    assert {r["node"]: r["component"] for r in out} == dict.fromkeys(ids, 3)
+    [rows] = handed
+    assert rows and all(a < b for a, b in rows)
+    assert len(set(rows)) == len(rows) <= len(pairs)
+
+
 def test_min_root_components_is_order_independent():
     pairs = [(5, 3), (3, 9), (9, 4), (7, 8), (1, 2)]
     want = {5: 3, 3: 3, 9: 3, 4: 3, 7: 7, 8: 7, 1: 1, 2: 1}

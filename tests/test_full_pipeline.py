@@ -56,6 +56,21 @@ def test_full_pipeline_first_writer_wins_and_claims(spark):
     assert out.select("page_id").distinct().count() == 1500
 
 
+def test_full_pipeline_labels_memoised_per_session(spark):
+    """A second call in the same session returns the same checkpointed
+    DataFrame and submits no Spark job."""
+    first = full_pipeline_labels(spark, SF_DIR)
+    sc = spark.sparkContext
+    group = "test-full-pipeline-labels-memo"
+    sc.setJobGroup(group, group)
+    try:
+        again = full_pipeline_labels(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again is first
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_fused_families_match_sequential_chain(spark):
     """The pole (7-9) and furniture (10-11) stage families run as ONE
     fused detection each (VERDICT r03 item 3). Furniture fusing is

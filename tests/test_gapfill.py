@@ -2,20 +2,22 @@
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from urban_pointcloud_processing_spark.operators.gapfill import (
     fill_building_gaps,
-    fill_grid,
+    fill_grid_centi_round1,
 )
 from urban_pointcloud_processing_spark.sources.raster import raster_df
 
 
 def test_fill_grid_single_gap():
     g = np.array([[1.0, 1.0, 1.0], [1.0, np.nan, 3.0], [1.0, 1.0, 1.0]])
-    out = fill_grid(g, max_rounds=1)
+    out = fill_grid_centi_round1(g)
     # mean of the 8 known neighbors
     assert out[1, 1] == pytest.approx((1 * 7 + 3) / 8)
     # known cells untouched
@@ -26,16 +28,14 @@ def test_fill_grid_depth_bound():
     # a 1×5 strip with a 3-wide gap: one round fills only the gap's
     # edge cells (the reference's max_gap_size analog)
     g = np.array([[1.0, np.nan, np.nan, np.nan, 5.0]])
-    r1 = fill_grid(g, max_rounds=1)
+    r1 = fill_grid_centi_round1(g)
     assert r1[0, 1] == 1.0 and r1[0, 3] == 5.0
     assert np.isnan(r1[0, 2])
-    r2 = fill_grid(g, max_rounds=2)
-    assert not np.isnan(r2[0, 2])
 
 
 def test_fill_building_gaps_grouped(spark):
     ras = raster_df(spark)
-    out = fill_building_gaps(ras, max_rounds=1)
+    out = fill_building_gaps(ras)
     stats = out.agg(
         F.sum(F.col("was_gap").cast("int")).alias("gaps"),
         F.sum(F.col("filled").cast("int")).alias("filled"),
@@ -46,23 +46,22 @@ def test_fill_building_gaps_grouped(spark):
     assert stats["gaps"] > 0
     assert 0 < stats["filled"] <= stats["gaps"]
     assert stats["lost"] == 0  # known cells never erased
-    # spot-check one filled cell against the NumPy oracle on that tile
+    # spot-check one filled cell against the 3×3 nanmean on that tile
     row = out.filter(F.col("filled")).orderBy("gx", "gy").first()
     tile = ras.filter(F.col("tilecode") == row["tilecode"]).collect()
-    import numpy as np
-
     gx0 = min(r["gx"] for r in tile)
     gy0 = min(r["gy"] for r in tile)
     nx = max(r["gx"] for r in tile) - gx0 + 1
     ny = max(r["gy"] for r in tile) - gy0 + 1
-    grid = np.full((nx, ny), np.nan)
+    grid = np.full((nx + 2, ny + 2), np.nan)  # one NaN cell of padding
     for r in tile:
         if r["building_z"] is not None:
-            grid[r["gx"] - gx0, r["gy"] - gy0] = r["building_z"]
-    oracle = fill_grid(grid, max_rounds=1)
-    assert oracle[row["gx"] - gx0, row["gy"] - gy0] == pytest.approx(
-        row["building_z"]
-    )
+            grid[r["gx"] - gx0 + 1, r["gy"] - gy0 + 1] = r["building_z"]
+    i, j = row["gx"] - gx0 + 1, row["gy"] - gy0 + 1
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # an all-NaN window would warn
+        oracle = np.nanmean(grid[i - 1:i + 2, j - 1:j + 2])
+    assert oracle == pytest.approx(row["building_z"])
 
 
 def test_fill_grid_linear_interpolates_and_gates():

@@ -10,8 +10,7 @@ dependent, so tests compare partitions, not raw ids).
 
 - ``min_root_components``: pure-Python union-find with min-node roots.
   Every in-memory CC of the package runs on it: the per-block passes
-  below, DBSCAN cores, morphology regions, alpha-shape fans and the
-  pairwise cable merge.
+  below, DBSCAN cores, morphology regions and alpha-shape fans.
 - ``grid_components``: CC over occupied grid cells, 8-neighborhood in
   2-D (the z-collapsed analog of the reference's 26-neighborhood octree
   grid); component = min ``tiling.cell_id`` key.
@@ -28,8 +27,8 @@ resolves the intra-block edges, and the inter-block ROOT graph resolves
 on the driver and broadcasts back (``_two_level``). With spatial blocks
 that root graph is bounded by block surface area. Pair-graph ids carry
 no locality, so almost every pair crosses blocks: the root graph is
-then bounded only by the pairs themselves, at most two rows (one per
-direction) for each pair whose ends lie in different blocks.
+then bounded only by the pairs themselves: one row for each pair whose
+ends lie in different blocks.
 """
 
 from __future__ import annotations
@@ -90,7 +89,10 @@ def _two_level(blocked: DataFrame, block_cc) -> DataFrame:
     plan. The outward rows, joined to the own rows of their node, link
     the local roots of adjacent blocks. Like the root graph they yield,
     they are O(block surface): they broadcast into that join, and the
-    root graph resolves on the driver and broadcasts back."""
+    root graph resolves on the driver and broadcasts back. A symmetric
+    edge list gives a cross-block edge an outward row in each of its
+    blocks, so each link is put in (min, max) order before the
+    ``distinct`` and collects once."""
     local = blocked.groupBy("_block").applyInPandas(
         block_cc, "node long, root long, own boolean"
     ).localCheckpoint(eager=True)
@@ -98,7 +100,10 @@ def _two_level(blocked: DataFrame, block_cc) -> DataFrame:
     root_edges = (
         own.select("node", F.col("root").alias("_root_b"))
         .join(F.broadcast(local.filter(~F.col("own"))), "node")
-        .select("root", "_root_b")
+        .select(
+            F.least("root", "_root_b").alias("a"),
+            F.greatest("root", "_root_b").alias("b"),
+        )
     )
     mapping = min_root_components(root_edges.distinct().collect())
     if not mapping:

@@ -2,17 +2,19 @@
 
 Reference: src/upcp/utils/ahn_utils.py:346-456 — `fill_gaps` (scipy
 griddata over gap regions ≤ max_gap_size) and `fill_gaps_intuitive`
-(iterative 3×3 nanmean dilation). scipy is not in this container, so
-the engine implements the *intuitive* variant in pure NumPy: each
-round, every NULL cell with ≥1 known 8-neighbor becomes the mean of
-its known neighbors; `max_rounds` bounds how deep into a gap the fill
-reaches (the reference's max_gap_size analog).
+(iterative 3×3 nanmean dilation). scipy is not a dependency, so the
+engine implements one round of the *intuitive* variant in pure
+NumPy (``fill_grid_centi_round1``): every NULL cell with ≥1 known
+8-neighbor becomes the mean of its known neighbors, so the fill reaches
+one cell into a gap. The griddata analogs are separable linear and
+Catmull–Rom fills with a max_gap region gate (``fill_grid_linear``,
+``fill_grid_cubic``).
 
 Spark strategy: grids are per-tile bounded (500×500 in the reference),
 so the fill is a grouped-map `applyInPandas` per tilecode — one NumPy
 batch per tile, no driver collect, embarrassingly parallel across
-tiles. Deterministic: the per-cell mean divides an np.nansum by a
-count, both reductions over a fixed 8-slot stencil order.
+tiles. Deterministic: the neighbor-mean sums exact round(z·100)
+integers, so summation order cannot change the result.
 """
 
 from __future__ import annotations
@@ -40,32 +42,6 @@ FILLED_SCHEMA = StructType(
         StructField("filled", BooleanType()),
     ]
 )
-
-
-def fill_grid(grid: np.ndarray, max_rounds: int = 2) -> np.ndarray:
-    """Iterative 3×3 neighbor-mean fill of NaN cells (pure NumPy,
-    reference fill_gaps_intuitive semantics)."""
-    g = grid.astype(np.float64, copy=True)
-    for _ in range(max_rounds):
-        isnan = np.isnan(g)
-        if not isnan.any():
-            break
-        padded = np.pad(g, 1, constant_values=np.nan)
-        stacks = []
-        for dx in (-1, 0, 1):
-            for dy in (-1, 0, 1):
-                if dx == 0 and dy == 0:
-                    continue
-                stacks.append(
-                    padded[1 + dx : 1 + dx + g.shape[0],
-                           1 + dy : 1 + dy + g.shape[1]]
-                )
-        neigh = np.stack(stacks)
-        counts = np.sum(~np.isnan(neigh), axis=0)
-        sums = np.nansum(neigh, axis=0)
-        fillable = isnan & (counts > 0)
-        g[fillable] = sums[fillable] / counts[fillable]
-    return g
 
 
 def fill_grid_linear(grid: np.ndarray, max_gap: int = 6) -> np.ndarray:
@@ -267,18 +243,10 @@ def smoothen_building_edges(raster: DataFrame,
     )
 
 
-def fill_building_gaps(raster: DataFrame, max_rounds: int = 2,
-                       exact_centi: bool = False) -> DataFrame:
-    """Grouped-map gap fill of the building surface per tile.
-    ``exact_centi`` (requires max_rounds=1) switches to the
-    order-independent integer-sum round (fill_grid_centi_round1)."""
-    if exact_centi and max_rounds != 1:
-        raise ValueError("exact_centi fill is single-round")
-    return grouped_grid_fill(
-        raster,
-        fill_grid_centi_round1 if exact_centi
-        else (lambda g: fill_grid(g, max_rounds)),
-    )
+def fill_building_gaps(raster: DataFrame) -> DataFrame:
+    """Grouped-map gap fill of the building surface per tile: one
+    exact neighbor-mean round (fill_grid_centi_round1)."""
+    return grouped_grid_fill(raster, fill_grid_centi_round1)
 
 
 def fill_building_gaps_linear(raster: DataFrame, max_gap: int = 6) -> DataFrame:
@@ -346,7 +314,7 @@ est AS (
 
 
 def fill_gaps_sql(raster_cte: str) -> str:
-    """One-round 3×3 neighbor-mean fill (fill_grid, max_rounds=1)."""
+    """One-round 3×3 neighbor-mean fill (fill_grid_centi_round1)."""
     est = """
 nb AS (
   SELECT a.gx, a.gy,

@@ -1,19 +1,21 @@
-"""Per-component grouped-map geometry: cluster stats, convex hull,
-minimum bounding rectangle.
+"""Per-component geometry: cluster stats, minimum bounding rectangle,
+rotated-rectangle ∩ road-strip overlap.
 
 Reference semantics re-created (SURVEY.md §2.4/§2.8):
 - per-cluster stats: src/upcp/fusion/car_fuser.py:57-74,
   street_furniture_fuser.py:63-79 (centroid, extents, counts);
-- convex_hull_poly: src/upcp/utils/math_utils.py:60-62;
-- minimum_bounding_rectangle (rotating calipers over the hull):
-  src/upcp/utils/math_utils.py:65-130.
+- minimum_bounding_rectangle: src/upcp/utils/math_utils.py:65-130,
+  here as the exact pair-direction search (``mbr_exact_rows``) over the
+  convex-hull boundary points;
+- the MBR polygon intersected with the road layer: car_fuser.py:76-85
+  (``mbr_road_overlap_exact``).
 
-Spark strategy: components are small (bounded by a 50 m tile), so hull
-and MBR run as ``applyInPandas`` grouped-map transforms — one NumPy
-batch per component, no driver collect. Cluster stats are pure
-Catalyst; sums use exact millimetre integers (the geocode grid is
-mm-resolution) so aggregation order cannot perturb float results and
-the DuckDB oracle matches bit-for-bit.
+Spark strategy: components are small (bounded by a 50 m tile), so the
+MBR runs as an ``applyInPandas`` grouped map — one pure-Python batch per
+component, no driver collect. Cluster stats are pure Catalyst. Every
+kernel works on exact millimetre integers (the geocode grid is
+mm-resolution) with fixed double formulas, so the DuckDB oracle matches
+bit-for-bit.
 """
 
 from __future__ import annotations
@@ -86,250 +88,19 @@ FROM {assign_cte} GROUP BY component
 """
 
 
-MBR_SCHEMA = StructType(
-    [
-        StructField("component", LongType()),
-        StructField("n_points", LongType()),
-        StructField("mbr_length", DoubleType()),  # larger side
-        StructField("mbr_width", DoubleType()),   # smaller side
-        StructField("mbr_angle_deg", DoubleType()),
-        StructField("center_x", DoubleType()),
-        StructField("center_y", DoubleType()),
-    ]
-)
-
-
-def _convex_hull(xy):
-    """Andrew's monotone chain; returns hull vertices CCW (no repeat).
-    Small-n NumPy — runs inside the grouped-map batch."""
-    import numpy as np
-
-    pts = np.unique(xy, axis=0)
-    if len(pts) <= 2:
-        return pts
-
-    def half(points):
-        out = []
-        for p in points:
-            while len(out) >= 2 and np.cross(out[-1] - out[-2], p - out[-2]) <= 0:
-                out.pop()
-            out.append(p)
-        return out
-
-    lower = half(pts)
-    upper = half(pts[::-1])
-    return np.array(lower[:-1] + upper[:-1])
-
-
-def _mbr(xy):
-    """Rotating calipers over hull edges: the minimum-area rectangle has
-    one side collinear with a hull edge (reference math_utils.py:65-130
-    computes the same via edge-angle rotations)."""
-    import numpy as np
-
-    hull = _convex_hull(xy)
-    if len(hull) == 1:
-        return 0.0, 0.0, 0.0, float(hull[0][0]), float(hull[0][1])
-    if len(hull) == 2:
-        d = hull[1] - hull[0]
-        length = float(np.hypot(*d))
-        ang = float(np.degrees(np.arctan2(d[1], d[0]))) % 180.0
-        c = hull.mean(axis=0)
-        return length, 0.0, ang, float(c[0]), float(c[1])
-
-    edges = np.diff(np.vstack([hull, hull[:1]]), axis=0)
-    angles = np.arctan2(edges[:, 1], edges[:, 0]) % (np.pi / 2)
-    best = None
-    for ang in np.unique(angles):
-        rot = np.array(
-            [[np.cos(-ang), -np.sin(-ang)], [np.sin(-ang), np.cos(-ang)]]
-        )
-        r = hull @ rot.T
-        mn, mx = r.min(axis=0), r.max(axis=0)
-        dims = mx - mn
-        area = dims[0] * dims[1]
-        if best is None or area < best[0]:
-            center_r = (mn + mx) / 2
-            center = center_r @ rot  # inverse of rot.T for a rotation
-            best = (area, dims, ang, center)
-    _, dims, ang, center = best
-    length, width = float(max(dims)), float(min(dims))
-    # angle of the LONG side, degrees in [0, 180)
-    ang_deg = float(np.degrees(ang if dims[0] >= dims[1] else ang + np.pi / 2)) % 180.0
-    return length, width, ang_deg, float(center[0]), float(center[1])
-
-
-def _mbr_corners(xy):
-    """Corner coordinates (4×2, CCW) of the minimum bounding rectangle —
-    same rotating-calipers search as ``_mbr`` but returns the rectangle
-    itself for polygon-overlap work (reference car_fuser.py:76-85 passes
-    the MBR polygon to shapely's intersection)."""
-    import numpy as np
-
-    hull = _convex_hull(xy)
-    if len(hull) == 1:
-        return np.repeat(hull, 4, axis=0)
-    if len(hull) == 2:
-        return np.array([hull[0], hull[1], hull[1], hull[0]])
-    edges = np.diff(np.vstack([hull, hull[:1]]), axis=0)
-    angles = np.arctan2(edges[:, 1], edges[:, 0]) % (np.pi / 2)
-    best = None
-    for ang in np.unique(angles):
-        rot = np.array(
-            [[np.cos(-ang), -np.sin(-ang)], [np.sin(-ang), np.cos(-ang)]]
-        )
-        r = hull @ rot.T
-        mn, mx = r.min(axis=0), r.max(axis=0)
-        area = (mx - mn).prod()
-        if best is None or area < best[0]:
-            corners_r = np.array(
-                [[mn[0], mn[1]], [mx[0], mn[1]], [mx[0], mx[1]], [mn[0], mx[1]]]
-            )
-            best = (area, corners_r @ rot)  # inverse of rot.T
-    return best[1]
-
-
-def _clip_poly_to_rect(poly, rx0, ry0, rx1, ry1):
-    """Sutherland–Hodgman clip of a convex polygon (n×2 CCW) against an
-    axis-aligned rectangle; returns the clipped polygon (possibly
-    empty)."""
-    import numpy as np
-
-    def clip_half(pts, inside, intersect):
-        out = []
-        n = len(pts)
-        for i in range(n):
-            cur, nxt = pts[i], pts[(i + 1) % n]
-            cin, nin = inside(cur), inside(nxt)
-            if cin:
-                out.append(cur)
-                if not nin:
-                    out.append(intersect(cur, nxt))
-            elif nin:
-                out.append(intersect(cur, nxt))
-        return np.array(out) if out else np.empty((0, 2))
-
-    def x_cut(a, b, xv):
-        t = (xv - a[0]) / (b[0] - a[0])
-        return np.array([xv, a[1] + t * (b[1] - a[1])])
-
-    def y_cut(a, b, yv):
-        t = (yv - a[1]) / (b[1] - a[1])
-        return np.array([a[0] + t * (b[0] - a[0]), yv])
-
-    pts = poly
-    for inside, intersect in (
-        (lambda p: p[0] >= rx0, lambda a, b: x_cut(a, b, rx0)),
-        (lambda p: p[0] <= rx1, lambda a, b: x_cut(a, b, rx1)),
-        (lambda p: p[1] >= ry0, lambda a, b: y_cut(a, b, ry0)),
-        (lambda p: p[1] <= ry1, lambda a, b: y_cut(a, b, ry1)),
-    ):
-        if len(pts) == 0:
-            return pts
-        pts = clip_half(pts, inside, intersect)
-    return pts
-
-
-def _shoelace(poly) -> float:
-    import numpy as np
-
-    if len(poly) < 3:
-        return 0.0
-    x, y = poly[:, 0], poly[:, 1]
-    return float(
-        abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) / 2.0
-    )
-
-
-MBR_OVERLAP_SCHEMA = StructType(
-    [
-        StructField("component", LongType()),
-        StructField("n_points", LongType()),
-        StructField("mbr_area", DoubleType()),
-        StructField("road_area", DoubleType()),
-        StructField("road_pct", DoubleType()),
-    ]
-)
-
-
-def mbr_road_overlap(
-    with_comp: DataFrame,
-    strips: list[tuple],
-    comp_col: str = "component",
-) -> DataFrame:
-    """Per-component rotated-MBR ∩ road-strip overlap fraction
-    (reference car_fuser.py:76-85: MBR polygon intersected with the
-    road layer; here the strips are axis-aligned rectangles
-    (rid, rx0, ry0, rx1, ry1), so a Sutherland–Hodgman clip + shoelace
-    gives the exact intersection area). Degenerate MBRs (area 0) report
-    road_pct 0."""
-    import numpy as np
-
-    strip_arr = [(float(a), float(b), float(c), float(d))
-                 for (_rid, a, b, c, d) in strips]
-
-    def per_comp(pdf):
-        import pandas as pd
-
-        xy = pdf[["x", "y"]].to_numpy(dtype=float)
-        corners = _mbr_corners(np.unique(xy, axis=0))
-        area = _shoelace(corners)
-        road = 0.0
-        for rx0, ry0, rx1, ry1 in strip_arr:
-            road += _shoelace(_clip_poly_to_rect(corners, rx0, ry0, rx1, ry1))
-        pct = road / area * 100.0 if area > 0 else 0.0
-        return pd.DataFrame(
-            {
-                "component": [int(pdf[comp_col].iloc[0])],
-                "n_points": [len(pdf)],
-                "mbr_area": [round(area, 6)],
-                "road_area": [round(road, 6)],
-                "road_pct": [round(pct, 6)],
-            }
-        )
-
-    return with_comp.groupBy(comp_col).applyInPandas(
-        per_comp, schema=MBR_OVERLAP_SCHEMA
-    )
-
-
-def cluster_mbr(with_comp: DataFrame, comp_col: str = "component") -> DataFrame:
-    """Minimum bounding rectangle per component (grouped-map NumPy)."""
-
-    def per_comp(pdf):
-        import pandas as pd
-
-        xy = pdf[["x", "y"]].to_numpy(dtype=float)
-        length, width, ang, cx, cy = _mbr(xy)
-        return pd.DataFrame(
-            {
-                "component": [int(pdf[comp_col].iloc[0])],
-                "n_points": [len(pdf)],
-                "mbr_length": [round(length, 6)],
-                "mbr_width": [round(width, 6)],
-                "mbr_angle_deg": [round(ang, 6)],
-                "center_x": [round(cx, 6)],
-                "center_y": [round(cy, 6)],
-            }
-        )
-
-    return with_comp.groupBy(comp_col).applyInPandas(per_comp, schema=MBR_SCHEMA)
-
-
 # ----------------------------------------------------------------------
-# Oracle-exact MBR variant (VERDICT r02 item 4).
+# Minimum bounding rectangle (VERDICT r02 item 4).
 #
-# The rotating-calipers ``cluster_mbr`` above uses libm trig
-# (atan2/cos/sin), which is not cross-engine reproducible. This variant
-# searches candidate DIRECTIONS = all distinct point pairs of the
-# cluster (the optimal rectangle is edge-aligned with the convex hull,
-# and every hull edge is a point pair, so the optimum is in the
-# candidate set): for each direction e the rectangle extents are exact
-# integer ranges of the dot/cross products of the mm coordinates, and
-# area/length²/width²/center are ONE fixed double formula over those
-# exact integers — so a SQL oracle reproduces every bit, including the
-# argmin tie-break (area, then lexicographic pair). Angle is
-# deliberately not in the compared output (libm).
+# The reference's rotating calipers use libm trig (atan2/cos/sin), which
+# is not cross-engine reproducible. This search takes candidate
+# DIRECTIONS = distinct point pairs of the cluster (the optimal
+# rectangle is edge-aligned with the convex hull, and every hull edge is
+# a point pair, so the optimum is in the candidate set): for each
+# direction e the rectangle extents are exact integer ranges of the
+# dot/cross products of the mm coordinates, and area/length²/width²/
+# center are ONE fixed double formula over those exact integers — so a
+# SQL oracle reproduces every bit, including the argmin tie-break
+# (area, then lexicographic pair). The angle is not output (libm).
 # ----------------------------------------------------------------------
 
 MBR_EXACT_SCHEMA = StructType(
@@ -561,6 +332,17 @@ def _sh_clip_seq(poly, rx0, ry0, rx1, ry1):
     return pts
 
 
+MBR_OVERLAP_SCHEMA = StructType(
+    [
+        StructField("component", LongType()),
+        StructField("n_points", LongType()),
+        StructField("mbr_area", DoubleType()),
+        StructField("road_area", DoubleType()),
+        StructField("road_pct", DoubleType()),
+    ]
+)
+
+
 def mbr_road_overlap_exact(
     with_comp: DataFrame,
     strips: list[tuple],
@@ -569,8 +351,9 @@ def mbr_road_overlap_exact(
     """Oracle-exact rotated-MBR ∩ road-strip overlap: exact-pair MBR
     corners + sequential S-H clip + ordered-fold shoelace, rid-ordered
     road accumulation — every double op mirrors the SQL oracle, so the
-    output needs NO rounding. Semantics identical to mbr_road_overlap
-    (reference car_fuser.py:76-85)."""
+    output needs NO rounding (reference car_fuser.py:76-85). Strips are
+    axis-aligned rectangles (rid, rx0, ry0, rx1, ry1); a degenerate MBR
+    (area 0) reports road_pct 0."""
     import pandas as pd
 
     strip_arr = sorted(

@@ -87,6 +87,7 @@ from ..sources.layers import (
     road_strips_values_sql,
     roads_meta_df,
 )
+from ..session import per_session
 from ..sources.pages import pages_from_orders
 from .pipeline import Pipeline, Processor
 
@@ -604,9 +605,6 @@ def _claims_grower(lbl_df: DataFrame, label: int) -> DataFrame:
     )
 
 
-_LBL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _fold(cur: DataFrame, claims: DataFrame) -> DataFrame:
     """First-writer-wins claim fold (NOT materialized — the runner
     decides between localCheckpoint and a parquet stage table)."""
@@ -740,39 +738,22 @@ def full_pipeline_processors() -> list[StageProcessor]:
     return [StageProcessor(n, labs, s) for n, labs, s in pipeline_stages()]
 
 
+@per_session
 def full_pipeline_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(page_id, label) after the 15-stage first-writer-wins fold.
 
-    Memoized per (application, sf_dir): ``Pipeline.run`` localCheckpoints
-    every stage boundary, so the finished chain is a valid in-session
-    artifact — `pipeline_full_hist` (and any later caller) reuses it
-    instead of recomputing all 15 stages. This is the local analog of
-    the reference pipeline writing each stage's labels back to the tile
-    file (pipeline.py:88-95) and of Iceberg stage tables at cluster
-    scale (full_pipeline_labels_resumable)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # Evict entries whose SparkContext has stopped: their checkpointed
-    # blocks are gone, so the cached DataFrame is unusable, and a
-    # long-lived process cycling sessions would otherwise grow the dict
-    # without bound (ADVICE r03). The live session's entries stay.
-    def _dead(df: DataFrame) -> bool:
-        try:
-            sc = df.sparkSession.sparkContext
-            return sc._jsc is None or sc._jsc.sc().isStopped()
-        except Exception:
-            return True  # any probe failure ⇒ not safely reusable
-
-    for k in [k for k, v in _LBL_CACHE.items() if _dead(v)]:
-        _LBL_CACHE.pop(k, None)
-    cached = _LBL_CACHE.get(key)
-    if cached is not None:
-        return cached
+    Memoised per session and sf_dir (``session.per_session``):
+    ``Pipeline.run`` localCheckpoints every stage boundary, so the
+    finished chain is a valid in-session artifact — `pipeline_full_hist`
+    (and any later caller) reuses it instead of recomputing all 15
+    stages. This is the local analog of the reference pipeline writing
+    each stage's labels back to the tile file (pipeline.py:88-95) and of
+    Iceberg stage tables at cluster scale
+    (full_pipeline_labels_resumable)."""
     # checkpoint the enrichment once, or stage 0 computes it twice
     # (its fold joins the base against claims over the same base)
     base = _base(spark, sf_dir).withColumn("label", F.lit(0)).localCheckpoint()
-    out = Pipeline(full_pipeline_processors()).run(base).select("page_id", "label")
-    _LBL_CACHE[key] = out
-    return out
+    return Pipeline(full_pipeline_processors()).run(base).select("page_id", "label")
 
 
 def full_pipeline_labels_resumable(

@@ -2666,7 +2666,8 @@ def _cable_merge_cc_sql() -> str:
     """Recursive-CTE oracle for the order-independent merge: exact
     integer moments → closed-form principal directions → angle/gap/
     small-sag gates (fixed double formulas mirroring
-    operators/cable_merge.merge_clusters_pairwise_cc) → CC reach."""
+    operators/cable_merge.merge_cables_cc and its ``_pair_curve_ok``)
+    → CC reach."""
     from .operators.cable_merge import (
         MERGE_MAX_ANGLE_DEG,
         MERGE_MAX_RMSE_MM,
@@ -2849,12 +2850,10 @@ def q_cable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cable-cluster merging (reference _cable_merging,
     cable_fuser.py:333-389): high-linearity cells become clusters;
     pairs with aligned principal directions, close endpoints and a
-    passing hanging-curve residual merge. Registered as the
-    ORDER-INDEPENDENT variant (CC over the pairwise-mergeable graph,
-    operators/cable_merge.merge_clusters_pairwise_cc) with a
-    recursive-CTE oracle; the reference's sequential catenary fixpoint
-    (merge_cables) remains the API path, validated on constructed
-    cables in tests/test_cable_merge.py."""
+    passing hanging-curve residual merge. The merge is ORDER-
+    INDEPENDENT (CC over the pairwise-mergeable graph,
+    operators/cable_merge.merge_cables_cc) with a recursive-CTE
+    oracle; tests/test_cable_merge.py runs it on constructed cables."""
     from .operators.cable_merge import merge_cables_cc
 
     members = FP.cable_members(pages_from_orders(spark, sf_dir))
@@ -3923,9 +3922,9 @@ def q_cluster_mbr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-direction search (operators/geometry.cluster_mbr_exact):
     exact mm-integer dot/cross ranges per candidate direction, one
     fixed double formula for area/length²/width²/center, deterministic
-    (area, pair) argmin. The rotating-calipers variant (cluster_mbr /
-    math_utils.py:65-130 parity, incl. the angle) remains the API path,
-    NumPy-oracle-tested in tests/test_geometry.py."""
+    (area, pair) argmin (reference math_utils.py:65-130, without the
+    libm angle). tests/test_geometry.py checks the kernel against an
+    angle sweep."""
     from .operators.geometry import cluster_mbr_exact
 
     return cluster_mbr_exact(_ground_with_comp(spark, sf_dir))
@@ -3991,14 +3990,12 @@ _RASTER_CTE = R.raster_cte_sql()
 @register("gap_fill", fill_gaps_sql(_RASTER_CTE))
 def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-tile raster gap fill (reference ahn_utils.py:402-456
-    fill_gaps_intuitive): iterative 3×3 neighbor-mean fill of NULL
-    building-surface cells, applyInPandas per tile. NumPy oracle in
-    tests/test_gapfill.py; SQL oracle = one-round neighbor-mean."""
+    fill_gaps_intuitive): one round of the 3×3 neighbor-mean fill of
+    NULL building-surface cells, applyInPandas per tile; SQL oracle =
+    the same one-round neighbor-mean."""
     from .operators.gapfill import fill_building_gaps
 
-    return _fill_r6(
-        fill_building_gaps(R.raster_df(spark), max_rounds=1, exact_centi=True)
-    )
+    return _fill_r6(fill_building_gaps(R.raster_df(spark)))
 
 
 @register("gap_fill_linear", fill_gaps_linear_sql(_RASTER_CTE))
@@ -5040,9 +5037,7 @@ def q_car_fuser_mbr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Sutherland–Hodgman + shoelace — exact convex∩rect areas) and
     clusters with > 20 % road overlap get the CAR label. Engine =
     mbr_road_overlap_exact (sequential double ops mirroring the
-    oracle's ordered list folds); the rotating-calipers variant
-    (mbr_road_overlap) stays NumPy-oracle-tested in
-    tests/test_geometry.py."""
+    oracle's ordered list folds)."""
     from .operators.geometry import mbr_road_overlap_exact
     from .sources.layers import road_strips
 

@@ -59,6 +59,12 @@ def per_session(fn):
     generated rows and the Columns every plan reuses, never a scan, since
     a memoised plan would keep its first file listing.
 
+    The one result memoised here is ``full_pipeline_labels``: the fold
+    local-checkpoints every stage boundary, so its DataFrame is computed
+    blocks of this session, not a plan to re-run, and recomputing it
+    costs all 15 stages. Like any checkpoint it reflects the input files
+    as they were when it ran.
+
     The key holds the session object itself, and SparkSession compares
     by identity, so a new session never hits an entry of a collected one
     whose ``id`` it reuses. The memo is bounded: past ``MEMO_MAX``
